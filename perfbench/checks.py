@@ -5,9 +5,10 @@
   count of the live rows, computed by Spark from the lake tables and
   independently by DuckDB from the raw feed files.
 - ``oracle_diff``: the value-multiset comparison of
-  ``tools/verify_oracles.py`` (floats to 9 significant digits, order
-  insensitive), plus a column-type comparison that reports oracle type
-  differences without counting them as failures.
+  ``tools/verify_oracles.py`` (its own ``rowset``: floats to 9
+  significant digits, order insensitive), plus a column-type comparison
+  that reports oracle type differences without counting them as
+  failures.
 """
 
 from __future__ import annotations
@@ -99,23 +100,6 @@ def duckdb_certificates(
 # ------------------------------------------------------------------ oracles
 
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "nan" if v != v else f"{v:.9g}"
-    return v
-
-
-def _rowset(cols, rows) -> dict:
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out: dict = {}
-    for r in rows:
-        key = tuple(_norm(r[i]) for i in idx)
-        out[key] = out.get(key, 0) + 1
-    return out
-
-
 # Spark simpleString → the DuckDB type name of the same value domain
 _SPARK_TO_DUCK = {
     "bigint": "BIGINT", "int": "INTEGER", "smallint": "SMALLINT",
@@ -127,6 +111,8 @@ _SPARK_TO_DUCK = {
 
 def oracle_diff(con, oracle: str, cols, rows, spark_types) -> tuple[bool, list[str]]:
     """(values match, the columns whose oracle type differs)."""
+    from tools.verify_oracles import rowset
+
     res = con.sql(oracle)
     d_cols, d_rows = res.columns, res.fetchall()
     d_types = dict(zip(d_cols, (str(t) for t in res.types)))
@@ -141,6 +127,6 @@ def oracle_diff(con, oracle: str, cols, rows, spark_types) -> tuple[bool, list[s
     ok = (
         sorted(cols) == sorted(d_cols)
         and len(rows) == len(d_rows)
-        and _rowset(cols, rows) == _rowset(d_cols, d_rows)
+        and rowset(cols, rows) == rowset(d_cols, d_rows)
     )
     return ok, mismatched

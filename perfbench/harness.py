@@ -5,7 +5,8 @@
 - the in-memory span tracer and the subclasses that put spans around
   the public calls into ``CdcPipeline``, ``LakeTable`` and
   ``StateStore`` (nothing inside ``tap_postgres_spark`` is patched);
-- the Spark event-log fold, peak RSS from ``/proc`` and percentiles.
+- the Spark event-log fold, peak RSS from ``/proc``, percentiles and a
+  host-speed probe.
 """
 
 from __future__ import annotations
@@ -104,6 +105,17 @@ def tail(values: list[float]) -> tuple[float, float, int]:
     return s[n - 11], 100.0 * (n - 10) / n, n
 
 
+def host_speed_s() -> float:
+    """Seconds a fixed single-thread Python loop takes.  Logged at the
+    start and end of every run: the host is shared, and a run whose
+    probe is slow ran in a slow phase of the host."""
+    t0 = time.perf_counter()
+    acc = 0
+    for i in range(2_000_000):
+        acc ^= i * 2654435761
+    return time.perf_counter() - t0
+
+
 def dir_bytes(path: str) -> int:
     total = 0
     for d, _dirs, files in os.walk(path):
@@ -128,7 +140,10 @@ class Tracer:
         self.enabled = enabled
         self.spans: list[dict[str, Any]] = []
         self.counts: dict[str, float] = defaultdict(float)
-        self.epoch_walls: dict[str, float] = {}
+        # traced epochs by Spark job group: the apply span of each
+        self.epochs: dict[str, dict[str, Any]] = {}
+        # wall clock minus perf_counter, to place event-log times
+        self.wall0 = time.time() - time.perf_counter()
         self._lock = threading.Lock()
         self._local = threading.local()
 
@@ -155,6 +170,14 @@ class Tracer:
             rec["end"] = time.perf_counter()
             stack.pop()
 
+    def add_span(self, name: str, start: float, end: float, parent: dict) -> None:
+        """A span measured elsewhere (the event log), times in seconds
+        of the wall clock, under ``parent``."""
+        self.spans.append({
+            "name": name, "start": start - self.wall0, "end": end - self.wall0,
+            "parent": parent["id"], "run": self.run_id, "id": len(self.spans),
+        })
+
     def add(self, key: str, value: float = 1.0) -> None:
         if self.enabled:
             with self._lock:
@@ -165,6 +188,11 @@ class Tracer:
 
     def total(self, name: str) -> float:
         return sum(s["end"] - s["start"] for s in self.closed(name))
+
+    def union(self, names: tuple[str, ...], keep=lambda s: True) -> float:
+        """Seconds covered by at least one closed span of ``names``."""
+        return _union([(s["start"], s["end"]) for s in self.spans
+                       if s["name"] in names and s["end"] and keep(s)])
 
     def self_time(self, name: str) -> float:
         """Sum over ``name`` spans of duration minus the union of their
@@ -206,7 +234,10 @@ def engine_classes(tracer: Tracer, clock: list | None = None):
     ``apply_batch``, its (start, end, result) to ``clock``: the lag
     measurement of the tailing workload needs that even untraced.
     Traced, each public call becomes a span, every epoch runs under its
-    own Spark job group, and write-side counts are collected."""
+    own Spark job group, and write-side counts are collected.  The
+    driver-side commit ``_commit_delta`` gets a span too: the fused
+    multi-stream write (``lake.grouped``) commits every table through it
+    and never calls ``merge_into``."""
     from tap_postgres_spark.lake import LakeTable
     from tap_postgres_spark.modes.log_based import CdcPipeline
     from tap_postgres_spark.state import StateStore
@@ -218,11 +249,13 @@ def engine_classes(tracer: Tracer, clock: list | None = None):
             with tracer.span("lake.merge"):
                 return super().merge_into(batch, epoch_id, **kw)
 
+        def _commit_delta(self, *a, **kw):
+            with tracer.span("lake.commit"):
+                return super()._commit_delta(*a, **kw)
+
         def compact(self, *a, **kw):
             with tracer.span("lake.compact"):
-                out = super().compact(*a, **kw)
-            tracer.add("lake.compact_calls", 0 if out.get("skipped") else 1)
-            return out
+                return super().compact(*a, **kw)
 
         def expire_versions(self, *a, **kw):
             with tracer.span("lake.retention"):
@@ -267,7 +300,7 @@ def engine_classes(tracer: Tracer, clock: list | None = None):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            tracer.epoch_walls[group] = rec["end"] - rec["start"]
+            tracer.epochs[group] = rec
             tracer.add("epochs")
             tracer.add("spark_jobs", len(sc.statusTracker().getJobIdsForGroup(group)))
             for fqn, res in out["streams"].items():
@@ -279,6 +312,8 @@ def engine_classes(tracer: Tracer, clock: list | None = None):
                         for d in dl:
                             tracer.add("lake.bytes_written",
                                        dir_bytes(os.path.join(t.path, d)))
+                if not (res.get("compaction") or {"skipped": True}).get("skipped"):
+                    tracer.add("lake.compact_calls")
                 tracer.add("lake.versions", t.current_version() - before[fqn])
                 tracer.counts["lake.delta_depth.max"] = max(
                     tracer.counts["lake.delta_depth.max"], t.delta_depth()
@@ -301,11 +336,13 @@ class StopTailing(RuntimeError):
 # ------------------------------------------------------- Spark event log
 
 
-def fold_event_log(evdir: str, group_prefix: str) -> dict[str, float]:
+def fold_event_log(evdir: str, group_prefix: str) -> dict[str, Any]:
     """Fold a JSON event log the way ``tools/profile_replay.py`` does,
     keeping only jobs whose job group starts with ``group_prefix``:
-    executor task seconds, GC seconds, shuffle bytes written, and the
-    union of job intervals per job group (Spark-busy time per epoch)."""
+    executor task seconds, GC seconds, shuffle bytes written, the union
+    of job intervals per job group (Spark-busy time per epoch) and, per
+    job group, the (start, end) wall seconds of its SQL executions that
+    write files (``InsertIntoHadoopFsRelationCommand``)."""
     files = []
     for name in sorted(os.listdir(evdir)) if os.path.isdir(evdir) else []:
         p = os.path.join(evdir, name)
@@ -318,8 +355,11 @@ def fold_event_log(evdir: str, group_prefix: str) -> dict[str, float]:
     job_group: dict[int, str] = {}
     job_start: dict[int, float] = {}
     busy: dict[str, list[tuple[float, float]]] = defaultdict(list)
-    out = {"task_s": 0.0, "gc_s": 0.0, "shuffle_write_bytes": 0.0}
+    out: dict[str, Any] = {"task_s": 0.0, "gc_s": 0.0, "shuffle_write_bytes": 0.0}
     tasks = []
+    writes: dict[str, float] = {}        # write execution id -> start
+    exec_end: dict[str, float] = {}
+    exec_group: dict[str, str] = {}
     for path in files:
         with open(path) as f:
             for line in f:
@@ -327,10 +367,18 @@ def fold_event_log(evdir: str, group_prefix: str) -> dict[str, float]:
                     ev = json.loads(line)
                 except json.JSONDecodeError:
                     continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    g = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
+                kind = ev.get("Event") or ""
+                if kind.endswith("SparkListenerSQLExecutionStart"):
+                    if "InsertIntoHadoopFsRelationCommand" in ev.get(
+                            "physicalPlanDescription", ""):
+                        writes[str(ev["executionId"])] = ev["time"] / 1000.0
+                elif kind.endswith("SparkListenerSQLExecutionEnd"):
+                    exec_end[str(ev["executionId"])] = ev["time"] / 1000.0
+                elif kind == "SparkListenerJobStart":
+                    props = ev.get("Properties") or {}
+                    g = props.get("spark.jobGroup.id") or ""
                     if g.startswith(group_prefix):
+                        exec_group.setdefault(str(props.get("spark.sql.execution.id")), g)
                         jid = ev["Job ID"]
                         job_group[jid] = g
                         job_start[jid] = ev["Submission Time"] / 1000.0
@@ -353,4 +401,46 @@ def fold_event_log(evdir: str, group_prefix: str) -> dict[str, float]:
             tm.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0)
         )
     out["busy_by_group"] = {g: _union(iv) for g, iv in busy.items()}
+    out["writes_by_group"] = defaultdict(list)
+    for eid, start in writes.items():
+        if eid in exec_group and eid in exec_end:
+            out["writes_by_group"][exec_group[eid]].append((start, exec_end[eid]))
     return out
+
+
+def write_side_s(tracer: Tracer, ev: dict[str, Any]) -> tuple[float, float]:
+    """(merge, compaction) seconds of the traced epochs, from spans.
+
+    Each file-writing SQL execution of an epoch's job group becomes a
+    ``spark.write`` span under the epoch.  An epoch merges (one fused
+    write job, or ``merge_into`` per stream), commits every table
+    (``lake.commit``), then compacts what is due: writes that start
+    before its last commit ends are merge work, later ones compaction.
+    Merge seconds are the union of ``lake.merge``, ``lake.commit`` and
+    the merge writes; compaction seconds that of ``lake.compact`` and
+    the compaction writes."""
+    for group, rec in tracer.epochs.items():
+        for start, end in ev.get("writes_by_group", {}).get(group, []):
+            tracer.add_span("spark.write", start, end, rec)
+    last_commit: dict[int, float] = {}
+    for s in tracer.closed("lake.commit"):
+        top = _epoch_of(tracer, s)
+        if top is not None:
+            last_commit[top] = max(last_commit.get(top, -math.inf), s["end"])
+
+    def merge_write(s) -> bool:
+        return s["name"] != "spark.write" or s["start"] < last_commit.get(s["parent"], -math.inf)
+
+    merge = tracer.union(("lake.merge", "lake.commit", "spark.write"), merge_write)
+    compact = tracer.union(("lake.compact", "spark.write"),
+                           lambda s: s["name"] != "spark.write" or not merge_write(s))
+    return merge, compact
+
+
+def _epoch_of(tracer: Tracer, span: dict[str, Any]) -> int | None:
+    """Id of the ``log_based.apply`` span enclosing ``span``, if any."""
+    while span["parent"] is not None:
+        span = tracer.spans[span["parent"]]
+        if span["name"] == "log_based.apply":
+            return span["id"]
+    return None

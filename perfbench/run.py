@@ -25,7 +25,8 @@ ROOT = os.path.dirname(BENCH_DIR)
 sys.path.insert(0, BENCH_DIR)
 
 from harness import (  # noqa: E402
-    RssSampler, Tracer, engine_classes, fold_event_log, host_settings, p50, tail,
+    RssSampler, Tracer, engine_classes, fold_event_log, host_settings, host_speed_s,
+    p50, tail, write_side_s,
 )
 
 SETUP_REPS = 3
@@ -141,7 +142,9 @@ def _per_layer(ctx, ev: dict) -> dict[str, float]:
     t, c = ctx.tracer, ctx.tracer.counts
     epochs = max(1.0, c["epochs"])
     per = lambda k, d: c[k] / max(1.0, c[d])  # noqa: E731
-    gaps = [w - ev["busy_by_group"].get(g, 0.0) for g, w in t.epoch_walls.items()]
+    gaps = [rec["end"] - rec["start"] - ev["busy_by_group"].get(g, 0.0)
+            for g, rec in t.epochs.items()]
+    merge_s, compact_s = write_side_s(t, ev)
     out = {
         "session.start_s": ctx.session_s,
         "feedgen.gen_s": ctx.gen_s,
@@ -149,12 +152,13 @@ def _per_layer(ctx, ev: dict) -> dict[str, float]:
         "log_based.self_s": t.self_time("log_based.apply") / epochs,
         "log_based.spark_jobs_per_epoch": c["spark_jobs"] / epochs,
         "log_based.driver_gap_s": sum(gaps) / epochs,
-        "lake.merge_s": t.total("lake.merge") / epochs,
+        "lake.merge_s": merge_s / epochs,
+        "lake.commit_s": t.total("lake.commit") / epochs,
         "lake.merge_calls": c["lake.merge_calls"],
         "lake.rows_written": c["lake.rows_written"],
         "lake.bytes_written": c["lake.bytes_written"],
         "lake.write_amp": c["lake.bytes_written"] / max(1.0, c["input_bytes"]),
-        "lake.compact_s": t.total("lake.compact") / epochs,
+        "lake.compact_s": compact_s / epochs,
         "lake.compact_calls": c["lake.compact_calls"],
         "lake.retention_s": t.total("lake.retention") / epochs,
         "lake.delta_depth.max": c["lake.delta_depth.max"],
@@ -206,6 +210,7 @@ def main(argv=None) -> int:
     os.environ.update(env)
     sys.path.insert(0, ROOT)
     ctx = Ctx(args, work)
+    speed = [host_speed_s()]
     rss = RssSampler()
     try:
         _start_spark(ctx)
@@ -222,6 +227,7 @@ def main(argv=None) -> int:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
+    speed.append(host_speed_s())
     op_tail, op_pct, op_n = tail(ctx.op_samples)
     read_tail, read_pct, read_n = tail(ctx.read_samples)
     e2e = {
@@ -235,7 +241,8 @@ def main(argv=None) -> int:
     }
     ctx.log(f"host: {env['SPARK_GRAFT_CPUS']} cores, driver heap "
             f"{env['SPARK_DRIVER_MEMORY']}; op_s.tail = p{op_pct:.1f} of {op_n}, "
-            f"read_s.tail = p{read_pct:.1f} of {read_n} samples; "
+            f"read_s.tail = p{read_pct:.1f} of {read_n} samples; host-speed probe "
+            f"{speed[0]:.3f} s at start, {speed[1]:.3f} s at end; "
             f"wall {time.perf_counter() - T_START:.1f} s")
     if args.trace:
         values, names = _per_layer(ctx, ev), spec["per_layer"]

@@ -26,7 +26,7 @@ BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
 sys.path.insert(0, BENCH_DIR)
 
-from harness import Tracer, tail  # noqa: E402
+from harness import Tracer, tail, write_side_s  # noqa: E402
 
 
 def check_arithmetic() -> None:
@@ -41,6 +41,18 @@ def check_arithmetic() -> None:
     ]
     assert t.total("b") == 6.0
     assert t.self_time("a") == 5.0  # children cover 1..6 once
+    # an epoch: a fused write job (1..4) and a compaction write (6..8)
+    # from the event log around a commit span (4..5)
+    t = Tracer("selftest")
+    apply = {"id": 0, "name": "log_based.apply", "start": 0.0, "end": 10.0, "parent": None}
+    t.spans = [apply,
+               {"id": 1, "name": "lake.commit", "start": 4.0, "end": 5.0, "parent": 0}]
+    t.epochs = {"g": apply}
+    ev = {"writes_by_group": {"g": [(t.wall0 + 1.0, t.wall0 + 4.0),
+                                    (t.wall0 + 6.0, t.wall0 + 8.0)]}}
+    merge, compact = write_side_s(t, ev)
+    assert (round(merge, 6), round(compact, 6)) == (4.0, 2.0), (merge, compact)
+    assert round(t.self_time("log_based.apply"), 6) == 4.0
     print("ok   arithmetic")
 
 

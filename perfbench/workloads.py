@@ -166,7 +166,7 @@ TAIL_KEEP_VERSIONS = 4    # expire_versions in the traced maintenance pass
 POINT_READS = 3           # per read set; they share TAIL_KEYS_PER_READ hot keys
 TAIL_KEYS_PER_READ = 8
 READ_SHARE = 0.5          # read-phase budget, as a share of --seconds
-WARM_FILES = 5
+WARM_FILES = 3
 
 
 def tail_8stream(ctx) -> None:
@@ -199,8 +199,9 @@ def tail_8stream(ctx) -> None:
     def warm():
         """Tail WARM_FILES files, one per batch, into scratch tables, then
         run one of each read.  Batch walls keep falling for ~5 batches
-        after the first (JIT); fewer warm batches leave that slope in
-        the measured window."""
+        after the first (JIT), so the first batches of the window are
+        still on that slope; more warm batches cost ~4 s of set-up
+        each."""
         wfeed = os.path.join(w, "warm-feed")
         _gen(ctx, wfeed, n_events=WARM_FILES * TAIL_FILE_EVENTS, n_keys=TAIL_KEYS,
              n_files=WARM_FILES, seed=ctx.seed + 7, tables=TAIL_TABLES)
@@ -218,7 +219,11 @@ def tail_8stream(ctx) -> None:
     os.makedirs(feed)
     tables = _create_tables(ctx, os.path.join(w, "lake"), TAIL_TABLES, TAIL_BUCKETS)
     clock = ctx.clock
-    pipe = pipeline(tables, "tail")
+    # auto-compaction off: at its default depth (12) it first fires on
+    # the 13th batch, which the window reaches or not depending on the
+    # engine's speed, and its ~6 s stall would then decide the lag tail.
+    # The traced run times compaction in its maintenance pass instead.
+    pipe = pipeline(tables, "tail", auto_compact_depth=0)
     runner = StreamingCdcRunner(pipe, feed, os.path.join(w, "ckpt"),
                                 name="tail", max_files_per_trigger=TAIL_MAX_FILES)
     due, late, window, mid_versions = [], [], {}, {}
@@ -284,23 +289,28 @@ def tail_8stream(ctx) -> None:
             for _s, _e, out in clock]
     ctx.op_samples.extend(lags)
     ctx.ops_per_s = sum(rows) / (clock[-1][1] - window["start"])
-    epoch_s = [e - s for s, e, _o in clock]
+    # the first batch that applies a file of the traced half
+    cut = next((k for k, c in enumerate(clock)
+                if (c[2].get("max_lsn_seen") or 0) > max_lsn[half - 1]), len(clock))
+    # a traced run reports the loop's figures from its untraced half
+    nb, nf = (cut, half) if ctx.trace and cut else (len(clock), len(due))
+    part = clock[:nb]
+    half_lags = [clock[b][1] - at for b, at in zip(batch_of[:nf], due) if b is not None]
+    epoch_s = [e - s for s, e, _o in part]
     ctx.detail.update({
         "backlog_end": len(due) - applied_by_end,
         "loadgen.late_s.max": max(late),
-        "events_per_s": ctx.ops_per_s,
-        "lag_s.p50": p50(lags),
-        "lag_s.tail": tail(lags)[0],
+        "events_per_s": sum(rows[:nb]) / (part[-1][1] - window["start"]),
+        "lag_s.p50": p50(half_lags),
+        "lag_s.tail": tail(half_lags)[0],
         "epoch_s.p50": p50(epoch_s),
         "epoch_s.tail": tail(epoch_s)[0],
-        "runner.batches": len(clock),
-        "runner.files_per_batch": len(lags) / len(clock),
-        "runner.trigger_gap_s": p50([b[0] - a[1] for a, b in zip(clock, clock[1:])]),
+        "runner.batches": nb,
+        "runner.files_per_batch": len(half_lags) / nb,
+        "runner.trigger_gap_s": p50([b[0] - a[1] for a, b in zip(part, part[1:])]),
     })
     overheads = []
     if ctx.trace:
-        cut = next((k for k, c in enumerate(clock)
-                    if (c[2].get("max_lsn_seen") or 0) > max_lsn[half - 1]), len(clock))
         # input of the traced batches, for lake.write_amp
         ctx.tracer.counts["input_bytes"] = sum(
             size for size, b in zip(sizes, batch_of) if b is not None and b >= cut)
@@ -352,8 +362,8 @@ def tail_8stream(ctx) -> None:
 
         ctx.tracer.enabled = True
         with ctx.tracer.span("lake.compact"):
-            compact_grouped(ctx.spark, tables)  # the multi-stream tiered pass
-        ctx.tracer.add("lake.compact_calls")
+            done = compact_grouped(ctx.spark, tables)  # the multi-stream tiered pass
+        ctx.tracer.add("lake.compact_calls", sum(not r.get("skipped") for r in done.values()))
         for t in tables.values():
             t.expire_versions(keep_last=TAIL_KEEP_VERSIONS)
             t.vacuum(min_age_seconds=0)
@@ -505,28 +515,29 @@ def _check_point_reads(ctx, table, got) -> None:
 
 # ------------------------------------------------------------- query_sweep
 
-# a fixed subset of __spark_entry__.queries(), one or more per operator
-# module; the four HUGEINT-oracle queries are all in it
+# a fixed subset of __spark_entry__.queries(): at least one query calls
+# into each of pipelineops (sessionize, token_entropy, mixture_weights,
+# window_rollup), textops (minhash_signature), vectorops (cosine_topk),
+# curation (curate_corpus) and multimodal (multimodal_wav_decode); the
+# four HUGEINT-oracle queries are all in it
 QUERIES = (
     "sessionize", "token_entropy", "mixture_weights", "window_rollup",
-    "minhash_signature", "simhash", "cosine_topk", "ann_quantized",
-    "multimodal_stats", "label_centroids", "q1_pricing", "lww_latest",
+    "minhash_signature", "cosine_topk", "curate_corpus", "multimodal_wav_decode",
 )
 WARMUP_QUERIES = ("full_table_scan", "event_cube", "dedup_exact")
-ORACLE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings")
 
 
 def query_sweep(ctx) -> None:
     """First run of each query in ``QUERIES`` (noop sink) in a session
-    prewarmed during set-up, then the oracle gate on a second run
-    (``collect``), then a third, warm run (noop sink) that times what a
-    repeat reader pays.  The data is the fixed seed-42 testdata at
-    sf0.01 committed under ``perfbench/data``; ``--seed`` does not
-    apply."""
+    prewarmed during set-up, then a second, warm run that collects the
+    rows, timed as what a repeat reader pays; the oracle gate checks the
+    collected rows after the timer stops.  The data is the fixed
+    seed-42 testdata at sf0.01 committed under ``perfbench/data``;
+    ``--seed`` does not apply."""
     import duckdb
 
     import __spark_entry__ as entry
+    from tools.verify_oracles import TABLES
 
     data = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.01")
     fns, oracles = entry.queries(), entry.oracle_sql()
@@ -562,14 +573,25 @@ def query_sweep(ctx) -> None:
     ctx.op_samples.extend(first.values())
     ctx.ops_per_s = len(first) / sum(first.values())
 
+    def collect(name: str):
+        """One warm run that collects the rows: (seconds, frame, rows)."""
+        with ctx.tracer.span("queries.collect"):
+            t0 = time.perf_counter()
+            df = fns[name](ctx.spark, data)
+            rows = [tuple(r) for r in df.collect()]
+            return time.perf_counter() - t0, df, rows
+
+    warm = {name: collect(name) for name in QUERIES}
+    ctx.read_samples.extend(s for s, _df, _rows in warm.values())
+    ctx.log("first, warm s: " + ", ".join(
+        f"{n} {first[n]:.2f} {warm[n][0]:.2f}" for n in QUERIES))
+
     con = duckdb.connect()
-    for t in ORACLE_TABLES:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{os.path.join(data, t + '.parquet')}')")
     type_diffs = 0
-    for name in QUERIES:
-        df = fns[name](ctx.spark, data)
-        rows = [tuple(r) for r in df.collect()]
+    for name, (_s, df, rows) in warm.items():
         ok, diffs = oracle_diff(con, oracles[name], df.columns, rows,
                                 [f.dataType.simpleString() for f in df.schema.fields])
         _check(ctx, ok, f"oracle {name}")
@@ -578,7 +600,6 @@ def query_sweep(ctx) -> None:
             ctx.log(f"oracle type difference: {name}: {'; '.join(diffs)}")
     con.close()
 
-    ctx.read_samples.extend(run(name, False) for name in QUERIES)
     ctx.detail.update({
         "query_sweep_s": sum(first.values()),
         "queries.first_s": sum(first.values()),
@@ -587,15 +608,17 @@ def query_sweep(ctx) -> None:
         **{f"query.{n}.first_s": s for n, s in first.items()},
     })
     if ctx.trace:
-        # the first-run split, read before the traced warm pass refills it
         ctx.detail["queries.plan_s"] = sum(plan.values())
         ctx.detail["queries.exec_s"] = sum(execs.values())
         # a first run cannot be repeated in one process: the overhead
-        # ratio compares a traced warm pass with the untraced one above
-        ctx.tracer.enabled = True
-        traced_warm = sum(run(name, True) for name in QUERIES)
+        # ratio compares two more warm passes, untraced then traced (the
+        # timed warm pass above is colder than both)
+        passes = []
+        for traced in (False, True):
+            ctx.tracer.enabled = traced
+            passes.append(sum(collect(name)[0] for name in QUERIES))
         ctx.tracer.enabled = False
-        ctx.detail["trace.overhead_ratio"] = traced_warm / sum(ctx.read_samples)
+        ctx.detail["trace.overhead_ratio"] = passes[1] / passes[0]
 
 
 def _planning_s(qe) -> float:
