@@ -4,6 +4,9 @@
   certificate of ``bench.py``, per table — a modular hash-sum plus row
   count of the live rows, computed by Spark from the lake tables and
   independently by DuckDB from the raw feed files.
+- ``duckdb_point_states``: the live rows of given keys after the LWW
+  fold of the feed's events up to given LSNs, the oracle of point
+  reads.
 - ``oracle_diff``: the value-multiset comparison of
   ``tools/verify_oracles.py`` (its own ``rowset``: floats to 9
   significant digits, order insensitive), plus a column-type comparison
@@ -14,6 +17,20 @@
 from __future__ import annotations
 
 _MOD = 1_000_003
+
+# one row per feed event of ``{src}``: the fields the certificates use
+_EVENTS_SQL = """
+  SELECT lsn,
+         json_extract_string(payload, '$.action') AS action,
+         json_extract_string(payload, '$.table') AS tbl,
+         coalesce(json_extract_string(payload, '$.columns[0].value'),
+                  json_extract_string(payload, '$.identity[0].value')) AS repo,
+         coalesce(json_extract_string(payload, '$.columns[1].value'),
+                  json_extract_string(payload, '$.identity[1].value')) AS path,
+         json_extract_string(payload, '$.columns[2].value') AS commit,
+         json_extract_string(payload, '$.columns[4].value') AS content
+  FROM {src}
+"""
 
 
 def spark_certificates(df) -> dict[str, tuple[int, int, int]]:
@@ -67,18 +84,7 @@ def duckdb_certificates(
     rows = con.sql(
         f"""
         WITH raw AS ({' UNION ALL '.join(parts)}),
-        ev AS (
-          SELECT lsn,
-                 json_extract_string(payload, '$.action') AS action,
-                 json_extract_string(payload, '$.table') AS tbl,
-                 coalesce(json_extract_string(payload, '$.columns[0].value'),
-                          json_extract_string(payload, '$.identity[0].value')) AS repo,
-                 coalesce(json_extract_string(payload, '$.columns[1].value'),
-                          json_extract_string(payload, '$.identity[1].value')) AS path,
-                 json_extract_string(payload, '$.columns[2].value') AS commit,
-                 json_extract_string(payload, '$.columns[4].value') AS content
-          FROM raw
-        ),
+        ev AS ({_EVENTS_SQL.format(src="raw")}),
         latest AS (
           SELECT *, row_number() OVER (
             PARTITION BY tbl, repo, path ORDER BY lsn DESC) AS rn
@@ -95,6 +101,36 @@ def duckdb_certificates(
     ).fetchall()
     con.close()
     return {t: (int(s), int(n)) for t, s, n in rows}
+
+
+def duckdb_point_states(files: list[str], probes) -> dict:
+    """Live rows ``(repo, path, commit, content)`` per probe id, from the
+    feed ``files``.  Each probe is ``(id, upto, table, repo, path)``: the
+    key's row after the LWW fold of that table's events at or below LSN
+    ``upto``, if it is live.  Every id of ``probes`` is in the result."""
+    import duckdb
+    import pyarrow as pa
+
+    cols = ("id", "upto", "tbl", "repo", "path")
+    con = duckdb.connect()
+    con.register("probe", pa.table(dict(zip(cols, zip(*probes)))))
+    rows = con.sql(f"""
+        WITH ev AS ({_EVENTS_SQL.format(src=f"read_parquet({list(files)!r})")}),
+        latest AS (
+          SELECT p.id, e.*, row_number() OVER (
+            PARTITION BY p.id, p.repo, p.path ORDER BY e.lsn DESC) AS rn
+          FROM probe p JOIN ev e
+            ON e.tbl = p.tbl AND e.repo = p.repo AND e.path = p.path AND e.lsn <= p.upto
+          WHERE e.action IN ('I', 'U', 'D')
+        )
+        SELECT id, repo, path, commit, content
+        FROM latest WHERE rn = 1 AND action <> 'D'
+    """).fetchall()
+    con.close()
+    out: dict = {p[0]: [] for p in probes}
+    for pid, *row in rows:
+        out[pid].append(tuple(row))
+    return out
 
 
 # ------------------------------------------------------------------ oracles

@@ -1,6 +1,6 @@
 """The repo benchmark: one workload per invocation, one JSON line out.
 
-    python3 perfbench/run.py --workload tail_8stream --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload tail_8stream --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  The last line of standard output is
 ``{"correct", "attempted", "failed", "metrics"}``; with ``--trace 0`` the

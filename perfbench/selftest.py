@@ -3,9 +3,11 @@
     python3 perfbench/selftest.py [--quick]
 
 1. Pure-Python checks of the percentile and self-time arithmetic.
-2. A corrupted final state is counted as a failure: a tiny feed is
-   replayed into a lake table, the certificate gate passes, then one
-   data file of the table is deleted and the same gate must fail.
+2. A corrupted result is counted as a failure: a tiny feed is
+   replayed into a lake table; a point read of some of its keys passes
+   the point-read gate, and the same rows with one value changed fail
+   it; the certificate gate passes, then one data file of the table is
+   deleted and the same gate must fail.
 3. Unless ``--quick``: ``run.py`` is run for one second per workload,
    untraced and traced, and every metric named in ``BENCHMARK.json`` must
    be printed with its unit (end-to-end values must be non-zero).
@@ -21,6 +23,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
@@ -68,18 +71,21 @@ def check_corruption_counted() -> None:
     from harness import engine_classes
     from tap_postgres_spark.feedgen import generate_bulk_feed
     from tap_postgres_spark.session import get_spark
-    from workloads import _certify, _create_tables, _files, _pipeline, _read
+    from workloads import (
+        _certify, _check_point_reads, _create_tables, _files, _pipeline, _read,
+    )
 
     class Ctx:
         attempted = failed = 0
         tracer = Tracer("selftest", enabled=False)
+        clock: list = []
 
         @staticmethod
         def log(msg):
             print(f"     {msg}")
 
     ctx = Ctx()
-    ctx.Pipeline, ctx.Table, ctx.State = engine_classes(ctx.tracer)
+    ctx.Pipeline, ctx.Table, ctx.State = engine_classes(ctx.tracer, ctx.clock)
     ctx.spark = get_spark("perfbench-selftest")
     try:
         feed = os.path.join(work, "feed")
@@ -87,10 +93,22 @@ def check_corruption_counted() -> None:
         tables = _create_tables(ctx, os.path.join(work, "lake"), ["source_code_repos"], 4)
         pipe = _pipeline(ctx, ctx.Pipeline, tables, os.path.join(work, "state.json"))
         pipe.apply_batch(_read(ctx, _files(feed)), epoch_id="selftest")
+        table = tables["public.source_code_repos"]
+        keys = [(r["repo"], r["path"]) for r in table.read().limit(3).collect()]
+        t0 = time.perf_counter()
+        rows = table.read_keys(ctx.spark.createDataFrame(keys, "repo string, path string")
+                               ).collect()
+        t1 = time.perf_counter()
+        bad = [dict(r.asDict(), content="corrupted") if i == 0 else r.asDict()
+               for i, r in enumerate(rows)]
+        for got, fails in ((rows, 0), (bad, 1)):
+            _check_point_reads(ctx, _files(feed), [(
+                "public.source_code_repos", [("point", t1 - t0, (t0, t1, keys, got))])])
+            assert ctx.failed == fails, f"point read gate: {ctx.failed} failed, want {fails}"
+        ctx.attempted = ctx.failed = 0
         expected = duckdb_certificates(_files(feed))
         _certify(ctx, tables, expected, "intact")
         assert (ctx.attempted, ctx.failed) == (1, 0), "intact table must pass"
-        table = tables["public.source_code_repos"]
         data = [os.path.join(d, f)
                 for d, _s, fs in os.walk(os.path.join(table.path, "data"))
                 for f in fs if f.endswith(".parquet")]
@@ -100,7 +118,7 @@ def check_corruption_counted() -> None:
     finally:
         ctx.spark.stop()
         shutil.rmtree(work, ignore_errors=True)
-    print("ok   corrupted final state counted as failed")
+    print("ok   corrupted point read and final state counted as failed")
 
 
 def check_metrics_printed() -> None:

@@ -22,7 +22,9 @@ from typing import Any
 import numpy as np
 
 from harness import Tracer, dir_bytes, engine_classes, p50, tail
-from checks import duckdb_certificates, oracle_diff, spark_certificates
+from checks import (
+    duckdb_certificates, duckdb_point_states, oracle_diff, spark_certificates,
+)
 
 COLS = ("repo", "path", "commit", "lang", "content")
 FEED_SCHEMA = "lsn long, txid long, payload string"
@@ -165,20 +167,23 @@ TAIL_GRACE_S = 5.0        # after the window, wait this long to catch up
 TAIL_KEEP_VERSIONS = 4    # expire_versions in the traced maintenance pass
 POINT_READS = 3           # per read set; they share TAIL_KEYS_PER_READ hot keys
 TAIL_KEYS_PER_READ = 8
-READ_SHARE = 0.5          # read-phase budget, as a share of --seconds
+MIN_READS = 21            # the reader goes on past the window until it has these
 WARM_FILES = 3
 
 
 def tail_8stream(ctx) -> None:
-    """Open loop, then reads.  A load-generator thread releases staged
-    feed files of 8 interleaved tables into the tailed directory at a
-    fixed rate by atomic rename, and ``StreamingCdcRunner.run_tailing``
-    applies them; lag is timed from each file's scheduled release.
-    Then a closed loop of read sets runs over the tailed tables:
-    zipf-hot point reads (``read_keys``), the changelog an incremental
-    consumer reads since mid-window (``read_changes``) and a narrow
-    aggregate scan (``read(columns=...)``).  A traced run adds the
-    decode/fold probe and the transaction-boundary probe."""
+    """Open-loop writes with a closed-loop reader beside them.  A
+    load-generator thread releases staged feed files of 8 interleaved
+    tables into the tailed directory at a fixed rate by atomic rename,
+    and ``StreamingCdcRunner.run_tailing`` applies them; lag is timed
+    from each file's scheduled release.  For the same ``--seconds`` one
+    reader thread runs read sets back to back, round-robin over the
+    tables being written: zipf-hot point reads (``read_keys``), the
+    changelog an incremental consumer reads since its last visit to the
+    table (``read_changes``) and a narrow aggregate scan
+    (``read(columns=...)``).  A traced run traces the second half of the
+    window and adds the decode/fold probe and the transaction-boundary
+    probe."""
     import pyarrow.parquet as pq
     from pyspark.errors import StreamingQueryException
 
@@ -197,19 +202,37 @@ def tail_8stream(ctx) -> None:
              n_files=n_files, seed=ctx.seed, tables=TAIL_TABLES)
 
     def warm():
-        """Tail WARM_FILES files, one per batch, into scratch tables, then
-        run one of each read.  Batch walls keep falling for ~5 batches
-        after the first (JIT), so the first batches of the window are
-        still on that slope; more warm batches cost ~4 s of set-up
-        each."""
+        """Tail WARM_FILES files, one per batch, into scratch tables, with
+        read sets on them beside the batches from the first commit on,
+        as in the measured window."""
         wfeed = os.path.join(w, "warm-feed")
         _gen(ctx, wfeed, n_events=WARM_FILES * TAIL_FILE_EVENTS, n_keys=TAIL_KEYS,
              n_files=WARM_FILES, seed=ctx.seed + 7, tables=TAIL_TABLES)
         tables = _create_tables(ctx, os.path.join(w, "warm-lake"), TAIL_TABLES, TAIL_BUCKETS)
-        StreamingCdcRunner(pipeline(tables, "warm"), wfeed, os.path.join(w, "warm-ckpt"),
-                           name="warm", max_files_per_trigger=1).run_available_now()
-        t = tables[ctx.fqns[0]]
-        _read_set(ctx, t, 1, _hot_keys(np.random.default_rng(ctx.seed), 0), points=1)
+        done, errors = threading.Event(), []
+
+        def reads():
+            try:
+                rng, k = np.random.default_rng(ctx.seed), 0
+                while not ctx.clock and not done.is_set():
+                    time.sleep(0.01)
+                while not done.is_set():
+                    i = k % len(ctx.fqns)
+                    _read_set(ctx, tables[ctx.fqns[i]], 1, _hot_keys(rng, i), until=done.is_set)
+                    k += 1
+            except BaseException as e:  # re-raised below
+                errors.append(e)
+
+        th = threading.Thread(target=reads, name="perfbench-warm-reader")
+        th.start()
+        try:
+            StreamingCdcRunner(pipeline(tables, "warm"), wfeed, os.path.join(w, "warm-ckpt"),
+                               name="warm", max_files_per_trigger=1).run_available_now()
+        finally:
+            done.set()
+            th.join()
+        if errors:
+            raise errors[0]
 
     ctx.setup(build, warm)
     files = _files(staged)
@@ -226,43 +249,82 @@ def tail_8stream(ctx) -> None:
     pipe = pipeline(tables, "tail", auto_compact_depth=0)
     runner = StreamingCdcRunner(pipe, feed, os.path.join(w, "ckpt"),
                                 name="tail", max_files_per_trigger=TAIL_MAX_FILES)
-    due, late, window, mid_versions = [], [], {}, {}
+    due, late, window, read_sets, errors = [], [], {}, [], []
     half = n_files // 2
+    started, released, stopped = threading.Event(), threading.Event(), threading.Event()
 
     def caught_up() -> bool:
         return bool(clock) and (clock[-1][2].get("max_lsn_seen") or 0) >= max_lsn[-1]
 
     def loadgen():
-        # release nothing before the query polls the feed dir
-        while not any(q.status["message"].startswith("Waiting")
-                      for q in ctx.spark.streams.active):
-            time.sleep(0.01)
-        t_start = window["start"] = time.perf_counter()
-        window_end = window["end"] = t_start + n_files / TAIL_RATE
-        for i, f in enumerate(files):
-            if i == half:
-                # the incremental consumer last read here; a traced run
-                # traces the second half of the window
-                mid_versions.update({fqn: t.current_version() for fqn, t in tables.items()})
-                ctx.tracer.enabled = ctx.trace
-            at = t_start + i / TAIL_RATE
-            while (now := time.perf_counter()) < at:
-                time.sleep(min(0.005, at - now))
-            os.rename(f, os.path.join(feed, os.path.basename(f)))
-            due.append(at)
-            late.append(time.perf_counter() - at)
-        while time.perf_counter() < window_end + TAIL_GRACE_S and not caught_up():
-            time.sleep(0.02)
-        # end the query between batches: a batch that starts after the
-        # request raises StopTailing and stays uncommitted
-        pipe.stop_requested = True
-        while pipe.in_batch:
-            time.sleep(0.01)
-        for q in ctx.spark.streams.active:
-            q.stop()
+        try:
+            # release nothing before the query polls the feed dir
+            while not any(q.status["message"].startswith("Waiting")
+                          for q in ctx.spark.streams.active):
+                if stopped.is_set():  # the query ended before it polled
+                    return
+                time.sleep(0.01)
+            t_start = window["start"] = time.perf_counter()
+            window["end"] = t_start + n_files / TAIL_RATE
+            started.set()
+            for i, f in enumerate(files):
+                if stopped.is_set():
+                    break
+                if i == half:  # a traced run traces the second half
+                    ctx.tracer.enabled = ctx.trace
+                at = t_start + i / TAIL_RATE
+                while (now := time.perf_counter()) < at:
+                    time.sleep(min(0.005, at - now))
+                os.rename(f, os.path.join(feed, os.path.basename(f)))
+                due.append(at)
+                late.append(time.perf_counter() - at)
+            released.set()
+            while time.perf_counter() < window["end"] + TAIL_GRACE_S and not caught_up():
+                time.sleep(0.02)
+        except BaseException as e:  # re-raised by the main thread
+            errors.append(e)
+        finally:
+            started.set()
+            released.set()
+            # end the query between batches: a batch that starts after
+            # the request raises StopTailing and stays uncommitted
+            pipe.stop_requested = True
+            while pipe.in_batch:
+                time.sleep(0.01)
+            for q in ctx.spark.streams.active:
+                q.stop()
+
+    def reader():
+        """Read sets until the last file is released and at least
+        ``MIN_READS`` reads are done, so that ``read_s.tail`` lies above
+        the median; each read set records whether it started in the
+        traced half.  Once both hold, the set in progress stops after
+        its current read."""
+        try:
+            rng = np.random.default_rng(ctx.seed)
+            started.wait()
+            last = {fqn: t.current_version() for fqn, t in tables.items()}
+            k = n = 0
+
+            def done() -> bool:
+                return released.is_set() and n >= MIN_READS
+
+            while not done():
+                fqn = ctx.fqns[k % len(ctx.fqns)]
+                traced = ctx.tracer.enabled
+                since, last[fqn] = last[fqn], tables[fqn].current_version()
+                got = _read_set(ctx, tables[fqn], since, _hot_keys(rng, k % len(ctx.fqns)),
+                                until=done)
+                read_sets.append((traced, fqn, got))
+                k += 1
+                n += len(got)
+        except BaseException as e:
+            errors.append(e)
 
     gen = threading.Thread(target=loadgen, name="perfbench-loadgen")
+    rd = threading.Thread(target=reader, name="perfbench-reader")
     gen.start()
+    rd.start()
     try:
         runner.run_tailing(processing_time=TAIL_TRIGGER,
                            max_run_seconds=ctx.seconds + TAIL_GRACE_S + 60)
@@ -270,8 +332,12 @@ def tail_8stream(ctx) -> None:
         if not pipe.stop_requested:  # anything but the StopTailing refusal
             raise
     finally:
+        stopped.set()
         gen.join()
+        rd.join()
         pipe.stop_requested = False
+    if errors:
+        raise errors[0]
     ctx.tracer.enabled = False
     ctx.log(f"tailed; batch walls {[round(e - s, 2) for s, e, _o in clock]}")
 
@@ -297,6 +363,13 @@ def tail_8stream(ctx) -> None:
     part = clock[:nb]
     half_lags = [clock[b][1] - at for b, at in zip(batch_of[:nf], due) if b is not None]
     epoch_s = [e - s for s, e, _o in part]
+    reads = {"point": [], "changelog": [], "scan": []}
+    for traced, _fqn, got in read_sets:
+        for kind, s, _res in got:
+            if not traced:
+                reads[kind].append(s)
+            if not ctx.trace:
+                ctx.read_samples.append(s)
     ctx.detail.update({
         "backlog_end": len(due) - applied_by_end,
         "loadgen.late_s.max": max(late),
@@ -308,7 +381,16 @@ def tail_8stream(ctx) -> None:
         "runner.batches": nb,
         "runner.files_per_batch": len(half_lags) / nb,
         "runner.trigger_gap_s": p50([b[0] - a[1] for a, b in zip(part, part[1:])]),
+        "point_read_s.p50": p50(reads["point"]),
+        "point_read_s.tail": tail(reads["point"])[0],
+        "changelog_read_s.p50": p50(reads["changelog"]),
+        "scan_s.p50": p50(reads["scan"]),
     })
+    ctx.log(f"read; {len(read_sets)} read sets: " + ", ".join(
+        f"{kind} {[round(x, 2) for x in v]}" for kind, v in reads.items()))
+    _check_point_reads(ctx, _files(feed), [(fqn, got) for _t, fqn, got in read_sets])
+    ctx.log("point reads checked")
+
     overheads = []
     if ctx.trace:
         # input of the traced batches, for lake.write_amp
@@ -318,45 +400,16 @@ def tail_8stream(ctx) -> None:
             per_row = [sum(e - s for s, e, _o in part) / max(1, sum(r))
                        for part, r in ((clock[:cut], rows[:cut]), (clock[cut:], rows[cut:]))]
             overheads.append(per_row[1] / per_row[0])
-
-    # closed loop of read sets, round-robin over the tables
-    rng = np.random.default_rng(ctx.seed)
-    reads = {"point": [], "changelog": [], "scan": []}
-    per_unit = {}
-    k = 0
-    # a traced run reads untraced for the first half, traced for the second
-    budget = ctx.seconds * READ_SHARE
-    passes = [(False, budget / 2), (True, budget / 2)] if ctx.trace else [(False, budget)]
-    for traced, budget in passes:
-        ctx.tracer.enabled = traced
-        spent, n = 0.0, 0
-        while spent < budget:
-            fqn = ctx.fqns[k % len(ctx.fqns)]
-            got = _read_set(ctx, tables[fqn], mid_versions[fqn], _hot_keys(rng, k % len(ctx.fqns)))
-            k += 1
-            spent += sum(s for _k, s, _r in got)
-            n += len(got)
-            if traced:
-                continue
-            for kind, s, _r in got:
-                reads[kind].append(s)
-                ctx.read_samples.append(s)
-            _check_point_reads(ctx, tables[fqn], got)
-        per_unit[traced] = spent / n
-    ctx.tracer.enabled = False
-    ctx.detail.update({
-        "point_read_s.p50": p50(reads["point"]),
-        "point_read_s.tail": tail(reads["point"])[0],
-        "changelog_read_s.p50": p50(reads["changelog"]),
-        "scan_s.p50": p50(reads["scan"]),
-    })
-    ctx.log(f"read; {k} read sets: " + ", ".join(
-        f"{kind} {[round(x, 2) for x in v]}" for kind, v in reads.items()))
+        per_read = [[s for t, _f, got in read_sets if t == traced for _k, s, _r in got]
+                    for traced in (False, True)]
+        if all(per_read):
+            overheads.append(p50(per_read[1]) / p50(per_read[0]))
 
     # correctness: drain anything left, then certify every table (a
     # traced run first runs the maintenance ops on every table: a run
     # is too short for the pipeline's auto-compaction depth to trip)
-    runner.run_available_now()
+    if None in batch_of:
+        runner.run_available_now()
     if ctx.trace:
         from tap_postgres_spark.lake.grouped import compact_grouped
 
@@ -369,8 +422,8 @@ def tail_8stream(ctx) -> None:
             t.vacuum(min_age_seconds=0)
         ctx.tracer.enabled = False
     stored = _certify(ctx, tables, duckdb_certificates(_files(feed)), "tail")
+    ctx.log("tables certified")
     if ctx.trace:
-        overheads.append(per_unit[True] / per_unit[False])
         ctx.detail["trace.overhead_ratio"] = p50(overheads)
         ctx.detail["stored_bytes_per_live_byte"] = stored
         _probe_decode_fold(ctx, _files(feed), tables[ctx.fqns[0]])
@@ -427,25 +480,30 @@ def _hot_keys(rng, table_index: int) -> list[tuple[str, str]]:
             for k in mine[:TAIL_KEYS_PER_READ]]
 
 
-def _read_set(ctx, table, prev_version: int, keys, points: int = POINT_READS):
+def _read_set(ctx, table, prev_version: int, keys, points: int = POINT_READS,
+              until=lambda: False):
     """One read set; returns (kind, seconds, result) triples.  Point
-    reads carry (version, keys, rows) for the check; the point reads of
-    a set split ``keys`` between them."""
+    reads carry (start, end, keys, rows) for the check; the point reads
+    of a set split ``keys`` between them.  The set ends early, between
+    two reads, once ``until()`` holds."""
     from pyspark.sql import functions as F
 
     spark = ctx.spark
-    version = table.current_version()
     out = []
     for i in range(points):
+        if until():
+            return out
         ks = keys[i::points] or keys
         kdf = spark.createDataFrame(ks, "repo string, path string")
         with ctx.tracer.span("lake.point_read"):
             t0 = time.perf_counter()
             rows = table.read_keys(kdf).collect()
-            dt = time.perf_counter() - t0
+            t1 = time.perf_counter()
         if ctx.tracer.enabled:
             _count_point(ctx, table, kdf, rows)
-        out.append(("point", dt, (version, ks, rows)))
+        out.append(("point", t1 - t0, (t0, t1, ks, rows)))
+    if until():
+        return out
     with ctx.tracer.span("lake.changelog_read"):
         t0 = time.perf_counter()
         table.read_changes(prev_version).write.mode("overwrite").format("noop").save()
@@ -454,6 +512,8 @@ def _read_set(ctx, table, prev_version: int, keys, points: int = POINT_READS):
         ctx.tracer.add("lake.changelog_dirs", _changelog_dirs(table, prev_version))
         ctx.tracer.add("lake.changelog_reads")
     out.append(("changelog", dt, None))
+    if until():
+        return out
     with ctx.tracer.span("lake.scan"):
         t0 = time.perf_counter()
         table.read(columns=["lang"]).groupBy("lang").agg(F.count("*")).collect()
@@ -495,44 +555,81 @@ def _changelog_dirs(table, from_version: int) -> int:
     return n
 
 
-def _check_point_reads(ctx, table, got) -> None:
-    """Each point read's rows must equal the same keys filtered from a
-    full ``read()`` at the version the point read saw (one Spark job for
-    the set's point reads)."""
-    points = [res for kind, _s, res in got if kind == "point"]
-    version = points[0][0]
-    keys = sorted({k for _v, ks, _r in points for k in ks})
-    kdf = ctx.spark.createDataFrame(keys, "repo string, path string")
-    full = table.read(version=version).join(kdf, ["repo", "path"], "left_semi").collect()
-
-    def norm(rows):
-        return sorted(tuple(sorted(r.asDict().items())) for r in rows)
-
-    for _v, ks, rows in points:
-        want = [r for r in full if (r["repo"], r["path"]) in set(ks)]
-        _check(ctx, norm(rows) == norm(want), f"point read @v{version} keys {ks[:2]}...")
+def _check_point_reads(ctx, files: list[str], sets) -> None:
+    """Each point read's rows must equal the rows of its keys in a state
+    the table had while the read ran, computed independently by DuckDB
+    from the feed files.  Writes commit beside the reads, so the states
+    that qualify are the one after the last batch that returned before
+    the read started and the one after each batch that overlapped it;
+    the state after a batch is the LWW fold of every event at or below
+    its ``max_lsn_seen``.  ``sets`` holds (fqn, read set) pairs.  The
+    compared columns are those of the certificate: key, commit,
+    content."""
+    clock = ctx.clock
+    reads = [(fqn.split(".", 1)[1], res) for fqn, got in sets
+             for _k, _s, res in got if res is not None]
+    if not reads:
+        return
+    probes, candidates = [], []  # candidates[read] = the probe ids of its states
+    for tbl, (t0, t1, ks, _rows) in reads:
+        # -1: no batch returned before the read started (empty table)
+        before = [out.get("max_lsn_seen") or -1 for _s, e, out in clock if e < t0][-1:] or [-1]
+        during = [out.get("max_lsn_seen") or -1 for s, e, out in clock if s <= t1 and e >= t0]
+        ids = []
+        for upto in sorted(set(before + during)):
+            ids.append(len(ids) + sum(map(len, candidates)))
+            probes += [(ids[-1], upto, tbl, repo, path) for repo, path in ks]
+        candidates.append(ids)
+    states = duckdb_point_states(files, probes)
+    for (tbl, (_t0, _t1, ks, rows)), ids in zip(reads, candidates):
+        mine = sorted((r["repo"], r["path"], r["commit"], r["content"]) for r in rows)
+        _check(ctx, any(sorted(states[i]) == mine for i in ids),
+               f"point read {tbl} keys {ks[:2]}...")
 
 
 # ------------------------------------------------------------- query_sweep
 
-# a fixed subset of __spark_entry__.queries(): at least one query calls
-# into each of pipelineops (sessionize, token_entropy, mixture_weights,
-# window_rollup), textops (minhash_signature), vectorops (cosine_topk),
-# curation (curate_corpus) and multimodal (multimodal_wav_decode); the
-# four HUGEINT-oracle queries are all in it
+# a fixed subset of __spark_entry__.queries(), grouped by the operator
+# module they call; it holds the four HUGEINT-oracle queries
+# (sessionize, token_entropy, mixture_weights, window_rollup).  Enough
+# of them that both percentiles of each pass come from a dense pool of
+# samples rather than from one query.
 QUERIES = (
+    # pipelineops
     "sessionize", "token_entropy", "mixture_weights", "window_rollup",
-    "minhash_signature", "cosine_topk", "curate_corpus", "multimodal_wav_decode",
+    "stratified_sample", "pii_redact", "vocab_top", "chunk_documents",
+    "dedup_against_corpus", "repetition_stats",
+    # textops
+    "token_count", "lang_id", "minhash_signature", "chargram_sketch", "simhash",
+    # vectorops
+    "lsh_bucket_topk", "ivf_topk", "knn_join", "cosine_topk",
+    # multimodal
+    "multimodal_wav_decode",
+    # stream_maps, the lake and relational operators
+    "stream_map_events", "singer_records", "topk_per_group", "q1_pricing",
+    "order_monitor", "lww_latest",
 )
-WARMUP_QUERIES = ("full_table_scan", "event_cube", "dedup_exact")
+# run in traced runs only, after the warm passes: curate_corpus alone
+# takes ~8 s first and ~5 s warm, a fifth of an untimed run's budget
+TRACED_ONLY_QUERIES = ("curate_corpus",)
+# set-up runs these first: one-time costs (JIT of the engine, the first
+# import of each operator module in the Python workers) would otherwise
+# land on whichever measured query touches them first
+WARMUP_QUERIES = (
+    "full_table_scan", "event_cube", "dedup_exact", "quality_logit",
+    "minhash_lsh_oversized", "ann_quantized", "multimodal_png_decode",
+)
 
 
 def query_sweep(ctx) -> None:
-    """First run of each query in ``QUERIES`` (noop sink) in a session
-    prewarmed during set-up, then a second, warm run that collects the
-    rows, timed as what a repeat reader pays; the oracle gate checks the
-    collected rows after the timer stops.  The data is the fixed
-    seed-42 testdata at sf0.01 committed under ``perfbench/data``;
+    """For each query in ``QUERIES``, in a session prewarmed during
+    set-up: its first run (noop sink), then at once a warm run that
+    collects the rows, timed as what a repeat reader pays.  Interleaved,
+    both pools of samples span the whole pass.  Further warm passes
+    follow only while one would end within ``--seconds`` of the pass's
+    start, judged by the last pass's wall.  The oracle gate checks
+    every collected result after the timer stops.  The data is the
+    fixed seed-42 testdata at sf0.01 committed under ``perfbench/data``;
     ``--seed`` does not apply."""
     import duckdb
 
@@ -567,12 +664,6 @@ def query_sweep(ctx) -> None:
         return t2 - t0
 
     ctx.setup(lambda: None, lambda: [run(name, False) for name in WARMUP_QUERIES])
-    ctx.tracer.enabled = ctx.trace
-    first = {name: run(name, ctx.trace, group=ctx.trace) for name in QUERIES}
-    ctx.tracer.enabled = False
-    ctx.op_samples.extend(first.values())
-    ctx.ops_per_s = len(first) / sum(first.values())
-
     def collect(name: str):
         """One warm run that collects the rows: (seconds, frame, rows)."""
         with ctx.tracer.span("queries.collect"):
@@ -581,20 +672,52 @@ def query_sweep(ctx) -> None:
             rows = [tuple(r) for r in df.collect()]
             return time.perf_counter() - t0, df, rows
 
-    warm = {name: collect(name) for name in QUERIES}
-    ctx.read_samples.extend(s for s, _df, _rows in warm.values())
-    ctx.log("first, warm s: " + ", ".join(
-        f"{n} {first[n]:.2f} {warm[n][0]:.2f}" for n in QUERIES))
+    t_start = time.perf_counter()
+    first, warm = {}, {}
+    for name in QUERIES:
+        ctx.tracer.enabled = ctx.trace
+        first[name] = run(name, ctx.trace, group=ctx.trace)
+        ctx.tracer.enabled = False
+        warm[name] = collect(name)
+    ctx.op_samples.extend(first.values())
+    ctx.ops_per_s = len(first) / sum(first.values())
+
+    # more warm passes; a traced run traces every other one, and the
+    # ratio of the traced passes' walls to the untraced ones' is the
+    # overhead
+    passes, pass_s = [(False, warm)], sum(s for s, _df, _r in warm.values())
+    while time.perf_counter() - t_start + pass_s <= ctx.seconds or (
+            ctx.trace and len(passes) < 2):
+        traced = ctx.trace and len(passes) % 2 == 1
+        ctx.tracer.enabled = traced
+        t0 = time.perf_counter()
+        passes.append((traced, {name: collect(name) for name in QUERIES}))
+        pass_s = time.perf_counter() - t0
+    ctx.tracer.enabled = False
+    for traced, warm in passes:
+        if not traced:
+            ctx.read_samples.extend(s for s, _df, _rows in warm.values())
+    ctx.log(f"{len(passes)} warm passes; first, warm s: " + ", ".join(
+        f"{n} {first[n]:.2f} {passes[0][1][n][0]:.2f}" for n in QUERIES))
+
+    # the traced run's extra queries: a first run, then collected rows
+    # for the oracle gate
+    extra = {}
+    for name in TRACED_ONLY_QUERIES if ctx.trace else ():
+        ctx.detail[f"query.{name}.first_s"] = run(name, False)
+        extra[name] = collect(name)
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{os.path.join(data, t + '.parquet')}')")
     type_diffs = 0
-    for name, (_s, df, rows) in warm.items():
-        ok, diffs = oracle_diff(con, oracles[name], df.columns, rows,
-                                [f.dataType.simpleString() for f in df.schema.fields])
-        _check(ctx, ok, f"oracle {name}")
+    for name in QUERIES + tuple(extra):
+        for i, warm in enumerate([w for _t, w in passes] if name in QUERIES else [extra]):
+            _s, df, rows = warm[name]
+            ok, diffs = oracle_diff(con, oracles[name], df.columns, rows,
+                                    [f.dataType.simpleString() for f in df.schema.fields])
+            _check(ctx, ok, f"oracle {name} (warm pass {i + 1})")
         if diffs:
             type_diffs += 1
             ctx.log(f"oracle type difference: {name}: {'; '.join(diffs)}")
@@ -603,7 +726,8 @@ def query_sweep(ctx) -> None:
     ctx.detail.update({
         "query_sweep_s": sum(first.values()),
         "queries.first_s": sum(first.values()),
-        "queries.warm_s": sum(ctx.read_samples),
+        "queries.warm_s": p50([sum(s for s, _df, _r in warm.values())
+                               for traced, warm in passes if not traced]),
         "queries.type_mismatches": type_diffs,
         **{f"query.{n}.first_s": s for n, s in first.items()},
     })
@@ -611,14 +735,10 @@ def query_sweep(ctx) -> None:
         ctx.detail["queries.plan_s"] = sum(plan.values())
         ctx.detail["queries.exec_s"] = sum(execs.values())
         # a first run cannot be repeated in one process: the overhead
-        # ratio compares two more warm passes, untraced then traced (the
-        # timed warm pass above is colder than both)
-        passes = []
-        for traced in (False, True):
-            ctx.tracer.enabled = traced
-            passes.append(sum(collect(name)[0] for name in QUERIES))
-        ctx.tracer.enabled = False
-        ctx.detail["trace.overhead_ratio"] = passes[1] / passes[0]
+        # ratio compares the warm passes, traced over untraced
+        walls = {t: [sum(s for s, _df, _r in warm.values()) for tr, warm in passes if tr == t]
+                 for t in (False, True)}
+        ctx.detail["trace.overhead_ratio"] = p50(walls[True]) / p50(walls[False])
 
 
 def _planning_s(qe) -> float:
