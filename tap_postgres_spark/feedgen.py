@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -403,11 +404,22 @@ def wrap_transactions(feed: Feed) -> Feed:
 # --------------------------------------------------------------------------
 # Writers
 # --------------------------------------------------------------------------
+def stamp_arrival_order(paths: list[str]) -> None:
+    """Give ``paths`` strictly increasing modification times, one second
+    apart and ending now.  Spark's file stream source picks files up in
+    modification-time order; files written within one clock tick tie,
+    and ties go in directory-listing order, which is not name order."""
+    t0 = time.time() - len(paths)
+    for i, p in enumerate(paths):
+        os.utime(p, (t0 + i, t0 + i))
+
+
 def write_feed(feed: Feed, feed_dir: str, snapshot_path: str | None = None) -> None:
     """Write the event feed as N parquet files whose lexical filename order
-    equals LSN order (the file-source contract: Spark's file stream picks
-    files up in a deterministic order per batch; LSN order within and
-    across files makes replay order total)."""
+    equals LSN order, stamped so that their arrival order does too
+    (:func:`stamp_arrival_order`): Spark's file stream then picks them up
+    in LSN order, and LSN order within and across files makes replay
+    order total."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -415,6 +427,7 @@ def write_feed(feed: Feed, feed_dir: str, snapshot_path: str | None = None) -> N
     ev = feed.events
     n_files = max(1, feed.config.n_feed_files)
     per = (len(ev) + n_files - 1) // n_files
+    written = []
     for i in range(n_files):
         chunk = ev[i * per : (i + 1) * per]
         if not chunk:
@@ -426,7 +439,9 @@ def write_feed(feed: Feed, feed_dir: str, snapshot_path: str | None = None) -> N
                 "payload": pa.array([e["payload"] for e in chunk], pa.string()),
             }
         )
-        pq.write_table(tbl, os.path.join(feed_dir, f"feed-{i:05d}.parquet"))
+        written.append(os.path.join(feed_dir, f"feed-{i:05d}.parquet"))
+        pq.write_table(tbl, written[-1])
+    stamp_arrival_order(written)
     if snapshot_path:
         write_snapshot(feed, snapshot_path)
 

@@ -310,43 +310,20 @@ def minhash_signatures(
     return sh.groupBy(*_ids(id_col)).agg(*aggs)
 
 
-def minhash_signature_cols(
-    text: Column, *, num_hashes: int = 16, shingle_k: int = 3
-) -> list[Column]:
-    """Per-ROW MinHash signature as pure column expressions (``mh0`` …):
-    the shingle hashes materialize once into an array, each signature
-    component is an ``array_min`` over a permuted copy.
-
-    Shuffle-free twin of :func:`minhash_signatures` (which explodes to
-    (id, shingle) rows and aggregates back — one shuffle of the shingle
-    relation).  Same arithmetic per document, identical output (pinned
-    in tests); use this form when the signature is an intermediate (the
-    per-doc row is already in hand) and the exploded form when the
-    shingle relation itself is reused.  Being aggregation-free it is
-    also the STREAMING-legal form: a stream can band per row and join a
-    static index in append mode, where a streaming groupBy could not
-    precede the join."""
-    fam = _hash_family(num_hashes)
-    harr = F.transform(shingles(text, shingle_k), lambda s: md5_60bit(s))
-    return [
-        F.array_min(F.transform(harr, lambda h: _perm(h, a, b))).alias(f"mh{i}")
-        for i, (a, b) in enumerate(fam)
-    ]
-
-
 def minhash_signature_array(
     text: Column, *, num_hashes: int = 16, shingle_k: int = 3
 ) -> Column:
     """All ``num_hashes`` MinHash components as ONE ``array<long>``
     column, via a single fold over the shingle-hash array.
 
-    Value-identical to :func:`minhash_signature_cols` (pinned in tests):
-    per component i, min over the same permuted-hash multiset with the
-    same long arithmetic.  Structurally better twice over: the md5 per
-    shingle is evaluated ONCE (the per-column form embeds its own copy
-    of the shingle-hash subtree in every component — higher-order
-    functions get no common-subexpression elimination), and the plan
-    carries one fold expression instead of ``num_hashes`` — measured
+    Value-identical to :func:`minhash_signatures` (pinned in tests via
+    the banding built on each): per component i, min over the same
+    permuted-hash multiset with the same long arithmetic, without the
+    exploded form's shuffle.  The md5 per shingle is evaluated ONCE
+    (a per-component ``array_min`` form would embed its own copy of the
+    shingle-hash subtree in every component — higher-order functions
+    get no common-subexpression elimination), and the plan carries one
+    fold expression instead of ``num_hashes`` — measured
     ~1 s of first-execution cost on the banding queries (expression
     size, same lesson as the simhash single-fold)."""
     fam = _hash_family(num_hashes)

@@ -7,6 +7,7 @@ O(commits) per version / O(commits²) cumulative."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import types as T
@@ -383,6 +384,151 @@ def test_read_keys_point_lookup(spark, tmp_path):
         (r["repo"], r["path"]): r["content"]
         for r in t.read_keys(keys, pushdown_limit=1).collect()
     } == got
+    # a NULL key matches NULL-safely on both strategies
+    t.merge_into(_batch(spark, [(None, "a", "null-repo", 200, None),
+                                ("a", "a", "a-repo", 201, None)]), epoch_id="e3")
+    nkeys = spark.createDataFrame([(None, "a"), ("a", "a")],
+                                  "repo string, path string")
+    want = {(None, "a"): "null-repo", ("a", "a"): "a-repo"}
+    for limit in (128, 1):
+        assert {
+            (r["repo"], r["path"]): r["content"]
+            for r in t.read_keys(nkeys, pushdown_limit=limit).collect()
+        } == want
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through the status tracker under
+    a job group of its own."""
+    sc = spark.sparkContext
+    group = f"read-keys-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def threshold(spark):
+    """Sets ``spark.sql.autoBroadcastJoinThreshold`` for one test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.set(key, prev)
+
+
+def _point_table(spark, path):
+    from tests.test_lake_merge import SCHEMA, _batch
+
+    t = LakeTable.create(spark, path, SCHEMA, ["repo", "path"], num_buckets=4)
+    for e in range(3):
+        t.merge_into(
+            _batch(spark, [("r1", f"p{i}", f"v{e}.{i}", 10 * e + i,
+                            "2024-01-01" if (e, i) == (2, 5) else None)
+                           for i in range(8)]),
+            epoch_id=f"e{e}",
+        )
+    keys = spark.createDataFrame([("r1", "p3"), ("r1", "p5"), ("r9", "p1")],
+                                 "repo string, path string")
+    return t, keys
+
+
+def test_read_keys_point_read_runs_only_the_probe(spark, tmp_path, threshold):
+    """A bounded point read runs the key probe's jobs and nothing else:
+    no job for the bucket ids, none for reading the pruned files."""
+    t, keys = _point_table(spark, str(tmp_path / "pt"))
+    threshold("10MB")
+    probe = _spark_jobs(
+        spark, lambda: keys.select("repo", "path").distinct().limit(129).toArrow()
+    )
+    rows = []
+    assert _spark_jobs(spark, lambda: rows.extend(t.read_keys(keys).collect())) == probe
+    assert [(r["repo"], r["path"], r["content"]) for r in rows] == [("r1", "p3", "v2.3")]
+    # the bucket ids from the probed rows prune exactly like a Spark job would
+    assert t._probe_buckets(keys.toArrow(), keys.schema, t.metadata()) == sorted(
+        t.buckets_for_keys(keys)
+    )
+
+
+def test_read_keys_above_threshold_takes_spark_read(spark, tmp_path, threshold):
+    """Pruned files over ``spark.sql.autoBroadcastJoinThreshold`` (or a
+    threshold of -1) take the Spark point read, with the same rows."""
+    t, keys = _point_table(spark, str(tmp_path / "pt"))
+    threshold("10MB")
+    probe = _spark_jobs(
+        spark, lambda: keys.select("repo", "path").distinct().limit(129).toArrow()
+    )
+    want = sorted(map(tuple, t.read_keys(keys).collect()))
+    for v in ("100b", "-1"):
+        threshold(v)
+        rows = []
+        assert _spark_jobs(
+            spark, lambda: rows.extend(t.read_keys(keys).collect())
+        ) > probe
+        assert sorted(map(tuple, rows)) == want
+
+
+def test_read_keys_driver_read_keeps_types(spark, tmp_path, threshold):
+    """Every column type the driver-side read accepts comes back with
+    the Spark read's values and schema; a type it does not accept
+    (arrays) takes the Spark read."""
+    import decimal
+
+    from pyspark.sql import functions as F
+
+    cols = (
+        "id long, ts timestamp, ntz timestamp_ntz, d decimal(10,2), dt date, "
+        "b binary, f double, r float, s short, flag boolean, tags array<string>"
+    )
+    schema = widen_for_cdc(T._parse_datatype_string(cols))
+    rows = [
+        (i, f"2024-01-02 03:04:0{i}", f"2024-01-02 03:04:0{i}",
+         decimal.Decimal(f"{i}.25"), f"2024-01-0{i + 1}", bytes([i]), i / 3,
+         i / 4, i, i % 2 == 0, [f"t{i}"], 100 + i, None)
+        for i in range(6)
+    ] + [(6, *[None] * 10, 106, None)] + [
+        # Postgres sentinels, outside the range of nanosecond timestamps
+        (i, day, day, decimal.Decimal("1.00"), day, b"", 0.0, 0.0, 0, True, [],
+         100 + i, None)
+        for i, day in ((7, "0001-01-01"), (8, "9999-12-31"))
+    ]
+    # timestamps go in as strings: Python's datetime cannot convert
+    # 0001-01-01 00:00 through a local time
+    batch = spark.createDataFrame(
+        rows,
+        cols.replace(" timestamp_ntz", " string").replace(" timestamp", " string")
+        .replace(" date", " string") + ", _sdc_lsn long, _sdc_deleted_at string",
+    ).withColumns({
+        "ts": F.col("ts").cast("timestamp"),
+        "ntz": F.col("ntz").cast("timestamp_ntz"),
+        "dt": F.col("dt").cast("date"),
+    })
+    keys = spark.createDataFrame([(1,), (4,), (6,), (7,), (8,), (9,)], "id long")
+    for name, frame in (("typed", batch.drop("tags")), ("tagged", batch)):
+        table_schema = T.StructType([f for f in schema.fields if f.name in frame.columns])
+        t = LakeTable.create(spark, str(tmp_path / name), table_schema, ["id"],
+                             num_buckets=2)
+        t.merge_into(frame, epoch_id="e1")
+        threshold("10MB")
+        probe = _spark_jobs(spark, lambda: keys.distinct().limit(129).toArrow())
+        jobs = _spark_jobs(spark, lambda: t.read_keys(keys).select("id").collect())
+        assert (jobs == probe) == (name == "typed")
+        local = t.read_keys(keys).orderBy("id")
+        threshold("-1")
+        remote = t.read_keys(keys).orderBy("id")
+        assert local.schema == remote.schema
+        got = local.toArrow()
+        assert got.equals(remote.toArrow())
+        assert got.column("id").to_pylist() == [1, 4, 6, 7, 8]
+        assert [
+            tuple(r) for r in
+            local.where("id >= 7").selectExpr("string(ts)", "string(ntz)", "string(dt)")
+            .collect()
+        ] == [("0001-01-01 00:00:00",) * 2 + ("0001-01-01",),
+              ("9999-12-31 00:00:00",) * 2 + ("9999-12-31",)]
 
 
 class TestCommitConcurrency:

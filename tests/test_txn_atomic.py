@@ -216,7 +216,10 @@ def _write_feed_files(feed_dir, chunks):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from tap_postgres_spark.feedgen import stamp_arrival_order
+
     os.makedirs(feed_dir, exist_ok=True)
+    paths = []
     for i, chunk in enumerate(chunks):
         tbl = pa.table(
             {
@@ -225,7 +228,10 @@ def _write_feed_files(feed_dir, chunks):
                 "payload": pa.array([e[2] for e in chunk], pa.string()),
             }
         )
-        pq.write_table(tbl, os.path.join(feed_dir, f"feed-{i:05d}.parquet"))
+        paths.append(os.path.join(feed_dir, f"feed-{i:05d}.parquet"))
+        pq.write_table(tbl, paths[-1])
+    # the runner reads files in arrival (mtime) order: file 0 first
+    stamp_arrival_order(paths)
 
 
 def test_streaming_runner_with_txn_buffer(spark, tmp_path):
