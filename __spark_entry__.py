@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 from tap_postgres_spark import pipelineops, stream_maps, textops, vectorops
 from tap_postgres_spark.modes import full_table_scan, incremental_scan
-from tap_postgres_spark.operators import fold_last_writer_wins
+from tap_postgres_spark.operators import fold_last_writer_wins_agg
 from tap_postgres_spark.operators.temporal import asof_join, range_join
 from tap_postgres_spark.schema import StreamDef
 from tap_postgres_spark.textops import _hash_family, _MERSENNE
@@ -266,9 +266,14 @@ def q_event_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lww_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6: last-writer-wins fold — one row per key, ordered by the
-    (ts, event_id) total order (≙ (lsn, txid))."""
-    ev = _events(spark, sf_dir).withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-    latest = fold_last_writer_wins(ev, ["user_id"], ("ts_us", "event_id"))
+    (ts, event_id) total order (≙ (lsn, txid)).  Only the output's
+    columns enter the fold: its winner struct carries every non-key
+    column, so column pruning cannot narrow the scan below it."""
+    ev = _events(spark, sf_dir).select(
+        "user_id", "event_id", "event_type", "value",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+    )
+    latest = fold_last_writer_wins_agg(ev, ["user_id"], ("ts_us", "event_id"))
     return latest.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),

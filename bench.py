@@ -2,7 +2,7 @@
 
 Headline metric (BASELINE.json): change-events/sec replaying a bulk WAL
 feed (insert/update/delete mix, zipf-skewed keys) through the full
-pipeline — JSON decode → classify → salted LWW fold → bucketed MERGE —
+pipeline — JSON decode → classify → max_by LWW fold → bucketed MERGE —
 into the lake table, with the final state verified against an
 independent DuckDB fold via a 60-bit-hash-sum certificate (the sha256
 per-row invariant is pinned separately in tests/test_end_to_end.py).
@@ -185,12 +185,6 @@ def bench_cdc_replay(spark, sf: float, work_dir: str, n_batches: int) -> dict:
             StateStore(state_path),
             metrics_dir=os.path.join(work_dir, "metrics"),
             detect_evolution=True,
-            merge_mode="mor",
-            concurrent_merges=int(
-                os.environ.get(
-                    "SPARK_GRAFT_CONCURRENT_MERGES", min(n_streams, 4)
-                )
-            ),
             # steady-state maintenance defaults ride the headline path
             # every round: quarantine instead of dropping malformed
             # payloads, and expire snapshots on the full-compact cadence

@@ -39,10 +39,11 @@ an explicit schema (``_read_dirs``: missing → NULL, extra → ignored —
 parquet nulls cost ~nothing on disk).
 
 Falls back (``prepare_grouped_fused`` returns ``None``) when streams
-share a column name at conflicting types/coercions, when a table's
-schema would need a widening cast the fused projection didn't produce,
-or when a stream carries a stream_map (caller checks) — the classic
-per-stream path handles those.
+share a column name at conflicting types/coercions, or when a table's
+schema would need a widening cast the fused projection didn't produce;
+the caller (``CdcPipeline``) does not try it for one stream, stream
+maps, partial updates or key updates.  All of those take the sequential
+per-stream merges.
 """
 
 from __future__ import annotations

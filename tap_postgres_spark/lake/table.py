@@ -58,11 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.lww import (
-    fold_last_writer_wins,
-    fold_last_writer_wins_agg,
-    salted_fold_last_writer_wins,
-)
+from ..operators.lww import fold_last_writer_wins_agg
 from ..plancache import memo
 from ..schema import SDC_DELETED_AT, SDC_LSN, merge_schemas
 
@@ -655,7 +651,7 @@ class LakeTable:
         merge manifest's ``summary.lineage`` still records that merge's
         own change dirs (which survive compaction until retention
         expires their version), so skipping compacts yields the correct
-        changelog.  COW merges / overwrites still raise.  Ranges that
+        changelog.  Overwrites still raise.  Ranges that
         cross the retention floor (:meth:`expire_versions`) raise
         instead of silently truncating: the floor manifest's
         ``parent: null`` is detected mid-walk."""
@@ -942,10 +938,12 @@ class LakeTable:
         self,
         batch: DataFrame,
         meta: dict[str, Any],
-        fold: str | None,
         new_version: int,
+        *,
+        fold: bool,
     ) -> tuple[DataFrame, T.StructType]:
-        """Schema-align, fold to one row per key, add bucket + generation."""
+        """Schema-align, fold to one row per key (``fold``), add bucket +
+        generation."""
         key_cols = meta["key_columns"]
         table_schema = T.StructType.fromJson(meta["schema"])
         data_cols = [c for c in batch.columns if c not in _HELPER_COLS and c != SDC_GEN]
@@ -954,14 +952,7 @@ class LakeTable:
         )
         new_schema = merge_schemas(table_schema, batch_schema, frozen=key_cols)
 
-        if fold == "agg":
-            folded = fold_last_writer_wins_agg(batch, key_cols)
-        elif fold == "salted":
-            folded = salted_fold_last_writer_wins(batch, key_cols)
-        elif fold == "plain":
-            folded = fold_last_writer_wins(batch, key_cols)
-        else:
-            folded = batch
+        folded = fold_last_writer_wins_agg(batch, key_cols) if fold else batch
         folded_cols = set(folded.columns)
 
         def build_align():
@@ -989,13 +980,7 @@ class LakeTable:
         return bucketed, new_schema
 
     def merge_into(
-        self,
-        batch: DataFrame,
-        epoch_id: str | None = None,
-        *,
-        fold: str = "agg",
-        mode: str = "mor",
-        drop_tombstones_below: int | None = None,
+        self, batch: DataFrame, epoch_id: str | None = None
     ) -> dict[str, Any]:
         """MERGE INTO this table USING ``batch`` ON the key columns.
 
@@ -1007,25 +992,13 @@ class LakeTable:
 
         ``batch`` must carry the key columns and ``_sdc_lsn``; rows with
         ``_sdc_deleted_at`` set are deletes.  The batch is folded to one
-        row per key first (``fold='agg'`` = max_by hash aggregation with
-        map-side combine, skew-proof by construction; ``'salted'``/``'plain'``
-        select the window variants).
-
-        - ``mode='mor'`` (default): append the folded delta only —
-          O(|batch|) I/O; tombstones retained until :meth:`compact`.
-        - ``mode='cow'``: rewrite touched buckets by folding the resolved
-          target WITH the batch under LWW-by-``(_sdc_lsn, _sdc_gen)`` —
-          an out-of-order lower-LSN replay batch therefore loses to
-          already-applied newer rows AND to retained delete tombstones,
-          the same order-independence invariant as MOR.  Writes cost
-          O(|touched buckets|).
-
-        Tombstones are retained in both modes because they are the LSN
-        evidence that keeps replay order-independent.  Pass
-        ``drop_tombstones_below`` (the committed bookmark floor) to let a
-        COW rewrite discard only tombstones whose ``_sdc_lsn`` is below
-        the floor — events below the floor are filtered out before the
-        merge, so those tombstones can never be contradicted again.
+        row per key first (max_by hash aggregation with map-side combine,
+        skew-proof by construction), then appended merge-on-read: only
+        the folded delta is written — O(|batch|) I/O — and readers resolve
+        LWW-by-``(_sdc_lsn, _sdc_gen)`` across base and deltas, so an
+        out-of-order lower-LSN replay batch loses to already-applied newer
+        rows.  Delete tombstones are retained as that LSN evidence until
+        :meth:`compact` passes the committed bookmark floor.
 
         Returns the commit summary.  If ``epoch_id`` was already
         committed, returns ``{"skipped": True, ...}`` without writing
@@ -1039,78 +1012,24 @@ class LakeTable:
                 "version": meta["committed_epochs"][epoch_id],
             }
         new_version = meta["version"] + 1
-        bucketed, new_schema = self._prepare_batch(batch, meta, fold, new_version)
-        key_cols = meta["key_columns"]
+        bucketed, new_schema = self._prepare_batch(
+            batch, meta, new_version, fold=True
+        )
         rel_dir = self._next_data_dir(new_version)
-
-        current = self.buckets_map(meta["version"])
-        if mode == "mor":
-            written = self._write_bucketed(
-                bucketed,
-                rel_dir,
-                meta["num_buckets"],
-                aligned=(
-                    fold == "agg"
-                    and self._write_aligned(meta, meta["num_buckets"], bucketed)
-                ),
-            )
-            buckets = {b: list(dl) for b, dl in current.items()}
-            for b, dl in written.items():
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dl
-            buckets_delta: dict[str, Any] | None = {"append": written}
-        elif mode == "cow":
-            bucketed = bucketed.persist()
-            touched = [
-                str(r[0]) for r in bucketed.select(_BUCKET).distinct().collect()
-            ]
-            target_dirs = [
-                d for b, dl in current.items() if b in touched for d in dl
-            ]
-            target = self._read_dirs(target_dirs, new_schema, with_gen=True)
-            target = target.withColumn(
-                _BUCKET,
-                self._bucket_expr(
-                    key_cols, meta["num_buckets"], self._bucket_fn(meta)
-                ),
-            )
-            # fold target base+deltas TOGETHER with the batch under
-            # LWW-by-(lsn, gen): the batch does NOT win unconditionally,
-            # so an out-of-order lower-LSN replay cannot overwrite or
-            # resurrect newer data (incl. tombstoned keys).
-            merged = fold_last_writer_wins_agg(
-                target.unionByName(bucketed), key_cols, (SDC_LSN, SDC_GEN)
-            )
-            if SDC_DELETED_AT in merged.columns:
-                # tombstones are kept as LSN evidence; only those provably
-                # settled (below the committed bookmark floor) are dropped
-                if drop_tombstones_below is not None:
-                    merged = merged.filter(
-                        F.col(SDC_DELETED_AT).isNull()
-                        | (F.col(SDC_LSN) >= F.lit(int(drop_tombstones_below)))
-                    )
-            written = self._write_bucketed(
-                merged,
-                rel_dir,
-                meta["num_buckets"],
-                aligned=self._write_aligned(meta, meta["num_buckets"], merged),
-            )
-            buckets = {
-                b: list(dl) for b, dl in current.items() if b not in touched
-            }
-            for b, dl in written.items():
-                buckets[b] = dl
-            buckets_delta = {
-                "set": written,
-                "drop": sorted(b for b in touched if b not in written),
-            }
-            bucketed.unpersist()
-        else:
-            raise ValueError(f"unknown merge mode {mode!r}")
-
+        written = self._write_bucketed(
+            bucketed,
+            rel_dir,
+            meta["num_buckets"],
+            aligned=self._write_aligned(meta, meta["num_buckets"], bucketed),
+        )
+        buckets = {
+            b: list(dl) for b, dl in self.buckets_map(meta["version"]).items()
+        }
+        for b, dl in written.items():
+            buckets[b] = buckets.get(b, []) + dl
         return self._commit_delta(
-            meta, new_version, new_schema, written, buckets, buckets_delta,
-            epoch_id, f"merge-{mode}",
+            meta, new_version, new_schema, written, buckets,
+            {"append": written}, epoch_id, "merge-mor",
         )
 
     def _commit_delta(
@@ -1182,7 +1101,9 @@ class LakeTable:
         if epoch_id is not None and epoch_id in meta["committed_epochs"]:
             return {"skipped": True, "epoch_id": epoch_id}
         new_version = meta["version"] + 1
-        bucketed, new_schema = self._prepare_batch(df, meta, None, new_version)
+        bucketed, new_schema = self._prepare_batch(
+            df, meta, new_version, fold=False
+        )
         rel_dir = self._next_data_dir(new_version)
         written = self._write_bucketed(bucketed, rel_dir, meta["num_buckets"])
         committed = dict(meta["committed_epochs"])

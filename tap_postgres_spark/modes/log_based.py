@@ -7,7 +7,7 @@ micro-batch flows::
       → parse (enum repair + from_json)                 [decode.parse_raw_payloads]
       → classify (status + fqn routing)                 [decode.classify]
       → per-stream: evolve schema → typed decode        [decode.decode_stream]
-        → salted LWW fold → MERGE INTO lake table       [LakeTable.merge_into]
+        → agg LWW fold → MERGE INTO lake table          [LakeTable.merge_into]
       → bookmark advance + metrics/lineage write        [StateStore / metrics]
 
 This is the vectorized re-creation of the reference's shared
@@ -20,7 +20,7 @@ Scale notes (the 100 TB story):
 - the classified batch is persisted once and feeds decode, metrics and
   evolution detection — no repeated payload parsing;
 - routing is a column predicate, not a shuffle; the only shuffles per
-  batch are the salted LWW fold (bounded by |batch|) and the bucket
+  batch are the max_by LWW fold (bounded by |batch|) and the bucket
   repartition for the merge write (bounded by |distinct keys|);
 - bookmark state is O(streams) driver-side metadata, exactly like the
   reference's STATE doc.
@@ -96,16 +96,13 @@ class CdcPipeline:
         *,
         detect_evolution: bool = True,
         auto_compact_depth: int = 12,
-        merge_mode: str = "mor",
         stream_maps: dict[str, dict] | None = None,
         full_compact_every: int = 8,
         dead_letter_dir: str | None = None,
         retention_keep_last: int | None = None,
-        concurrent_merges: int = 1,
         txn_boundary_dir: str | None = None,
         snapshots_dir: str | None = None,
         changefeed_dir: str | None = None,
-        grouped_commit: bool | None = None,
         partial_updates: bool = False,
         key_updates: bool = False,
     ):
@@ -124,7 +121,6 @@ class CdcPipeline:
         self.metrics_dir = metrics_dir
         self.detect_evolution = detect_evolution
         self.auto_compact_depth = auto_compact_depth
-        self.merge_mode = merge_mode
         self.full_compact_every = max(1, int(full_compact_every))
         self.dead_letter_dir = dead_letter_dir
         # snapshot retention: after each FULL compaction, expire versions
@@ -133,27 +129,6 @@ class CdcPipeline:
         # per-batch path and guarantees the expired range never includes
         # uncompacted deltas a reader could still need.
         self.retention_keep_last = retention_keep_last
-        # >1 submits independent per-stream merges from a thread pool so
-        # their Spark jobs overlap (local + cluster schedulers both
-        # interleave concurrent job task-sets).  Safe because each merge
-        # writes its OWN table (commit = atomic per-table pointer swap)
-        # and bookmark/state updates happen after the batch; the shared
-        # cached ``classified`` batch is materialized once under Spark's
-        # block-level locks.  Sequential merges leave a 3-stream batch
-        # >50% idle on 32 cores (measured) — each stream's fold/write is
-        # too narrow alone.
-        self.concurrent_merges = max(1, int(concurrent_merges))
-        # fuse the N per-stream MOR merges of a batch into ONE Spark job
-        # (lake/grouped.py): the round-4 profile showed 8-stream
-        # small-batch throughput is bounded by per-JOB fixed overhead
-        # (analysis + codegen + scheduling + write-commit protocol ×N),
-        # not by compute.  Default on for multi-stream MOR pipelines;
-        # SPARK_GRAFT_GROUPED_COMMIT=0 restores the per-stream path.
-        if grouped_commit is None:
-            grouped_commit = (
-                os.environ.get("SPARK_GRAFT_GROUPED_COMMIT", "1") != "0"
-            )
-        self.grouped_commit = bool(grouped_commit)
         # transaction-boundary atomicity: when set, apply_batch defers
         # data rows of transactions whose commit marker hasn't arrived
         # yet, so a committed batch never exposes half a transaction
@@ -413,12 +388,12 @@ class CdcPipeline:
         # write job for all streams instead of N per-stream merge jobs —
         # the round-4 profile showed the 8-stream small-batch gap is N×
         # duplicated batch scans plus per-job fixed overhead.  prepare is
-        # driver-only (metadata + schema checks); None → classic path.
+        # driver-only (metadata + schema checks); None → the sequential
+        # per-stream merges below, as for one stream, stream maps,
+        # partial updates and key updates.
         fused_plan = None
         if (
-            self.grouped_commit
-            and len(self.streams) > 1
-            and self.merge_mode == "mor"
+            len(self.streams) > 1
             and not self.stream_maps
             and not self.partial_updates
             and not self.key_updates
@@ -490,6 +465,8 @@ class CdcPipeline:
             results: dict[str, Any] = {}
             observed_df = None
             obs_fired = False
+            # every stream's plan is built (stream maps validated) before
+            # the first merge writes anything
             merge_jobs: list[tuple[str, Any, bool]] = []
             # fqn -> (summary, Observation|None, persisted folded df)
             partial_meta: dict[str, tuple] = {}
@@ -522,43 +499,12 @@ class CdcPipeline:
                             fqn, stream, decoded, partial_meta
                         )
                     merge_jobs.append((fqn, decoded, proj is observed_df))
-
-            def _merge(fqn: str, decoded) -> dict[str, Any]:
-                # per-stream scheduler pool: under spark.scheduler.mode=
-                # FAIR the concurrent merges' jobs round-robin instead of
-                # FIFO-queueing stage-wise behind each other (pools are
-                # created on demand; a no-op under the default FIFO
-                # scheduler).  PySpark's pinned-thread mode scopes the
-                # local property to this worker thread.
-                sc = self.spark.sparkContext
-                sc.setLocalProperty("spark.scheduler.pool", f"merge-{fqn}")
-                try:
-                    return self.tables[fqn].merge_into(
-                        decoded, epoch_id=f"{epoch_id}:{fqn}",
-                        fold="agg", mode=self.merge_mode,
-                    )
-                finally:
-                    sc.setLocalProperty("spark.scheduler.pool", None)
-
-            if self.concurrent_merges > 1 and len(merge_jobs) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(self.concurrent_merges, len(merge_jobs))
-                ) as pool:
-                    futs = {
-                        fqn: pool.submit(_merge, fqn, decoded)
-                        for fqn, decoded, _o in merge_jobs
-                    }
-                    for fqn, _decoded, observed in merge_jobs:
-                        results[fqn] = futs[fqn].result()
-                        if observed and not results[fqn].get("skipped"):
-                            obs_fired = True
-            else:
-                for fqn, decoded, observed in merge_jobs:
-                    results[fqn] = _merge(fqn, decoded)
-                    if observed and not results[fqn].get("skipped"):
-                        obs_fired = True
+            for fqn, decoded, observed in merge_jobs:
+                results[fqn] = self.tables[fqn].merge_into(
+                    decoded, epoch_id=f"{epoch_id}:{fqn}"
+                )
+                if observed and not results[fqn].get("skipped"):
+                    obs_fired = True
 
             if not obs_fired:
                 # every observed-plan merge was an epoch-dedup no-op
@@ -684,8 +630,7 @@ class CdcPipeline:
                         self.tables[fqn], pfolded, key_cols, dcols
                     )
                 results[fqn]["evolution"] = self.tables[fqn].merge_into(
-                    corrected, epoch_id=f"{epoch_id}:{fqn}:evolve",
-                    fold="agg", mode=self.merge_mode,
+                    corrected, epoch_id=f"{epoch_id}:{fqn}:evolve"
                 )
                 if pfolded is not None:
                     pfolded.unpersist()

@@ -1,8 +1,4 @@
-from .lww import (  # noqa: F401
-    fold_last_writer_wins,
-    fold_last_writer_wins_agg,
-    salted_fold_last_writer_wins,
-)
+from .lww import fold_last_writer_wins_agg  # noqa: F401
 from .temporal import (  # noqa: F401
     asof_join,
     point_in_time_join,

@@ -18,28 +18,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plancache import memo
 
 DEFAULT_ORDER = ("_sdc_lsn", "txid")
-
-
-def fold_last_writer_wins(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str] = DEFAULT_ORDER,
-) -> DataFrame:
-    """One row per key: the event with the highest (lsn, txid)."""
-    order_cols = [c for c in order_cols if c in df.columns]
-    ordering = [F.col(c).desc() for c in order_cols] or [F.lit(1)]
-    w = Window.partitionBy(*key_cols).orderBy(*ordering)
-    return (
-        df.withColumn("_lww_rn", F.row_number().over(w))
-        .filter(F.col("_lww_rn") == 1)
-        .drop("_lww_rn")
-    )
 
 
 def fold_last_writer_wins_agg(
@@ -49,17 +33,19 @@ def fold_last_writer_wins_agg(
 ) -> DataFrame:
     """LWW as a hash aggregation: ``max_by(struct(payload), struct(order))``.
 
-    Semantically identical to the window fold, but executes as ONE shuffle
-    with map-side partial aggregation — each map task pre-folds its local
-    events per key before anything moves, so a hot key that receives 10^6
-    updates in a batch ships ≤ num_map_tasks candidate rows through the
-    shuffle instead of 10^6.  This makes the aggregation skew-proof
-    without salting and is the default fold on the merge path; the salted
-    window variant remains for ordering-sensitive callers.
+    One row per key: the event with the highest ``order_cols`` tuple.
+    Executes as ONE shuffle with map-side partial aggregation — each map
+    task pre-folds its local events per key before anything moves, so a
+    hot key that receives 10^6 updates in a batch ships ≤ num_map_tasks
+    candidate rows through the shuffle instead of 10^6.  That makes the
+    fold skew-proof without salting; it is the only LWW fold.
+
+    With none of ``order_cols`` present there is no writer order to
+    resolve, and the fold keeps one arbitrary row per key.
     """
     order_cols = [c for c in order_cols if c in df.columns]
     if not order_cols:
-        return fold_last_writer_wins(df, key_cols, order_cols)
+        return df.dropDuplicates(list(key_cols))
     payload_cols = [c for c in df.columns if c not in key_cols]
 
     def build() -> tuple[list[Column], Column]:
@@ -75,37 +61,3 @@ def fold_last_writer_wins_agg(
         build,
     )
     return df.groupBy(*group_cols).agg(winner).select(*key_cols, "_w.*")
-
-
-def salted_fold_last_writer_wins(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str] = DEFAULT_ORDER,
-    num_salts: int = 16,
-) -> DataFrame:
-    """Two-phase LWW for hot keys (SURVEY.md §2.3 R3).
-
-    A single key receiving millions of updates in one batch would make the
-    plain window a one-task straggler.  Phase 1 partitions by
-    ``(key, salt)`` where salt is derived from the *ordering* columns (so
-    events of one key spread across ``num_salts`` reducers) and keeps each
-    salt's winner; phase 2 resolves the ≤``num_salts`` survivors per key.
-    Phase 2's input is bounded by |keys| × num_salts, so no skew survives.
-
-    Semantically identical to :func:`fold_last_writer_wins` because max is
-    associative over any partitioning of the events.
-    """
-    order_cols = [c for c in order_cols if c in df.columns]
-    if not order_cols:
-        return fold_last_writer_wins(df, key_cols, order_cols)
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(num_salts))
-    df1 = df.withColumn("_salt", salt)
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    local = (
-        df1.withColumn("_lww_rn", F.row_number().over(w1))
-        .filter(F.col("_lww_rn") == 1)
-        .drop("_lww_rn", "_salt")
-    )
-    return fold_last_writer_wins(local, key_cols, order_cols)

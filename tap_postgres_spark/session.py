@@ -13,6 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap sized to the host: a quarter of physical memory,
+    clamped to 1-4 GiB.  Local mode runs every executor thread inside the
+    driver JVM, so a heap sized past physical memory only moves the
+    failure from the garbage collector to the kernel's OOM killer.
+    ``SPARK_DRIVER_MEMORY`` overrides it."""
+    mem_mb = 4096
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mem_mb = int(line.split()[1]) // 1024
+                    break
+    except OSError:
+        pass  # no procfs: assume a 4 GiB host
+    return f"{max(1024, min(4096, mem_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "tap_postgres_spark",
     cores: int | str | None = None,
@@ -57,7 +75,8 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # no carriage-return progress bars on the console: bench.py's
         # machine-parsed final JSON line must be the clean last line
@@ -70,13 +89,6 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"))
         .config("spark.sql.streaming.schemaInference", "false")
-        # FAIR scheduling: concurrent per-stream merges (CdcPipeline
-        # concurrent_merges>1, each in its own on-demand pool) round-robin
-        # instead of FIFO-queueing stage-wise behind each other.  Measured
-        # +3-15% aggregate 3-stream throughput, never worse; sequential
-        # workloads are unaffected (single job per pool ≡ FIFO).
-        .config("spark.scheduler.mode",
-                os.environ.get("SPARK_GRAFT_SCHEDULER", "FAIR"))
     )
     # pyspark wheels ship no libhadoop.so, so Hadoop's local filesystem
     # forks /bin/chmod per created file (RawLocalFileSystem.setPermission

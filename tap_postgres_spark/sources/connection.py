@@ -19,11 +19,10 @@ filepath OR the raw PEM text; raw text is written under
 group/world-readable keys).
 
 The SSH tunnel itself (reference tap.py:45-120 re-implements
-sshtunnel on paramiko) is gated behind an import-try: paramiko is not
-in this sandbox, so :func:`open_ssh_tunnel` raises a documented
-``NotImplementedError`` unless paramiko is importable; the config
-plumbing (key parsing, bind-address selection, parameter rebinding) is
-real and tested.
+sshtunnel on paramiko) is not opened in-process: :func:`open_ssh_tunnel`
+validates the ``ssh_tunnel`` config and then raises, naming the
+``ssh -L`` local forward to run instead; ``host``/``port`` then point
+at the tunnel's local end.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field, replace
 from pathlib import Path
-from typing import Any, Mapping
+from typing import Any, Mapping, NoReturn
 from urllib.parse import parse_qs, quote, unquote, urlsplit
 
 APPLICATION_NAME = "tap_postgres_spark"
@@ -166,15 +165,12 @@ class ConnectionParameters:
 
 def open_ssh_tunnel(
     config: Mapping[str, Any], params: ConnectionParameters
-) -> tuple[Any, ConnectionParameters]:
-    """Start an SSH port-forward to the database and rebind ``params``
-    to its local end (reference tap.py:45-120,560-636: a paramiko
-    transport forwarding (db_host, db_port) through the jump host).
-
-    Returns ``(tunnel, rebound_params)``; call ``tunnel.stop()`` when
-    done.  Raises ``NotImplementedError`` when paramiko isn't installed
-    (this sandbox) — the config parsing below still validates eagerly so
-    misconfiguration fails fast either way.
+) -> NoReturn:
+    """Validate the ``ssh_tunnel`` config block, then raise
+    ``NotImplementedError``: the engine opens no SSH tunnel itself.  Run
+    a local forward outside the process and point the tap's
+    ``host``/``port`` at its local end.  Misconfiguration fails first
+    with ``ValueError``.
     """
     ssh = dict(config.get("ssh_tunnel", {}))
     if not ssh.get("enable"):
@@ -182,38 +178,10 @@ def open_ssh_tunnel(
     for req in ("host", "username", "private_key"):
         if not ssh.get(req):
             raise ValueError(f"ssh_tunnel.{req} is required")
-    ssh_host = ssh["host"]
     ssh_port = int(ssh.get("port", 22))
-    try:
-        import paramiko  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "SSH tunneling needs paramiko, which is not installed in this "
-            "environment. On a real deployment: pip install paramiko, then "
-            f"open_ssh_tunnel forwards ({params.host}:{params.port}) "
-            f"through {ssh['username']}@{ssh_host}:{ssh_port} and rebinds "
-            "the connection parameters to the tunnel's 127.0.0.1 end."
-        ) from e
-
-    from io import StringIO
-
-    pkey = paramiko.RSAKey.from_private_key(
-        StringIO(ssh["private_key"]),
-        password=ssh.get("private_key_password") or None,
-    )
-    client = paramiko.SSHClient()
-    client.set_missing_host_key_policy(paramiko.AutoAddPolicy())
-    client.connect(ssh_host, port=ssh_port, username=ssh["username"], pkey=pkey)
-    transport = client.get_transport()
-    local_port = transport.request_port_forward("127.0.0.1", 0)
-
-    class _Tunnel:
-        def __init__(self, c):
-            self._c = c
-
-        def stop(self):
-            self._c.close()
-
-    return _Tunnel(client), params.with_host_and_port(
-        host="127.0.0.1", port=local_port
+    raise NotImplementedError(
+        "SSH tunnels are not opened in-process. Start an external tunnel, "
+        f"e.g. `ssh -N -p {ssh_port} -L 127.0.0.1:<local_port>:"
+        f"{params.host}:{params.port} {ssh['username']}@{ssh['host']}`, "
+        "and point host/port at its local end (127.0.0.1:<local_port>)."
     )

@@ -190,58 +190,6 @@ def fingerprint(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 # Deduplication
 # ---------------------------------------------------------------------------
-ROLLING_B = 257  # polynomial base (> any byte value)
-ROLLING_M = (1 << 31) - 1  # Mersenne-31 modulus
-
-
-def chargram_sketch_rolling(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    k: int = 5,
-    sketch_size: int = 8,
-) -> DataFrame:
-    """The large-blob path for :func:`chargram_sketch`: bottom-k sketch of
-    polynomial hashes over UTF-8 byte ``k``-grams, computed per Arrow
-    batch in numpy (sliding-window dot with the base-power weights — one
-    vectorized O(n·k) pass, no per-row string slices, no O(len·k)
-    transient strings).  Different hash family than the md5 expr form by
-    design (a rolling polynomial), so sketches from the two functions are
-    not interchangeable; the CONTRACT (bottom-k set, insert-robust
-    overlap) is the same and is what tests pin."""
-    import numpy as np
-
-    weights = np.array(
-        [pow(ROLLING_B, k - 1 - j, ROLLING_M) for j in range(k)], dtype=np.int64
-    )
-
-    def _sketch_one(text: str | None) -> list[int] | None:
-        if text is None:
-            return None
-        codes = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-        if codes.size < k:
-            codes = np.pad(codes, (0, k - codes.size))
-        ws = np.lib.stride_tricks.sliding_window_view(codes, k)
-        # max value 5 * 255 * (2^31) < 2^42 — no int64 overflow before mod
-        h = (ws @ weights) % ROLLING_M
-        return np.unique(h)[:sketch_size].tolist()
-
-    def _batches(pdfs):
-        import pandas as pd
-
-        for pdf in pdfs:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sketch": pdf[text_col].map(_sketch_one),
-                }
-            )
-
-    out_schema = f"{id_col} long, sketch array<long>"
-    return df.select(id_col, text_col).mapInPandas(_batches, out_schema)
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup by content hash: keep the lowest id per md5(text).
     A single hash-groupBy — at 10^10 docs this is one shuffle on a

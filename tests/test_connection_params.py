@@ -97,9 +97,11 @@ def test_ssh_tunnel_config_validation_and_gating():
         open_ssh_tunnel(
             {"ssh_tunnel": {"enable": True, "host": "j", "username": "u"}}, p
         )
-    # paramiko is absent in this sandbox: documented NotImplementedError
-    with pytest.raises(NotImplementedError, match="paramiko"):
+    # a valid config still opens nothing: the error names the external
+    # tunnel to run and the database end it forwards to
+    with pytest.raises(NotImplementedError, match="external tunnel") as ei:
         open_ssh_tunnel(
             {"ssh_tunnel": {"enable": True, "host": "j", "username": "u",
                             "private_key": "k"}}, p,
         )
+    assert f"{p.host}:{p.port}" in str(ei.value)

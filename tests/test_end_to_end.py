@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,8 +43,7 @@ BASE_SCHEMA = T.StructType(
 )
 
 
-def make_pipeline(spark, tmp_path, *, merge_mode="mor", detect_evolution=True,
-                  **pipeline_kw):
+def make_pipeline(spark, tmp_path, **pipeline_kw):
     stream = StreamDef(
         schema_name=SCHEMA_NAME,
         table_name=TABLE_NAME,
@@ -67,7 +65,6 @@ def make_pipeline(spark, tmp_path, *, merge_mode="mor", detect_evolution=True,
         {FQN: table},
         state,
         metrics_dir=str(tmp_path / "metrics"),
-        merge_mode=merge_mode,
         **pipeline_kw,
     )
     return pipeline, table, state
@@ -122,10 +119,9 @@ def assert_state_matches_oracle(spark, table, feed):
     assert row["h"] == hashlib.sha256(expected[sample_key]["content"].encode()).hexdigest()
 
 
-@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
-def test_single_batch_replay_matches_oracle(spark, tmp_path, merge_mode):
+def test_single_batch_replay_matches_oracle(spark, tmp_path):
     feed = generate_feed(FeedConfig(n_events=600, n_initial_paths=120))
-    pipeline, table, _ = make_pipeline(spark, tmp_path, merge_mode=merge_mode)
+    pipeline, table, _ = make_pipeline(spark, tmp_path)
     load_snapshot(spark, pipeline, table, feed, tmp_path)
 
     raw = spark.createDataFrame(

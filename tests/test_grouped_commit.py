@@ -38,6 +38,10 @@ def _schema(*names):
 
 
 def _build(spark, root, grouped: bool):
+    """``grouped``: one 3-stream pipeline, which takes the fused commit.
+    Otherwise the per-stream reference: one single-stream pipeline per
+    table fed the same batches (the other tables' events classify as
+    unroutable there)."""
     # three streams with DIFFERENT column sets — exercises the
     # unionByName null-fill — one of which (t_c) goes quiet in batch 2
     # (zero-row branch still commits its epoch)
@@ -53,11 +57,19 @@ def _build(spark, root, grouped: bool):
         )
         for s in streams
     }
-    pipe = CdcPipeline(
-        spark, streams,
-        {s.fqn: {f.name: "text" for f in s.spark_schema.fields} for s in streams},
-        tables, StateStore(str(root / "state.json")),
-        grouped_commit=grouped,
+
+    def pipeline(defs, name):
+        return CdcPipeline(
+            spark, defs,
+            {s.fqn: {f.name: "text" for f in s.spark_schema.fields} for s in defs},
+            {s.fqn: tables[s.fqn] for s in defs},
+            StateStore(str(root / f"{name}.json")),
+        )
+
+    pipes = (
+        [pipeline(streams, "state")]
+        if grouped
+        else [pipeline([s], s.table_name) for s in streams]
     )
     b1 = [
         (10, 1, _payload("I", "t_a", id="a1", v="x")),
@@ -74,12 +86,14 @@ def _build(spark, root, grouped: bool):
     ]
     for i, rows in enumerate((b1, b2)):
         raw = spark.createDataFrame(rows, "lsn long, txid long, payload string")
-        pipe.apply_batch(raw, epoch_id=f"e{i}")
+        for pipe in pipes:
+            pipe.apply_batch(raw, epoch_id=f"e{i}")
     # crash-replay of the last epoch must be a no-op
     raw = spark.createDataFrame(b2, "lsn long, txid long, payload string")
-    res = pipe.apply_batch(raw, epoch_id="e1")
-    assert all(r.get("skipped") for r in res["streams"].values())
-    return pipe, {
+    for pipe in pipes:
+        res = pipe.apply_batch(raw, epoch_id="e1")
+        assert all(r.get("skipped") for r in res["streams"].values())
+    return pipes[0], {
         fqn: sorted(map(tuple, t.read().collect()))
         for fqn, t in tables.items()
     }
@@ -200,7 +214,6 @@ def test_fused_type_conflict_returns_none_and_pipeline_falls_back(
         {"public.t_a": {"id": "text", "v": "text"},
          "public.t_b": {"id": "text", "v": "int8"}},
         tables, StateStore(str(tmp_path / "state.json")),
-        grouped_commit=True,
     )
     rows = [
         (10, 1, _payload("I", "t_a", id="a1", v="str")),

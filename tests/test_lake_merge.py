@@ -1,9 +1,7 @@
 """LakeTable tests: MERGE semantics (SURVEY.md §2.5 J1), exactly-once
-epoch dedup, schema evolution, compaction, time travel, bucket pruning —
-for both merge-on-read and copy-on-write modes.
+epoch dedup, schema evolution, compaction, time travel, bucket pruning.
 """
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,12 +40,11 @@ def _state(table):
     }
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_merge_upsert_delete(spark, tmp_path, mode):
-    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA, ["repo", "path"], num_buckets=4)
+def test_merge_upsert_delete(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=4)
     r1 = t.merge_into(
         _batch(spark, [("r1", "a", "v1", 10, None), ("r1", "b", "v1", 11, None)]),
-        epoch_id="e1", mode=mode,
+        epoch_id="e1",
     )
     assert not r1["skipped"]
     assert _state(t) == {("r1", "a"): ("v1", 10), ("r1", "b"): ("v1", 11)}
@@ -59,22 +56,21 @@ def test_merge_upsert_delete(spark, tmp_path, mode):
             [("r1", "a", "v2", 20, None), ("r1", "b", None, 21, "2024-01-01T00:00:00Z"),
              ("r2", "c", "new", 22, None)],
         ),
-        epoch_id="e2", mode=mode,
+        epoch_id="e2",
     )
     assert _state(t) == {("r1", "a"): ("v2", 20), ("r2", "c"): ("new", 22)}
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_epoch_dedup_idempotent_replay(spark, tmp_path, mode):
+def test_epoch_dedup_idempotent_replay(spark, tmp_path):
     # north-star exactly-once: replaying a committed epoch is a no-op
-    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA, ["repo", "path"], num_buckets=4)
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=4)
     b = _batch(spark, [("r1", "a", "v1", 10, None)])
-    t.merge_into(b, epoch_id="e1", mode=mode)
+    t.merge_into(b, epoch_id="e1")
     v = t.current_version()
-    replay = t.merge_into(b, epoch_id="e1", mode=mode)
+    replay = t.merge_into(b, epoch_id="e1")
     assert replay["skipped"] and t.current_version() == v
     # and state unchanged after a *different* epoch with same rows (idempotent merge)
-    t.merge_into(b, epoch_id="e2", mode=mode)
+    t.merge_into(b, epoch_id="e2")
     assert _state(t) == {("r1", "a"): ("v1", 10)}
 
 

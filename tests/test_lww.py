@@ -1,16 +1,13 @@
 """LWW fold tests — the ordered-application contract (client.py:242-243)
 made explicit, incl. the hard cases from SURVEY.md §7: D-then-I
-resurrection and update-then-delete inside one batch, and salted/plain
-equivalence under a hot key.
+resurrection and update-then-delete inside one batch, a hot key, and an
+LSN tie.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from tap_postgres_spark.operators import (
-    fold_last_writer_wins,
-    salted_fold_last_writer_wins,
-)
+from tap_postgres_spark.operators import fold_last_writer_wins_agg
 
 
 @pytest.fixture()
@@ -33,16 +30,11 @@ def _winners(df):
 
 
 def test_plain_fold(events):
-    w = _winners(fold_last_writer_wins(events, ["key"]))
+    w = _winners(fold_last_writer_wins_agg(events, ["key"]))
     assert w == {"k1": ("U", "c"), "k2": ("D", None), "k3": ("I", "revived")}
 
 
-def test_salted_fold_equivalent(events):
-    w = _winners(salted_fold_last_writer_wins(events, ["key"], num_salts=4))
-    assert w == {"k1": ("U", "c"), "k2": ("D", None), "k3": ("I", "revived")}
-
-
-def test_salted_fold_hot_key(spark):
+def test_fold_hot_key(spark):
     # one key with 10k updates (the hot-repo case) + a bystander
     hot = spark.range(10_000).select(
         F.lit("hot").alias("key"),
@@ -54,7 +46,7 @@ def test_salted_fold_hot_key(spark):
     cold = spark.createDataFrame(
         [("cold", 5, 1, "I", "c0")], ["key", "_sdc_lsn", "txid", "_action", "val"]
     )
-    folded = salted_fold_last_writer_wins(hot.unionByName(cold), ["key"], num_salts=8)
+    folded = fold_last_writer_wins_agg(hot.unionByName(cold), ["key"])
     w = _winners(folded)
     assert w["hot"] == ("U", "9999")
     assert w["cold"] == ("I", "c0")
@@ -66,4 +58,10 @@ def test_lsn_tie_broken_by_txid(spark):
         [("k", 10, 1, "I", "first"), ("k", 10, 2, "U", "second")],
         ["key", "_sdc_lsn", "txid", "_action", "val"],
     )
-    assert _winners(fold_last_writer_wins(df, ["key"]))["k"] == ("U", "second")
+    assert _winners(fold_last_writer_wins_agg(df, ["key"]))["k"] == ("U", "second")
+
+
+def test_fold_without_order_columns_keeps_one_row_per_key(events):
+    # no order column present: one arbitrary row per key survives
+    folded = fold_last_writer_wins_agg(events, ["key"], ("no_such_col",))
+    assert sorted(r["key"] for r in folded.collect()) == ["k1", "k2", "k3"]

@@ -102,61 +102,3 @@ def test_empty_stream_list_rejected(spark, tmp_path):
     # reference wal_reader.py:95-114 + test_wal_reader.py:235-247
     with pytest.raises(ValueError, match="at least one stream"):
         CdcPipeline(spark, [], {}, {}, StateStore(str(tmp_path / "s.json")))
-
-
-def test_concurrent_merges_match_sequential(spark, tmp_path):
-    """concurrent_merges>1 is a pure scheduling change: final state of
-    every table must equal the sequential pipeline's, exactly-once
-    replay included."""
-    from pyspark.sql import types as T
-
-    from tap_postgres_spark.lake import LakeTable
-    from tap_postgres_spark.modes.log_based import CdcPipeline
-    from tap_postgres_spark.schema import StreamDef, widen_for_cdc
-    from tap_postgres_spark.state import StateStore
-
-    base = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("v", T.StringType())]
-    )
-
-    def payload(action, table, id_, v):
-        cols = (
-            '"columns":[{"name":"id","type":"text","value":"%s"},'
-            '{"name":"v","type":"text","value":"%s"}]' % (id_, v)
-        )
-        return (
-            '{"action":"%s","schema":"public","table":"%s",%s}'
-            % (action, table, cols)
-        )
-
-    def build(mode_dir, conc):
-        streams = [StreamDef("public", t, base, ("id",)) for t in ("t_a", "t_b", "t_c")]
-        tables = {
-            s.fqn: LakeTable.create(
-                spark, str(tmp_path / mode_dir / s.table_name),
-                widen_for_cdc(base), ["id"], num_buckets=2,
-            )
-            for s in streams
-        }
-        pipe = CdcPipeline(
-            spark, streams,
-            {s.fqn: {"id": "text", "v": "text"} for s in streams},
-            tables, StateStore(str(tmp_path / mode_dir / "s.json")),
-            concurrent_merges=conc,
-        )
-        rows = [
-            (lsn, 1, payload("I", f"t_{'abc'[lsn % 3]}", f"k{lsn % 5}", f"v{lsn}"))
-            for lsn in range(1, 61)
-        ]
-        for half in (rows[:30], rows[30:]):
-            raw = spark.createDataFrame(half, "lsn long, txid long, payload string")
-            pipe.apply_batch(raw, epoch_id=f"e{half[0][0]}")
-        # crash-replay of the second batch must be a no-op
-        raw = spark.createDataFrame(rows[30:], "lsn long, txid long, payload string")
-        pipe.apply_batch(raw, epoch_id=f"e{rows[30][0]}")
-        return {
-            t: sorted(map(tuple, tbl.read().select("id", "v", "_sdc_lsn").collect()))
-            for t, tbl in tables.items()
-        }
-
-    assert build("seq", 1) == build("par", 3)

@@ -219,8 +219,7 @@ def _assert_partial_oracle(table, feed):
             assert g["stars"] == exp.get("stars"), key
 
 
-@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
-def test_toast_feed_matches_partial_oracle(spark, tmp_path, merge_mode):
+def test_toast_feed_matches_partial_oracle(spark, tmp_path):
     """Multi-batch replay of a feed where 40% of U events omit `content`
     (and the feed also evolves `stars` mid-stream): final state must be
     the per-column fold — content survives TOAST-omitting updates both
@@ -228,9 +227,7 @@ def test_toast_feed_matches_partial_oracle(spark, tmp_path, merge_mode):
     feed = generate_feed(
         FeedConfig(n_events=500, n_initial_paths=100, toast_omit_prob=0.4)
     )
-    pipeline, table, _ = make_pipeline(
-        spark, tmp_path, merge_mode=merge_mode, partial_updates=True
-    )
+    pipeline, table, _ = make_pipeline(spark, tmp_path, partial_updates=True)
     load_snapshot(spark, pipeline, table, feed, tmp_path)
     _replay(pipeline, spark, feed)
     _assert_partial_oracle(table, feed)

@@ -342,6 +342,20 @@ def test_neardup_clusters_small_graph_fast_path_matches_iterative(spark):
     assert f[5] == 1 and f[23] == 20 and f[41] == 40 and f[11] == 10
 
 
+def test_neardup_clusters_skip_null_endpoints(spark):
+    """A pair with a NULL endpoint is no edge: the union-find fast path
+    and the iterative path both drop it (no TypeError from comparing a
+    NULL root, no NULL-id component)."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 5)], "a long, b long"
+    )
+    fast = pipelineops.neardup_clusters(pairs)  # under the default gate
+    slow = pipelineops.neardup_clusters(pairs, small_graph_limit=0)
+    f = sorted(tuple(r) for r in fast.collect())
+    assert f == sorted(tuple(r) for r in slow.collect())
+    assert f == [(1, 1), (2, 1), (4, 4), (5, 4)]
+
+
 def test_pack_sequences_boundaries(spark):
     docs = spark.createDataFrame(
         [(i, "g", "w " * 10) for i in range(10)],  # 10 tokens each

@@ -70,8 +70,8 @@ def _spark(spark):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(sequence=ops, mode=st.sampled_from(["mor", "cow"]))
-def test_random_interleavings_converge_to_oracle(_spark, tmp_path_factory, sequence, mode):
+@given(sequence=ops)
+def test_random_interleavings_converge_to_oracle(_spark, tmp_path_factory, sequence):
     path = str(tmp_path_factory.mktemp("lake-prop") / "t")
     t = LakeTable.create(_spark, path, SCHEMA, ["repo", "path"], num_buckets=2)
     applied = []
@@ -105,7 +105,6 @@ def test_random_interleavings_converge_to_oracle(_spark, tmp_path_factory, seque
             t.merge_into(
                 _spark.createDataFrame(rows, _BATCH_SCHEMA),
                 epoch_id=f"e{epoch}",
-                mode=mode,
             )
             epoch += 1
     got = {

@@ -11,11 +11,7 @@ import json
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tap_postgres_spark.operators import (
-    fold_last_writer_wins,
-    fold_last_writer_wins_agg,
-    salted_fold_last_writer_wins,
-)
+from tap_postgres_spark.operators import fold_last_writer_wins_agg
 
 KEYS = ["k0", "k1", "k2"]
 
@@ -59,7 +55,4 @@ def spark_fold(spark, events, fold_fn):
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(events=events_strategy)
 def test_folds_match_oracle(spark, events):
-    exp = oracle(events)
-    for fn in (fold_last_writer_wins, fold_last_writer_wins_agg,
-               salted_fold_last_writer_wins):
-        assert spark_fold(spark, events, fn) == exp, fn.__name__
+    assert spark_fold(spark, events, fold_last_writer_wins_agg) == oracle(events)

@@ -1,8 +1,8 @@
 """Round-2 regression tests for the ADVICE.md findings:
 
-1. COW merge must resolve LWW-by-(lsn, gen) against the existing table —
+1. A merge must resolve LWW-by-(lsn, gen) against the existing table —
    an out-of-order lower-LSN replay batch must not overwrite or resurrect
-   newer rows (ADVICE: lake/table.py merge cow branch).
+   newer rows (ADVICE: lake/table.py merge).
 2. compact() must retain delete tombstones (the LSN evidence for
    order-independent reads) unless they are below the committed bookmark
    floor (ADVICE: lake/table.py compact).
@@ -57,52 +57,26 @@ def _state(table):
     }
 
 
-# ---------------------------------------------------------------- 1: COW LWW
-def test_cow_out_of_order_replay_does_not_resurrect_delete(spark, tmp_path):
+# ------------------------------------------------------- 1: out-of-order LWW
+def test_out_of_order_replay_does_not_resurrect_delete(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=2)
-    t.merge_into(_batch(spark, [("r", "p", "v1", 10, None)]), epoch_id="e1", mode="cow")
+    t.merge_into(_batch(spark, [("r", "p", "v1", 10, None)]), epoch_id="e1")
     t.merge_into(
         _batch(spark, [("r", "p", None, 100, "2024-01-01T00:00:00Z")]),
-        epoch_id="e2", mode="cow",
+        epoch_id="e2",
     )
     assert _state(t) == {}
     # crash-restart replays an OLDER batch (lsn 50 < delete at 100):
     # the tombstone must win — the row stays dead
-    t.merge_into(_batch(spark, [("r", "p", "stale", 50, None)]), epoch_id="e3", mode="cow")
+    t.merge_into(_batch(spark, [("r", "p", "stale", 50, None)]), epoch_id="e3")
     assert _state(t) == {}
 
 
-def test_cow_out_of_order_replay_does_not_regress_update(spark, tmp_path):
+def test_out_of_order_replay_does_not_regress_update(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=2)
-    t.merge_into(_batch(spark, [("r", "p", "new", 100, None)]), epoch_id="e1", mode="cow")
-    t.merge_into(_batch(spark, [("r", "p", "stale", 50, None)]), epoch_id="e2", mode="cow")
+    t.merge_into(_batch(spark, [("r", "p", "new", 100, None)]), epoch_id="e1")
+    t.merge_into(_batch(spark, [("r", "p", "stale", 50, None)]), epoch_id="e2")
     assert _state(t) == {("r", "p"): ("new", 100)}
-
-
-def test_cow_drops_settled_tombstones_with_floor(spark, tmp_path):
-    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=2)
-    t.merge_into(
-        _batch(spark, [("r", "dead", None, 100, "2024-01-01T00:00:00Z")]),
-        epoch_id="e1", mode="cow",
-    )
-    assert (
-        t.read(include_tombstones=True)
-        .filter(F.col("_sdc_deleted_at").isNotNull())
-        .count()
-        == 1
-    )
-    # floor advanced past the tombstone → a COW rewrite may reclaim it
-    t.merge_into(
-        _batch(spark, [("r", "dead", "x", 40, None)]),  # also out-of-order: loses
-        epoch_id="e2", mode="cow", drop_tombstones_below=200,
-    )
-    assert _state(t) == {}
-    assert (
-        t.read(include_tombstones=True)
-        .filter(F.col("_sdc_deleted_at").isNotNull())
-        .count()
-        == 0
-    )
 
 
 # ------------------------------------------------------- 2: compact tombstones

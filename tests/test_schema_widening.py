@@ -96,15 +96,14 @@ def _rows(table):
     }
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_widening_merge_end_to_end(spark, tmp_path, mode):
-    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA_INT,
+def test_widening_merge_end_to_end(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA_INT,
                          ["repo", "path"], num_buckets=4)
     t.merge_into(
         spark.createDataFrame(
             [("r1", "a", 10, 1.5, 100, None), ("r1", "b", 20, 2.5, 101, None)],
             _NARROW),
-        epoch_id="e1", mode=mode)
+        epoch_id="e1")
 
     # ALTER TYPE int→bigint / real→double: batch arrives wide, with a
     # value only a long can hold
@@ -113,7 +112,7 @@ def test_widening_merge_end_to_end(spark, tmp_path, mode):
         spark.createDataFrame(
             [("r1", "a", big, 3.25, 200, None), ("r2", "c", 30, 4.5, 201, None)],
             _WIDE),
-        epoch_id="e2", mode=mode)
+        epoch_id="e2")
 
     head = {f.name: f.dataType for f in t.schema.fields}
     assert head["size"] == T.LongType() and head["score"] == T.DoubleType()
@@ -127,7 +126,7 @@ def test_widening_merge_end_to_end(spark, tmp_path, mode):
     # a LATER narrow batch (straggler producer) casts up, never narrows
     t.merge_into(
         spark.createDataFrame([("r1", "b", 21, 2.0, 300, None)], _NARROW),
-        epoch_id="e3", mode=mode)
+        epoch_id="e3")
     assert _rows(t)[("r1", "b")] == (21, 2.0, 300)
     assert {f.name: f.dataType for f in t.schema.fields}["size"] == T.LongType()
 

@@ -241,36 +241,6 @@ def test_chargram_sketch_alignment_robust(spark):
     assert len(sk[1] & sk[3]) == 0
 
 
-def test_chargram_sketch_rolling_matches_reference_and_contract(spark):
-    """Rolling-hash variant: exact agreement with a pure-python reference
-    of the same polynomial, plus the insert-robust overlap contract."""
-    base = "the quick brown fox jumps over the lazy dog while birds sing in the trees"
-    shifted = "PREFIX " + base
-    other = "completely different material with no overlap at all in any region here"
-    df = spark.createDataFrame(
-        [(1, base), (2, shifted), (3, other)], ["doc_id", "text"]
-    )
-    got = {
-        r["doc_id"]: list(r["sketch"])
-        for r in textops.chargram_sketch_rolling(df, k=5, sketch_size=8).collect()
-    }
-
-    def ref(text, k=5, size=8):
-        b = text.encode("utf-8")
-        if len(b) < k:
-            b = b + bytes(k - len(b))
-        hs = {
-            sum(b[i + j] * pow(textops.ROLLING_B, k - 1 - j, textops.ROLLING_M)
-                for j in range(k)) % textops.ROLLING_M
-            for i in range(len(b) - k + 1)
-        }
-        return sorted(hs)[:size]
-
-    assert got[1] == ref(base) and got[3] == ref(other)
-    assert len(set(got[1]) & set(got[2])) >= 6  # insert-robust
-    assert len(set(got[1]) & set(got[3])) == 0
-
-
 def test_probe_index_hot_bucket_cap_and_plan(spark):
     """probe_minhash_index's cap: a degenerate corpus bucket (many
     identical docs) is excluded from the pair join, its rows never

@@ -103,7 +103,6 @@ def main() -> None:
         StateStore(state_path),
         metrics_dir=os.path.join(work, "metrics"),
         detect_evolution=True,
-        merge_mode="mor",
         dead_letter_dir=os.path.join(work, "dead-letter"),
         # Tightened maintenance cadence so the drill CROSSES the full
         # policy cycle (tiered folds -> periodic FULL pass -> retention +

@@ -96,7 +96,7 @@ def main() -> None:
         spark, [stream],
         {"public.source_code_repos": {c: "text" for c in schema.names}},
         {"public.source_code_repos": table},
-        StateStore(state), merge_mode="mor",
+        StateStore(state),
     )
     files = sorted(f for f in os.listdir(feed_dir) if f.endswith(".parquet"))
     t0 = time.time()
