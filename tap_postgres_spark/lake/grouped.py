@@ -16,15 +16,18 @@ The fused plan removes both multipliers:
 1. ONE decode projection over the union of the streams' column sets
    (``decode.decode_projection_multi``) — a wal2json event only carries
    its own table's columns, so foreign columns decode to NULL naturally;
-2. ONE LWW fold: ``groupBy(__gidx, to_json(struct(stream keys)))`` with
-   ``max_by(payload, (lsn, txid))`` — per-stream key semantics inside a
-   single map-side-combined shuffle;
-3. per-stream ``_sdc_gen`` / ``_bucket`` as CASE expressions, one
+2. per-stream ``_bucket`` as a CASE expression and ONE
    ``repartition(max_buckets, __gidx, _bucket)`` (the same one-task-per-
-   bucket write shape the per-stream path buys with N repartitions), and
-   ONE ``partitionBy(__gidx, _bucket)`` write into staging — AQE is
-   disabled for just this action because it would decompose the job into
-   ~2 serial waves of query-stage materialization jobs (measured);
+   bucket write shape the per-stream path buys with N repartitions);
+3. ONE LWW fold after that exchange, needing none of its own:
+   ``groupBy(__gidx, _bucket, to_json(struct(stream keys)))`` with
+   ``max_by(payload, (lsn, txid))`` — per-stream key semantics — then
+   ``_sdc_gen`` as a CASE and ONE ``partitionBy(__gidx, _bucket)`` write
+   into staging.  AQE is disabled for just this action, on the batch's
+   own session (in streaming, the query's clone), because it would
+   decompose the job into serial waves of query-stage materialization
+   jobs (measured).  The fold's Columns are memoized per stream layout,
+   so an epoch builds only its ``_sdc_gen`` literal;
 4. each table's ``__gidx=i`` slice renames into the table's own
    ``data/v{N}-…`` dir and commits driver-side through the same
    ``_commit_delta`` tail ``merge_into`` uses — footer-stat watermarks,
@@ -48,6 +51,7 @@ per-stream merges.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid
@@ -60,15 +64,16 @@ from pyspark.sql import types as T
 
 from ..decode import STATUS_OK, decode_projection_multi
 from ..operators.lww import fold_last_writer_wins_agg
+from ..plancache import memo
 from ..schema import SDC_DELETED_AT, SDC_LSN, merge_schemas
 from .table import _BUCKET, SDC_GEN, LakeTable
 
 _GIDX = "__gidx"
+_AQE = "spark.sql.adaptive.enabled"
 
 
 @dataclass
 class FusedPlan:
-    spark: SparkSession
     projected: DataFrame          # decode_projection_multi output
     union_fields: list            # StructField list (data columns)
     live: list[dict]              # per uncommitted stream: plan facts
@@ -78,7 +83,6 @@ class FusedPlan:
 
 
 def prepare_grouped_fused(
-    spark: SparkSession,
     classified: DataFrame,
     streams: list,
     pg_types_by_fqn: dict[str, dict[str, str]],
@@ -153,7 +157,91 @@ def prepare_grouped_fused(
                 "new_schema": new_schema,
             }
         )
-    return FusedPlan(spark, projected, union_fields, live, skipped, staging_root)
+    return FusedPlan(projected, union_fields, live, skipped, staging_root)
+
+
+@contextlib.contextmanager
+def _aqe_off(df: DataFrame):
+    """AQE off on ``df``'s own session for the duration of one write.
+
+    AQE would decompose a fused write into serial waves of query-stage
+    materialization jobs (measured 18 jobs / 2 waves at 8 streams, 3
+    jobs for a small tail epoch); nothing here needs it — the write
+    width is explicit and the deltas are small.  The session must be
+    the DataFrame's: inside a streaming ``foreachBatch`` that is the
+    query's cloned session, so toggling the pipeline's session instead
+    left AQE on for the write and flipped it under concurrent readers.
+    """
+    conf = df.sparkSession.conf
+    prev = conf.get(_AQE, "true")
+    conf.set(_AQE, "false")
+    try:
+        yield
+    finally:
+        conf.set(_AQE, prev)
+
+
+def _fused_skeleton(live: list[dict], data_cols: tuple[str, ...]) -> tuple:
+    """The fused fold's epoch-invariant Columns, memoized per stream
+    layout (plancache.py): bucket id, write partitioning, grouping keys,
+    the LWW winner and its unpacking.  Rebuilt per epoch they cost
+    ~1,700 py4j round trips at 8 streams."""
+    layout = tuple(
+        (
+            p["idx"],
+            tuple(p["key_columns"]),
+            int(p["meta"]["num_buckets"]),
+            p["table"]._bucket_fn(p["meta"]),
+        )
+        for p in live
+    )
+
+    def build():
+        gidx = F.col(_GIDX)
+        # to_json(struct(keys)) is collision-free per stream and lets
+        # streams with different key column sets share one grouping
+        key_repr = F.lit(None).cast("string")
+        bucket = F.lit(None).cast("int")
+        for p, (idx, keys, n_buckets, fn) in zip(live, layout):
+            hit = gidx == idx
+            key_repr = F.when(hit, F.to_json(F.struct(*keys))).otherwise(key_repr)
+            bucket = F.when(
+                hit, p["table"]._bucket_expr(keys, n_buckets, fn)
+            ).otherwise(bucket)
+        payload = F.struct(*data_cols)
+        order = F.struct(F.col(SDC_LSN), F.col("txid"))
+        part_cols = [gidx, F.col(_BUCKET)]
+        return (
+            bucket,
+            part_cols,
+            [*part_cols, key_repr.alias("__key")],
+            F.max_by(payload, order).alias("_w"),
+            F.col("_w.*"),
+        )
+
+    return memo(("fused_skeleton", layout, data_cols), build)
+
+
+def _fused_filter(live: list[dict]):
+    """Routing + per-stream bookmark floor (finish_decode semantics),
+    restricted to streams whose epoch isn't already committed; memoized
+    by the live set and the floors' values, which change only when a
+    bookmark advances."""
+    live_idx = tuple(p["idx"] for p in live)
+    floors = tuple(
+        (p["idx"], int(p["floor"])) for p in live if p["floor"] is not None
+    )
+
+    def build():
+        cond = (F.col("__status") == STATUS_OK) & F.col(_GIDX).isin(
+            list(live_idx)
+        )
+        if not floors:
+            return cond
+        whens = " ".join(f"WHEN {i} THEN {SDC_LSN} >= {f}" for i, f in floors)
+        return cond & F.expr(f"CASE {_GIDX} {whens} ELSE true END")
+
+    return memo(("fused_filter", live_idx, floors), build)
 
 
 def execute_grouped_fused(
@@ -165,78 +253,37 @@ def execute_grouped_fused(
     if not plan.live:
         return results
     df = projected if projected is not None else plan.projected
-    spark = plan.spark
-
-    # routing + per-stream bookmark floor (finish_decode semantics),
-    # restricted to streams whose epoch isn't already committed
-    live_idx = [p["idx"] for p in plan.live]
-    cond = (F.col("__status") == STATUS_OK) & F.col(_GIDX).isin(live_idx)
-    floor_pred = F.lit(True)
-    for p in plan.live:
-        if p["floor"] is not None:
-            floor_pred = F.when(
-                F.col(_GIDX) == p["idx"],
-                F.col(SDC_LSN) >= F.lit(int(p["floor"])),
-            ).otherwise(floor_pred)
-    df = df.filter(cond & floor_pred)
-
-    # ONE LWW fold for all streams: group by (stream, that stream's key
-    # tuple).  to_json(struct(keys)) is collision-free per stream and
-    # lets streams with different key column sets share the exchange.
-    key_repr = F.lit(None).cast("string")
-    for p in plan.live:
-        key_repr = F.when(
-            F.col(_GIDX) == p["idx"],
-            F.to_json(F.struct(*[F.col(c) for c in p["key_columns"]])),
-        ).otherwise(key_repr)
-    data_cols = [f.name for f in plan.union_fields] + [SDC_LSN, SDC_DELETED_AT]
-    payload = F.struct(*[F.col(c) for c in data_cols])
-    order = F.struct(F.col(SDC_LSN), F.col("txid"))
-    folded = (
-        df.groupBy(F.col(_GIDX), key_repr.alias("__key"))
-        .agg(F.max_by(payload, order).alias("_w"))
-        .select(_GIDX, "_w.*")
+    data_cols = (*(f.name for f in plan.union_fields), SDC_LSN, SDC_DELETED_AT)
+    bucket, part_cols, group_cols, winner, unpacked = _fused_skeleton(
+        plan.live, data_cols
     )
-
-    # per-stream commit generation + bucket id as CASE expressions
-    gen = F.lit(None).cast("long")
-    bucket = F.lit(None).cast("int")
-    for p in plan.live:
-        gen = F.when(
-            F.col(_GIDX) == p["idx"], F.lit(p["new_version"])
-        ).otherwise(gen)
-        bucket = F.when(
-            F.col(_GIDX) == p["idx"],
-            p["table"]._bucket_expr(
-                p["key_columns"],
-                p["meta"]["num_buckets"],
-                p["table"]._bucket_fn(p["meta"]),
-            ),
-        ).otherwise(bucket)
-    out = folded.select(
-        *data_cols, gen.cast("long").alias(SDC_GEN), F.col(_GIDX),
-        bucket.alias(_BUCKET),
-    )
+    # the per-stream commit generation is the only per-epoch literal:
+    # one CASE from ints
+    whens = " ".join(f"WHEN {p['idx']} THEN {p['new_version']}" for p in plan.live)
+    gen = F.expr(f"CAST(CASE {_GIDX} {whens} END AS BIGINT) AS {SDC_GEN}")
+    # ONE exchange serves both the LWW fold and the write: the bucket
+    # is a function of the key, so hash-partitioning on (stream, bucket)
+    # clusters every (stream, key) group and the fold needs no shuffle
+    # of its own; the sort-based fold's output order (stream, bucket,
+    # key) is the order the partitioned write needs
     width = max(int(p["meta"]["num_buckets"]) for p in plan.live)
-    out = out.repartition(width, F.col(_GIDX), F.col(_BUCKET))
+    out = (
+        df.filter(_fused_filter(plan.live))
+        .withColumn(_BUCKET, bucket)
+        .repartition(width, *part_cols)
+        .groupBy(*group_cols)
+        .agg(winner)
+        .select(unpacked, gen, *part_cols)
+    )
 
     staging = os.path.join(
         plan.staging_root, f"grouped-{uuid.uuid4().hex[:12]}"
     )
     try:
-        # AQE off for just this action: it would decompose the single
-        # job into serial waves of query-stage materialization jobs
-        # (measured 18 jobs / 2 waves at 8 streams); nothing here needs
-        # it — the write width is explicit, batch deltas are small
-        aqe_key = "spark.sql.adaptive.enabled"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
+        with _aqe_off(out):
             out.write.mode("errorifexists").partitionBy(_GIDX, _BUCKET).parquet(
                 staging
             )
-        finally:
-            spark.conf.set(aqe_key, prev_aqe)
         for p in plan.live:
             table: LakeTable = p["table"]
             meta = p["meta"]
@@ -303,6 +350,7 @@ def compact_grouped(
 
     Tables whose column names collide at different types fall back to
     their own ``compact()`` call (same result, one extra job each).
+    ``spark`` is not used: the write runs on the tables' own session.
     """
     results: dict[str, dict[str, Any]] = {}
     prepared: list[dict] = []
@@ -381,15 +429,10 @@ def compact_grouped(
         f"compact-{uuid.uuid4().hex[:12]}",
     )
     try:
-        aqe_key = "spark.sql.adaptive.enabled"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
+        with _aqe_off(union):
             union.write.mode("errorifexists").partitionBy(_GIDX, _BUCKET).parquet(
                 staging
             )
-        finally:
-            spark.conf.set(aqe_key, prev_aqe)
         for p in prepared:
             table: LakeTable = p["table"]
             meta, todo, current = p["meta"], p["todo"], p["current"]

@@ -349,7 +349,8 @@ class CdcPipeline:
             )
             out_dir = buf.stage_dir(epoch_id)
             deferred.write.mode("overwrite").parquet(out_dir)
-            n_def, min_lsn = int(obs.get["n"]), obs.get["lo"]
+            obs_row = obs.get  # one read: each is a few py4j round trips
+            n_def, min_lsn = int(obs_row["n"]), obs_row["lo"]
             if not n_def:
                 import shutil
 
@@ -401,7 +402,6 @@ class CdcPipeline:
             from ..lake.grouped import prepare_grouped_fused
 
             fused_plan = prepare_grouped_fused(
-                self.spark,
                 classified,
                 list(self.streams.values()),
                 self.pg_types,
@@ -524,8 +524,10 @@ class CdcPipeline:
                 results[fqn]["partial"] = info
                 pfolded.unpersist()
 
-            metrics = {k: (v if v is not None else 0) for k, v in obs.get.items()}
-            max_lsn_seen = obs.get["max_lsn"]
+            # one read: each Observation.get is a few py4j round trips
+            obs_row = obs.get
+            metrics = {k: (v if v is not None else 0) for k, v in obs_row.items()}
+            max_lsn_seen = obs_row["max_lsn"]
             metrics_rows = [
                 {"_fqn": None, "_status": s, "n": metrics[f"status.{s}"]}
                 for s in _GLOBAL_STATUSES
@@ -571,7 +573,7 @@ class CdcPipeline:
             for fqn, stream in list(self.streams.items()):
                 if not self.detect_evolution:
                     continue
-                width = obs.get.get(f"cols.{fqn}")
+                width = obs_row.get(f"cols.{fqn}")
                 # __ncols counts the event's DATA columns; a CDC-widened
                 # StreamDef (catalog.discover_lake_table) also carries the
                 # _sdc_lsn/_sdc_deleted_at system columns, which must not
@@ -587,7 +589,7 @@ class CdcPipeline:
                 width_fired = width is not None and width > data_width
                 # type widening (ALTER COLUMN TYPE) never changes the
                 # width; its trigger is the value-level overflow probe
-                overflow_fired = bool(obs.get.get(f"overflow.{fqn}"))
+                overflow_fired = bool(obs_row.get(f"overflow.{fqn}"))
                 if not (width_fired or overflow_fired):
                     continue
                 new_cols, retyped = self._discover_evolution(

@@ -73,6 +73,13 @@ def get_spark(
         # survive arbitrary upstream values, like the reference's
         # per-value coercion layer (client.py:596-624)
         .config("spark.sql.ansi.enabled", "false")
+        # no per-Column call-site capture: PySpark 4 wraps every Column
+        # function to record its Python call site (getActiveSession, a
+        # conf read, origin set and clear: ~4 py4j round trips each), about
+        # 0.8 s of plan building in an 8-stream tail epoch.  Trade-off:
+        # DataFrame errors no longer name the Python line that built the
+        # failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory",

@@ -11,12 +11,14 @@ conflicting types) fall back to the per-stream path transparently.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import types as T
 
 from tap_postgres_spark.decode import classify, parse_raw_payloads
 from tap_postgres_spark.lake import LakeTable
+from tap_postgres_spark.lake.table import SDC_GEN
 from tap_postgres_spark.lake.grouped import (
     execute_grouped_fused,
     prepare_grouped_fused,
@@ -151,7 +153,7 @@ def test_fused_partial_commit_replay(spark, tmp_path):
 
     def plan():
         return prepare_grouped_fused(
-            spark, cls, [sa_def, sb_def],
+            cls, [sa_def, sb_def],
             {f: {"id": "text"} for f in tables}, tables,
             {f: "e5" for f in tables}, {f: None for f in tables},
             staging_root=str(tmp_path / "stage"),
@@ -188,7 +190,7 @@ def test_fused_type_conflict_returns_none_and_pipeline_falls_back(
     )
     assert (
         prepare_grouped_fused(
-            spark, cls, [sa_def, sb_def],
+            cls, [sa_def, sb_def],
             {"public.t_a": {"id": "text", "v": "text"},
              "public.t_b": {"id": "text", "v": "int8"}},
             tables2, {f: "e0" for f in tables2}, {f: None for f in tables2},
@@ -270,3 +272,111 @@ def test_compact_grouped_matches_per_table(spark, tmp_path):
     # nothing left to compact → per-table skipped markers
     res2 = compact_grouped(spark, grouped, max_delta_depth=1)
     assert all(r["skipped"] for r in res2.values())
+
+
+def _two_tables(spark, tmp_path):
+    defs = [
+        StreamDef("public", "t_a", _schema("id", "v"), ("id",)),
+        StreamDef("public", "t_b", _schema("id", "w"), ("id",)),
+    ]
+    tables = {
+        s.fqn: LakeTable.create(
+            spark, str(tmp_path / s.table_name),
+            widen_for_cdc(s.spark_schema), ["id"], num_buckets=2,
+        )
+        for s in defs
+    }
+    return defs, tables
+
+
+def _fused_epoch(session, defs, tables, rows, epoch, floors, stage):
+    cls = _classified(session, rows, list(tables))
+    plan = prepare_grouped_fused(
+        cls, defs, {f: {"id": "text"} for f in tables}, tables,
+        {f: f"{epoch}:{f}" for f in tables}, floors, staging_root=stage,
+    )
+    return execute_grouped_fused(plan)
+
+
+def test_fused_write_is_one_job_on_the_dataframes_session(spark, tmp_path):
+    """The batch of a streaming foreachBatch lives on the query's cloned
+    session: AQE must go off THERE (one job, not AQE's stage jobs), and
+    neither session's setting may change."""
+    aqe = "spark.sql.adaptive.enabled"
+    clone = spark.newSession()
+    before = (spark.conf.get(aqe), clone.conf.get(aqe))
+    defs, tables = _two_tables(spark, tmp_path)
+    rows = [
+        (10, 1, _payload("I", "t_a", id="a1", v="x")),
+        (11, 1, _payload("I", "t_b", id="b1", w="y")),
+        (12, 2, _payload("U", "t_a", id="a1", v="x2")),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("fused-one-job", "fused write")
+    try:
+        res = _fused_epoch(
+            clone, defs, tables, rows, "e0", {f: None for f in tables},
+            str(tmp_path / "stage"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fused-one-job")) == 1
+    assert (spark.conf.get(aqe), clone.conf.get(aqe)) == before
+    assert [r["rows_written"] for r in res.values()] == [1, 1]
+
+
+def test_fused_memo_hits_and_per_epoch_literals_stay_live(spark, tmp_path):
+    """A second epoch of the same layout builds no new memoized plan
+    pieces; the per-epoch literals still follow each epoch: every
+    table's new delta carries its own committed version as _sdc_gen,
+    and an advanced bookmark floor filters that table's older events."""
+    from tap_postgres_spark import plancache
+
+    defs, tables = _two_tables(spark, tmp_path)
+    ta, tb = tables["public.t_a"], tables["public.t_b"]
+    # put the tables at different versions, so a shared or stale _sdc_gen
+    # literal shows
+    ta.merge_into(_decoded(spark, [("a0", "v0", 1, None)], ["v"]), epoch_id="pre")
+    stage = str(tmp_path / "stage")
+    no_floor = {f: None for f in tables}
+
+    def new_gens(table, version):
+        old = {d for dl in table.buckets_map(version - 1).values() for d in dl}
+        new = [
+            os.path.join(table.path, d)
+            for dl in table.buckets_map(version).values()
+            for d in dl
+            if d not in old
+        ]
+        return {r[0] for r in spark.read.parquet(*new).select(SDC_GEN).collect()}
+
+    _fused_epoch(spark, defs, tables, [
+        (10, 1, _payload("I", "t_a", id="a1", v="x")),
+        (11, 1, _payload("I", "t_b", id="b1", w="y")),
+    ], "e1", no_floor, stage)
+    n_entries = len(plancache._cache)
+    res = _fused_epoch(spark, defs, tables, [
+        (20, 2, _payload("I", "t_a", id="a2", v="m")),
+        (21, 2, _payload("U", "t_b", id="b1", w="y2")),
+    ], "e2", no_floor, stage)
+    assert len(plancache._cache) == n_entries  # same layout: all hits
+    versions = {f: r["version"] for f, r in res.items()}
+    assert versions["public.t_a"] == versions["public.t_b"] + 1
+    for fqn, v in versions.items():
+        assert new_gens(tables[fqn], v) == {v}
+
+    # t_a's floor advances past LSN 30: its older event must not apply
+    res = _fused_epoch(spark, defs, tables, [
+        (25, 3, _payload("U", "t_a", id="a1", v="stale")),
+        (31, 3, _payload("U", "t_a", id="a2", v="fresh")),
+        (26, 3, _payload("U", "t_b", id="b1", w="kept")),
+    ], "e3", {"public.t_a": 30, "public.t_b": None}, stage)
+    assert res["public.t_a"]["rows_written"] == 1
+    assert sorted(map(tuple, ta.read().select("id", "v").collect())) == [
+        ("a0", "v0"), ("a1", "x"), ("a2", "fresh"),
+    ]
+    assert [tuple(r) for r in tb.read().select("id", "w").collect()] == [
+        ("b1", "kept")
+    ]
+    for fqn, r in res.items():
+        assert new_gens(tables[fqn], r["version"]) == {r["version"]}

@@ -110,7 +110,7 @@ def _fused(spark, tables, events_a, events_b, epoch, staging):
                                               **{col: f"{col}{lsn}"})))
     raw = spark.createDataFrame(rows, "lsn long, txid long, payload string")
     plan = prepare_grouped_fused(
-        spark, classify(parse_raw_payloads(raw), list(tables)), [A_DEF, B_DEF],
+        classify(parse_raw_payloads(raw), list(tables)), [A_DEF, B_DEF],
         {f: {"id": "text", "v": "text", "w": "text"} for f in tables}, tables,
         {f: epoch for f in tables}, {f: None for f in tables},
         staging_root=staging,
