@@ -16,18 +16,18 @@ The fused plan removes both multipliers:
 1. ONE decode projection over the union of the streams' column sets
    (``decode.decode_projection_multi``) — a wal2json event only carries
    its own table's columns, so foreign columns decode to NULL naturally;
-2. per-stream ``_bucket`` as a CASE expression and ONE
+2. ONE LWW fold: ``groupBy(__gidx, to_json(struct(stream keys)))`` with
+   ``max_by(payload, (lsn, txid))`` — per-stream key semantics inside a
+   single map-side-combined shuffle;
+3. per-stream ``_sdc_gen`` / ``_bucket`` as CASE expressions, one
    ``repartition(max_buckets, __gidx, _bucket)`` (the same one-task-per-
-   bucket write shape the per-stream path buys with N repartitions);
-3. ONE LWW fold after that exchange, needing none of its own:
-   ``groupBy(__gidx, _bucket, to_json(struct(stream keys)))`` with
-   ``max_by(payload, (lsn, txid))`` — per-stream key semantics — then
-   ``_sdc_gen`` as a CASE and ONE ``partitionBy(__gidx, _bucket)`` write
-   into staging.  AQE is disabled for just this action, on the batch's
-   own session (in streaming, the query's clone), because it would
-   decompose the job into serial waves of query-stage materialization
-   jobs (measured).  The fold's Columns are memoized per stream layout,
-   so an epoch builds only its ``_sdc_gen`` literal;
+   bucket write shape the per-stream path buys with N repartitions), and
+   ONE ``partitionBy(__gidx, _bucket)`` write into staging.  AQE is
+   disabled for just this action, on the batch's own session (in
+   streaming, the query's clone), because it would decompose the job
+   into serial waves of query-stage materialization jobs (measured).
+   The fold's Columns are memoized per stream layout, so an epoch
+   builds only its ``_sdc_gen`` literal;
 4. each table's ``__gidx=i`` slice renames into the table's own
    ``data/v{N}-…`` dir and commits driver-side through the same
    ``_commit_delta`` tail ``merge_into`` uses — footer-stat watermarks,
@@ -168,9 +168,12 @@ def _aqe_off(df: DataFrame):
     materialization jobs (measured 18 jobs / 2 waves at 8 streams, 3
     jobs for a small tail epoch); nothing here needs it — the write
     width is explicit and the deltas are small.  The session must be
-    the DataFrame's: inside a streaming ``foreachBatch`` that is the
-    query's cloned session, so toggling the pipeline's session instead
-    left AQE on for the write and flipped it under concurrent readers.
+    the DataFrame's: a fused write inside a streaming ``foreachBatch``
+    runs on the query's cloned session, so toggling the pipeline's
+    session instead left AQE on for the write and flipped it under
+    concurrent readers.  Grouped compaction's union is built from the
+    tables' own session, the one readers share, so compaction still
+    flips AQE under them.
     """
     conf = df.sparkSession.conf
     prev = conf.get(_AQE, "true")
@@ -183,9 +186,9 @@ def _aqe_off(df: DataFrame):
 
 def _fused_skeleton(live: list[dict], data_cols: tuple[str, ...]) -> tuple:
     """The fused fold's epoch-invariant Columns, memoized per stream
-    layout (plancache.py): bucket id, write partitioning, grouping keys,
-    the LWW winner and its unpacking.  Rebuilt per epoch they cost
-    ~1,700 py4j round trips at 8 streams."""
+    layout (plancache.py): grouping keys, the LWW winner and its
+    unpacking, bucket id and write partitioning.  Rebuilt per epoch
+    they cost ~1,700 py4j round trips at 8 streams."""
     layout = tuple(
         (
             p["idx"],
@@ -199,7 +202,7 @@ def _fused_skeleton(live: list[dict], data_cols: tuple[str, ...]) -> tuple:
     def build():
         gidx = F.col(_GIDX)
         # to_json(struct(keys)) is collision-free per stream and lets
-        # streams with different key column sets share one grouping
+        # streams with different key column sets share the exchange
         key_repr = F.lit(None).cast("string")
         bucket = F.lit(None).cast("int")
         for p, (idx, keys, n_buckets, fn) in zip(live, layout):
@@ -210,13 +213,12 @@ def _fused_skeleton(live: list[dict], data_cols: tuple[str, ...]) -> tuple:
             ).otherwise(bucket)
         payload = F.struct(*data_cols)
         order = F.struct(F.col(SDC_LSN), F.col("txid"))
-        part_cols = [gidx, F.col(_BUCKET)]
         return (
-            bucket,
-            part_cols,
-            [*part_cols, key_repr.alias("__key")],
+            [gidx, key_repr.alias("__key")],
             F.max_by(payload, order).alias("_w"),
-            F.col("_w.*"),
+            [gidx, F.col("_w.*")],
+            bucket,
+            [gidx, F.col(_BUCKET)],
         )
 
     return memo(("fused_skeleton", layout, data_cols), build)
@@ -254,26 +256,22 @@ def execute_grouped_fused(
         return results
     df = projected if projected is not None else plan.projected
     data_cols = (*(f.name for f in plan.union_fields), SDC_LSN, SDC_DELETED_AT)
-    bucket, part_cols, group_cols, winner, unpacked = _fused_skeleton(
+    group_cols, winner, unpacked, bucket, part_cols = _fused_skeleton(
         plan.live, data_cols
     )
     # the per-stream commit generation is the only per-epoch literal:
     # one CASE from ints
     whens = " ".join(f"WHEN {p['idx']} THEN {p['new_version']}" for p in plan.live)
-    gen = F.expr(f"CAST(CASE {_GIDX} {whens} END AS BIGINT) AS {SDC_GEN}")
-    # ONE exchange serves both the LWW fold and the write: the bucket
-    # is a function of the key, so hash-partitioning on (stream, bucket)
-    # clusters every (stream, key) group and the fold needs no shuffle
-    # of its own; the sort-based fold's output order (stream, bucket,
-    # key) is the order the partitioned write needs
+    gen = F.expr(f"CAST(CASE {_GIDX} {whens} END AS BIGINT)")
     width = max(int(p["meta"]["num_buckets"]) for p in plan.live)
     out = (
         df.filter(_fused_filter(plan.live))
-        .withColumn(_BUCKET, bucket)
-        .repartition(width, *part_cols)
         .groupBy(*group_cols)
         .agg(winner)
-        .select(unpacked, gen, *part_cols)
+        .select(*unpacked)
+        .withColumn(SDC_GEN, gen)
+        .withColumn(_BUCKET, bucket)
+        .repartition(width, *part_cols)
     )
 
     staging = os.path.join(
@@ -350,7 +348,8 @@ def compact_grouped(
 
     Tables whose column names collide at different types fall back to
     their own ``compact()`` call (same result, one extra job each).
-    ``spark`` is not used: the write runs on the tables' own session.
+    ``spark`` is not used: the write runs on the tables' own session
+    (ROADMAP lists its removal with the callers).
     """
     results: dict[str, dict[str, Any]] = {}
     prepared: list[dict] = []
