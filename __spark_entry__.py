@@ -1143,22 +1143,29 @@ def _emb_lookup(sf_dir: str, vec_ids: list[int]) -> dict[int, list[float]] | Non
 def _emb_lowest(sf_dir: str, k: int) -> list[tuple[int, list[float]]] | None:
     """The k lowest-id (vec_id, embedding) rows straight off parquet —
     exactly what ``orderBy(vec_id).limit(k).collect()`` returns, without
-    the TakeOrdered job.  None on any surprise (caller falls back)."""
+    the TakeOrdered job.  Only the ``vec_id`` column is read in full; the
+    k embeddings come through the row-group-pruned :func:`_emb_lookup`.
+    None on any surprise, duplicate ids included (caller falls back)."""
+    import heapq
+
     import pyarrow.parquet as pq
 
     files = _input_files(f"{sf_dir}/embeddings.parquet")
     if not files:
         return None
     try:
-        rows: list[tuple[int, list[float]]] = []
-        for fp in files:
-            t = pq.read_table(fp, columns=["vec_id", "embedding"])
-            rows.extend(
-                (int(i), [float(x) for x in v])
-                for i, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-            )
-        rows.sort(key=lambda r: r[0])
-        return rows[:k] if len(rows) >= k else None
+        ids = heapq.nsmallest(
+            k,
+            (
+                int(i)
+                for fp in files
+                for i in pq.read_table(fp, columns=["vec_id"])["vec_id"].to_pylist()
+            ),
+        )
+        if len(set(ids)) != k:
+            return None
+        hit = _emb_lookup(sf_dir, ids)
+        return None if hit is None else [(i, hit[i]) for i in ids]
     except Exception:
         return None
 

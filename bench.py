@@ -213,7 +213,7 @@ def bench_cdc_replay(spark, sf: float, work_dir: str, n_batches: int) -> dict:
             # fold every table's delta tier in ONE job (lake/grouped.py)
             from tap_postgres_spark.lake.grouped import compact_grouped
 
-            compact_grouped(spark, tables, max_delta_depth=1)
+            compact_grouped(spark, tables)
         else:
             for t in tables.values():
                 t.compact(max_delta_depth=1, include_base=False)

@@ -173,13 +173,6 @@ def parse_bytea_hex(value: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F6 — numeric empty-string → NULL (reference client.py:49,621-623:
-# wal2json renders some numerics as "" which must become NULL).
-def coerce_numeric_empty(value: Column, is_numeric_type: Column) -> Column:
-    return F.when(is_numeric_type & (value == ""), F.lit(None)).otherwise(value)
-
-
-# ---------------------------------------------------------------------------
 # F1 — deleted-at timestamp: UTC ISO-8601 `%Y-%m-%dT%H:%M:%SZ`
 # (reference client.py:52-54, asserted tests/test_consume.py:95-109).
 # Per-batch constant, not a per-row clock — every delete in a micro-batch

@@ -28,13 +28,15 @@ The fused plan removes both multipliers:
    into serial waves of query-stage materialization jobs (measured).
    The fold's Columns are memoized per stream layout, so an epoch
    builds only its ``_sdc_gen`` literal;
-4. each table's ``__gidx=i`` slice renames into the table's own
-   ``data/v{N}-…`` dir and commits driver-side through the same
-   ``_commit_delta`` tail ``merge_into`` uses — footer-stat watermarks,
-   lineage, epoch dedup, optimistic lock, so crash-replay semantics are
-   IDENTICAL: a partially-committed grouped epoch replays with the
-   already-committed streams excluded from the union and only the rest
-   written.
+4. ``_write_slices`` renames each table's ``__gidx=i`` slice into the
+   table's own ``data/v{N}-…`` dir and commits it driver-side through
+   the same ``_commit_delta`` tail ``merge_into`` uses — footer-stat
+   watermarks, lineage, epoch dedup, optimistic lock, so crash-replay
+   semantics are IDENTICAL: a partially-committed grouped epoch replays
+   with the already-committed streams excluded from the union and only
+   the rest written.  Grouped compaction (``compact_grouped``) writes
+   through the same ``_write_slices``, with ``LakeTable.compact``'s own
+   plan and commit per table.
 
 Files written this way carry the UNION of the streams' columns; a
 table's reads are unaffected because the lake layer always reads with
@@ -56,14 +58,13 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..decode import STATUS_OK, decode_projection_multi
-from ..operators.lww import fold_last_writer_wins_agg
 from ..plancache import memo
 from ..schema import SDC_DELETED_AT, SDC_LSN, merge_schemas
 from .table import _BUCKET, SDC_GEN, LakeTable
@@ -171,9 +172,8 @@ def _aqe_off(df: DataFrame):
     the DataFrame's: a fused write inside a streaming ``foreachBatch``
     runs on the query's cloned session, so toggling the pipeline's
     session instead left AQE on for the write and flipped it under
-    concurrent readers.  Grouped compaction's union is built from the
-    tables' own session, the one readers share, so compaction still
-    flips AQE under them.
+    concurrent readers.  Grouped compaction builds its union on a
+    session of its own for the same reason.
     """
     conf = df.sparkSession.conf
     prev = conf.get(_AQE, "true")
@@ -274,17 +274,38 @@ def execute_grouped_fused(
         .repartition(width, *part_cols)
     )
 
-    staging = os.path.join(
-        plan.staging_root, f"grouped-{uuid.uuid4().hex[:12]}"
-    )
+    def commit(p: dict, written: dict[str, list[str]]) -> None:
+        results[p["fqn"]] = p["table"]._commit_delta(
+            p["meta"], p["new_version"], p["new_schema"], written, p["epoch_id"]
+        )
+        plan.executed_fqns.append(p["fqn"])
+
+    _write_slices(out, plan.live, plan.staging_root, commit)
+    return results
+
+
+def _write_slices(
+    df: DataFrame,
+    parts: list[dict],
+    staging_root: str,
+    commit: Callable[[dict, dict[str, list[str]]], None],
+) -> None:
+    """The staged N-table write shared by the fused merge and grouped
+    compaction: ONE ``partitionBy(__gidx, _bucket)`` write of ``df``
+    into staging (AQE off on ``df``'s session), then per part, in order,
+    its ``__gidx`` slice renamed into the table's ``data/v{N}-…`` dir and
+    ``commit(part, written buckets)`` — each table commits before the
+    next renames, so a crash leaves a prefix of the tables committed.
+    A part with no rows gets an empty dir.  Staging is removed either
+    way."""
+    staging = os.path.join(staging_root, f"grouped-{uuid.uuid4().hex[:12]}")
     try:
-        with _aqe_off(out):
-            out.write.mode("errorifexists").partitionBy(_GIDX, _BUCKET).parquet(
+        with _aqe_off(df):
+            df.write.mode("errorifexists").partitionBy(_GIDX, _BUCKET).parquet(
                 staging
             )
-        for p in plan.live:
+        for p in parts:
             table: LakeTable = p["table"]
-            meta = p["meta"]
             rel_dir = table._next_data_dir(p["new_version"])
             out_abs = os.path.join(table.path, rel_dir)
             src = os.path.join(staging, f"{_GIDX}={p['idx']}")
@@ -295,52 +316,33 @@ def execute_grouped_fused(
                 except OSError:
                     shutil.move(src, out_abs)  # cross-device staging
             else:
-                os.makedirs(out_abs, exist_ok=True)  # zero-row stream
-            written: dict[str, list[str]] = {}
-            for entry in os.listdir(out_abs):
-                if entry.startswith(f"{_BUCKET}="):
-                    b = entry.split("=", 1)[1]
-                    written[b] = [os.path.join(rel_dir, entry)]
-            current = table.buckets_map(meta["version"])
-            buckets = {b: list(dl) for b, dl in current.items()}
-            for b, dl in written.items():
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dl
-            results[p["fqn"]] = table._commit_delta(
-                meta,
-                p["new_version"],
-                p["new_schema"],
-                written,
-                buckets,
-                {"append": written},
-                p["epoch_id"],
-                "merge-mor",
-            )
-            plan.executed_fqns.append(p["fqn"])
+                os.makedirs(out_abs, exist_ok=True)  # zero-row part
+            commit(p, table._written_buckets(rel_dir))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return results
 
 
 def compact_grouped(
-    spark: SparkSession,
-    tables: dict[str, LakeTable],
-    max_delta_depth: int = 1,
-    *,
-    include_base: bool = False,
+    spark: SparkSession, tables: dict[str, LakeTable]
 ) -> dict[str, dict[str, Any]]:
     """TIERED compaction of N tables in ONE Spark job.
 
     Per-table :meth:`LakeTable.compact` is a separate action per table —
     at 8 streams the end-of-batch maintenance pays 8× the per-job fixed
-    overhead for folds that are each tiny.  This builds every table's
-    delta-tier fold (same relation ``compact`` folds: everything after
-    each over-depth bucket's oldest dir, LWW by ``(lsn, gen)``), tags it
-    with ``__gidx``, unions, writes once via ``partitionBy(__gidx,
-    _bucket)`` and commits per table with ``compact``'s exact bucket-map
-    semantics.  Unlike the merge path there is no shared input to
-    re-scan — each branch reads its own files — so the only fused cost
-    is the write; branch folds run as concurrent stages of the one job.
+    overhead for folds that are each tiny.  This takes every table's
+    plan from ``compact``'s own ``_compaction_plan`` (tiered, depth 1:
+    everything after each over-depth bucket's oldest dir, LWW by
+    ``(lsn, gen)``), tags it with ``__gidx``, unions, writes once through
+    :func:`_write_slices` and commits each table through ``compact``'s
+    ``_commit_compaction``.  Unlike the merge path there is no shared
+    input to re-scan — each branch reads its own files — so the only
+    fused cost is the write; branch folds run as concurrent stages of
+    the one job.
+
+    The plans are built on a new session of the tables' Spark context,
+    so turning AQE off for the write never touches the session that
+    readers of these tables share; the commits go through the tables
+    themselves.
 
     Tombstone dropping is not offered here because tiered mode refuses
     it (see ``compact``); tables needing a FULL compact keep using
@@ -348,45 +350,30 @@ def compact_grouped(
 
     Tables whose column names collide at different types fall back to
     their own ``compact()`` call (same result, one extra job each).
-    ``spark`` is not used: the write runs on the tables' own session
-    (ROADMAP lists its removal with the callers).
+    ``spark`` is not used (ROADMAP lists its removal with the callers).
     """
     results: dict[str, dict[str, Any]] = {}
+    if not tables:
+        return results
+    session = next(iter(tables.values())).spark.newSession()
     prepared: list[dict] = []
     col_types: dict[str, Any] = {}
-    fallback: list[tuple[str, LakeTable]] = []
     for idx, (fqn, table) in enumerate(tables.items()):
         meta = table.metadata()
-        schema = T.StructType.fromJson(meta["schema"])
-        key_cols = meta["key_columns"]
-        current = table.buckets_map(meta["version"])
-        min_len = max_delta_depth if include_base else max_delta_depth + 1
-        todo = {b: dl for b, dl in current.items() if len(dl) > min_len}
-        if not todo:
+        fields = T.StructType.fromJson(meta["schema"]).fields + [
+            T.StructField(SDC_GEN, T.LongType())
+        ]
+        if any(col_types.get(f.name, f.dataType) != f.dataType for f in fields):
+            results[fqn] = table.compact(1, include_base=False)
+            continue
+        view = LakeTable(session, table.path)
+        view._buckets_cache = table._buckets_cache  # versions are immutable
+        compaction = view._compaction_plan(meta, 1, False, None)
+        if compaction is None:
             results[fqn] = {"skipped": True, "reason": "nothing to compact"}
             continue
-        conflict = False
-        for f in list(schema.fields) + [T.StructField(SDC_GEN, T.LongType())]:
-            seen = col_types.get(f.name)
-            if seen is not None and seen != f.dataType:
-                conflict = True
-                break
-        if conflict:
-            fallback.append((fqn, table))
-            continue
-        for f in list(schema.fields) + [T.StructField(SDC_GEN, T.LongType())]:
-            col_types[f.name] = f.dataType
-        fold_dirs = [
-            d for dl in todo.values() for d in (dl if include_base else dl[1:])
-        ]
-        df = table._read_dirs(fold_dirs, schema, with_gen=True)
-        folded = fold_last_writer_wins_agg(df, key_cols, (SDC_LSN, SDC_GEN))
-        folded = folded.withColumn(
-            _BUCKET,
-            table._bucket_expr(
-                key_cols, meta["num_buckets"], table._bucket_fn(meta)
-            ),
-        ).withColumn(_GIDX, F.lit(idx))
+        col_types.update((f.name, f.dataType) for f in fields)
+        todo, folded = compaction
         prepared.append(
             {
                 "fqn": fqn,
@@ -394,15 +381,9 @@ def compact_grouped(
                 "table": table,
                 "meta": meta,
                 "todo": todo,
-                "current": current,
-                "key_columns": key_cols,
                 "new_version": meta["version"] + 1,
-                "df": folded,
+                "df": folded.withColumn(_GIDX, F.lit(idx)),
             }
-        )
-    for fqn, table in fallback:
-        results[fqn] = table.compact(
-            max_delta_depth, include_base=include_base
         )
     if not prepared:
         return results
@@ -419,75 +400,17 @@ def compact_grouped(
     for p in prepared:
         key_repr = F.when(
             F.col(_GIDX) == p["idx"],
-            F.to_json(F.struct(*[F.col(c) for c in p["key_columns"]])),
+            F.to_json(F.struct(*[F.col(c) for c in p["meta"]["key_columns"]])),
         ).otherwise(key_repr)
     union = union.sortWithinPartitions(F.col(_GIDX), F.col(_BUCKET), key_repr)
 
-    staging = os.path.join(
-        prepared[0]["table"].path, "_staging",
-        f"compact-{uuid.uuid4().hex[:12]}",
+    def commit(p: dict, written: dict[str, list[str]]) -> None:
+        results[p["fqn"]] = p["table"]._commit_compaction(
+            p["meta"], p["todo"], written, False
+        )
+
+    _write_slices(
+        union, prepared, os.path.join(prepared[0]["table"].path, "_staging"),
+        commit,
     )
-    try:
-        with _aqe_off(union):
-            union.write.mode("errorifexists").partitionBy(_GIDX, _BUCKET).parquet(
-                staging
-            )
-        for p in prepared:
-            table: LakeTable = p["table"]
-            meta, todo, current = p["meta"], p["todo"], p["current"]
-            rel_dir = table._next_data_dir(p["new_version"])
-            out_abs = os.path.join(table.path, rel_dir)
-            src = os.path.join(staging, f"{_GIDX}={p['idx']}")
-            os.makedirs(os.path.dirname(out_abs), exist_ok=True)
-            if os.path.exists(src):
-                try:
-                    os.rename(src, out_abs)
-                except OSError:
-                    shutil.move(src, out_abs)
-            else:
-                os.makedirs(out_abs, exist_ok=True)
-            written: dict[str, list[str]] = {}
-            for entry in os.listdir(out_abs):
-                if entry.startswith(f"{_BUCKET}="):
-                    b = entry.split("=", 1)[1]
-                    written[b] = [os.path.join(rel_dir, entry)]
-            buckets = {b: list(dl) for b, dl in current.items() if b not in todo}
-            for b, dl in todo.items():
-                if include_base:
-                    if b in written:
-                        buckets[b] = written[b]
-                else:
-                    buckets[b] = [dl[0]] + (written.get(b) or [])
-            buckets_delta = {
-                "set": {b: buckets[b] for b in todo if b in buckets},
-                "drop": sorted(b for b in todo if b not in buckets),
-            }
-            base = {
-                k: v for k, v in meta.items()
-                if k not in ("buckets", "buckets_delta")
-            }
-            table._write_metadata(
-                {
-                    **base,
-                    "version": p["new_version"],
-                    **table._buckets_doc(
-                        p["new_version"], buckets, buckets_delta
-                    ),
-                    "summary": {
-                        "operation": "compact",
-                        "tiered": not include_base,
-                        "buckets_compacted": sorted(todo.keys(), key=int),
-                    },
-                    "parent": meta["version"],
-                },
-                expect_parent=meta["version"],
-            )
-            table._buckets_cache[p["new_version"]] = buckets
-            results[p["fqn"]] = {
-                "skipped": False,
-                "version": p["new_version"],
-                "compacted": len(todo),
-            }
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
     return results

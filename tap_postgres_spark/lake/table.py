@@ -118,18 +118,6 @@ def _list_parquet_files(directory: str) -> list[str]:
     return sorted(out)
 
 
-def _count_rows(files: list[str]) -> int:
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def _footer_max_column(files: list[str], column: str) -> int | None:
-    """Max value of ``column`` across files, read from parquet row-group
-    statistics — no data scan, no Spark job.  None if stats are absent."""
-    return _footer_stats(files, column)[1]
-
-
 def _footer_stats(
     files: list[str], column: str | None
 ) -> tuple[int, int | None]:
@@ -885,6 +873,15 @@ class LakeTable:
     def _next_data_dir(self, version: int) -> str:
         return os.path.join("data", f"v{version:08d}-{uuid.uuid4().hex[:8]}")
 
+    def _written_buckets(self, rel_dir: str) -> dict[str, list[str]]:
+        """{bucket: [rel_dir/_bucket=b]} for the bucket dirs a
+        ``partitionBy(_bucket)`` write left under ``rel_dir``."""
+        return {
+            entry.split("=", 1)[1]: [os.path.join(rel_dir, entry)]
+            for entry in os.listdir(os.path.join(self.path, rel_dir))
+            if entry.startswith(f"{_BUCKET}=")
+        }
+
     def _write_bucketed(
         self, df: DataFrame, rel_dir: str, num_buckets: int,
         sort_keys: Sequence[str] | None = None,
@@ -910,7 +907,6 @@ class LakeTable:
         deltas skip it (batch-sized files, rewritten by the next compact
         anyway).
         """
-        out_abs = os.path.join(self.path, rel_dir)
         # aligned=True (see _write_aligned): the relation was just folded
         # by groupBy(key_cols) with exchange width == num_buckets and a
         # murmur3 bucket fn, so each shuffle partition already holds
@@ -925,14 +921,9 @@ class LakeTable:
             shaped
             .write.mode("errorifexists")
             .partitionBy(_BUCKET)
-            .parquet(out_abs)
+            .parquet(os.path.join(self.path, rel_dir))
         )
-        found: dict[str, list[str]] = {}
-        for entry in os.listdir(out_abs):
-            if entry.startswith(f"{_BUCKET}="):
-                b = entry.split("=", 1)[1]
-                found[b] = [os.path.join(rel_dir, entry)]
-        return found
+        return self._written_buckets(rel_dir)
 
     def _prepare_batch(
         self,
@@ -1022,15 +1013,7 @@ class LakeTable:
             meta["num_buckets"],
             aligned=self._write_aligned(meta, meta["num_buckets"], bucketed),
         )
-        buckets = {
-            b: list(dl) for b, dl in self.buckets_map(meta["version"]).items()
-        }
-        for b, dl in written.items():
-            buckets[b] = buckets.get(b, []) + dl
-        return self._commit_delta(
-            meta, new_version, new_schema, written, buckets,
-            {"append": written}, epoch_id, "merge-mor",
-        )
+        return self._commit_delta(meta, new_version, new_schema, written, epoch_id)
 
     def _commit_delta(
         self,
@@ -1038,16 +1021,17 @@ class LakeTable:
         new_version: int,
         new_schema: T.StructType,
         written: dict[str, list[str]],
-        buckets: dict[str, list[str]],
-        buckets_delta: dict[str, Any] | None,
         epoch_id: str | None,
-        operation: str,
     ) -> dict[str, Any]:
-        """Driver-side commit of already-written delta files: footer
+        """Driver-side merge-on-read commit of already-written delta
+        files: ``written`` appended to each bucket's dir list, footer
         stats, lineage summary, metadata pointer swap.  Shared by
         :meth:`merge_into` and the grouped multi-stream commit
         (lake/grouped.py), whose data files land via one fused write
         job before each table commits its own slice here."""
+        buckets = self.buckets_map(meta["version"])
+        for b, dl in written.items():
+            buckets[b] = buckets.get(b, []) + dl
         committed = dict(meta["committed_epochs"])
         if epoch_id is not None:
             committed[epoch_id] = new_version
@@ -1070,7 +1054,7 @@ class LakeTable:
             if wm is not None:
                 bucket_watermarks[b] = int(wm)
         summary = {
-            "operation": operation,
+            "operation": "merge-mor",
             "epoch_id": epoch_id,
             "rows_written": rows_written,
             "buckets_written": sorted(written.keys(), key=int),
@@ -1085,7 +1069,7 @@ class LakeTable:
                 **base,
                 "version": new_version,
                 "schema": json.loads(new_schema.json()),
-                **self._buckets_doc(new_version, buckets, buckets_delta),
+                **self._buckets_doc(new_version, buckets, {"append": written}),
                 "committed_epochs": self._prune_epochs(committed),
                 "summary": summary,
                 "parent": meta["version"],
@@ -1166,18 +1150,41 @@ class LakeTable:
                 "tombstone may mask a base row (fold the base in to reclaim)"
             )
         meta = self.metadata()
-        schema = T.StructType.fromJson(meta["schema"])
+        plan = self._compaction_plan(
+            meta, max_delta_depth, include_base, drop_tombstones_below
+        )
+        if plan is None:
+            return {"skipped": True, "reason": "nothing to compact"}
+        todo, folded = plan
+        n = meta["num_buckets"]
+        written = self._write_bucketed(
+            folded, self._next_data_dir(meta["version"] + 1), n,
+            sort_keys=meta["key_columns"],
+            aligned=self._write_aligned(meta, n, folded),
+        )
+        return self._commit_compaction(meta, todo, written, include_base)
+
+    def _compaction_plan(
+        self,
+        meta: dict[str, Any],
+        max_delta_depth: int,
+        include_base: bool,
+        drop_tombstones_below: int | None,
+    ) -> tuple[dict[str, list[str]], DataFrame] | None:
+        """The buckets :meth:`compact` rewrites at ``meta``'s version
+        (more than ``max_delta_depth`` dirs stacked) and their rows
+        LWW-folded by ``(lsn, gen)`` with ``_bucket`` added, built on
+        this table's session; ``None`` when no bucket is over depth."""
         key_cols = meta["key_columns"]
         current = self.buckets_map(meta["version"])
         min_len = max_delta_depth if include_base else max_delta_depth + 1
         todo = {b: dl for b, dl in current.items() if len(dl) > min_len}
         if not todo:
-            return {"skipped": True, "reason": "nothing to compact"}
-        new_version = meta["version"] + 1
-        rel_dir = self._next_data_dir(new_version)
+            return None
         fold_dirs = [
             d for dl in todo.values() for d in (dl if include_base else dl[1:])
         ]
+        schema = T.StructType.fromJson(meta["schema"])
         df = self._read_dirs(fold_dirs, schema, with_gen=True)
         folded = fold_last_writer_wins_agg(df, key_cols, (SDC_LSN, SDC_GEN))
         if SDC_DELETED_AT in folded.columns and drop_tombstones_below is not None:
@@ -1189,10 +1196,19 @@ class LakeTable:
             _BUCKET,
             self._bucket_expr(key_cols, meta["num_buckets"], self._bucket_fn(meta)),
         )
-        written = self._write_bucketed(
-            folded, rel_dir, meta["num_buckets"], sort_keys=key_cols,
-            aligned=self._write_aligned(meta, meta["num_buckets"], folded),
-        )
+        return todo, folded
+
+    def _commit_compaction(
+        self,
+        meta: dict[str, Any],
+        todo: dict[str, list[str]],
+        written: dict[str, list[str]],
+        include_base: bool,
+    ) -> dict[str, Any]:
+        """Swap each compacted bucket's dirs for the folded dir in
+        ``written`` (tiered: after the kept base) and commit."""
+        new_version = meta["version"] + 1
+        current = self.buckets_map(meta["version"])
         buckets = {b: list(dl) for b, dl in current.items() if b not in todo}
         for b, dl in todo.items():
             if include_base:

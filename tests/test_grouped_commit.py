@@ -228,50 +228,111 @@ def test_fused_type_conflict_returns_none_and_pipeline_falls_back(
     assert [tuple(r) for r in tables["public.t_b"].read().select("id", "v").collect()] == [("b1", 7)]
 
 
-def test_compact_grouped_matches_per_table(spark, tmp_path):
+def _deep_tables(spark, root):
+    """Three tables with 4 merge deltas per bucket; t_c's ``v`` is bigint
+    where t_a's is string, so grouped compaction cannot fuse it."""
+    tabs = {}
+    for t, cols, typ in (
+        ("t_a", ("v",), T.StringType()),
+        ("t_b", ("w", "x"), T.StringType()),
+        ("t_c", ("v",), T.LongType()),
+    ):
+        schema = widen_for_cdc(T.StructType(
+            [T.StructField("id", T.StringType())]
+            + [T.StructField(c, typ) for c in cols]
+        ))
+        tab = LakeTable.create(spark, str(root / t), schema, ["id"], num_buckets=2)
+        for i in range(4):  # 4 merge deltas per bucket
+            rows = [
+                (
+                    f"k{j}",
+                    *[f"{c}{i}-{j}" if typ == T.StringType() else 10 * i + j
+                      for c in cols],
+                    100 * i + j,
+                    None,
+                )
+                for j in range(6)
+            ]
+            tab.merge_into(spark.createDataFrame(rows, schema), epoch_id=f"e{i}")
+        tabs[f"public.{t}"] = tab
+    return tabs
+
+
+def test_compact_grouped_matches_per_table(spark, tmp_path, monkeypatch):
     """compact_grouped ≡ per-table compact(include_base=False): same
     final contents, same bucket-map shape (base kept + one folded delta
-    dir), depth reduced."""
+    dir), same commit summary; the type-conflicting table takes its own
+    compact() call."""
     from tap_postgres_spark.lake.grouped import compact_grouped
 
-    def build(sub):
-        tabs = {}
-        for t, cols in (("t_a", ("v",)), ("t_b", ("w", "x"))):
-            tab = LakeTable.create(
-                spark, str(tmp_path / sub / t),
-                widen_for_cdc(_schema("id", *cols)), ["id"], num_buckets=2,
-            )
-            for i in range(4):  # 4 merge deltas per bucket
-                rows = [
-                    (f"k{j}", *[f"{c}{i}-{j}" for c in cols], 100 * i + j, None)
-                    for j in range(6)
-                ]
-                fields = (
-                    "id string, "
-                    + ", ".join(f"{c} string" for c in cols)
-                    + ", _sdc_lsn long, _sdc_deleted_at string"
-                )
-                tab.merge_into(
-                    spark.createDataFrame(rows, fields), epoch_id=f"e{i}"
-                )
-            tabs[f"public.{t}"] = tab
-        return tabs
+    grouped = _deep_tables(spark, tmp_path / "g")
+    classic = _deep_tables(spark, tmp_path / "c")
+    before = {fqn: t.buckets_map() for fqn, t in grouped.items()}
+    own_compacts = []
+    compact = LakeTable.compact
 
-    grouped = build("g")
-    classic = build("c")
-    res = compact_grouped(spark, grouped, max_delta_depth=1)
+    def spy(self, *a, **kw):
+        own_compacts.append(self.path)
+        return compact(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "compact", spy)
+    res = compact_grouped(spark, grouped)
+    monkeypatch.undo()
+    assert own_compacts == [grouped["public.t_c"].path]
     for fqn, tab in classic.items():
         r = tab.compact(max_delta_depth=1, include_base=False)
         assert res[fqn]["skipped"] == r["skipped"] == False  # noqa: E712
-        assert res[fqn]["compacted"] == r["compacted"]
+        assert res[fqn]["compacted"] == r["compacted"] == 2
     for fqn in grouped:
         g = sorted(map(tuple, grouped[fqn].read().collect()))
         c = sorted(map(tuple, classic[fqn].read().collect()))
         assert g == c and len(g) == 6
-        assert grouped[fqn].delta_depth() == classic[fqn].delta_depth() == 2
+        assert grouped[fqn].metadata()["summary"] == classic[fqn].metadata()["summary"]
+        g_map, c_map = grouped[fqn].buckets_map(), classic[fqn].buckets_map()
+        assert sorted(g_map) == sorted(c_map) == sorted(before[fqn])
+        for b, dl in g_map.items():
+            assert dl[0] == before[fqn][b][0]  # base kept
+            assert len(dl) == len(c_map[b]) == 2  # + one folded dir
     # nothing left to compact → per-table skipped markers
-    res2 = compact_grouped(spark, grouped, max_delta_depth=1)
+    res2 = compact_grouped(spark, grouped)
     assert all(r["skipped"] for r in res2.values())
+
+
+def test_compact_grouped_leaves_reader_session_aqe_alone(
+    spark, tmp_path, monkeypatch
+):
+    """Grouped compaction turns AQE off for its write on a session of its
+    own: the session that reads the tables never sees the setting
+    change, not even while the write runs."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from tap_postgres_spark.lake.grouped import compact_grouped
+
+    aqe = "spark.sql.adaptive.enabled"
+    tables = _deep_tables(spark, tmp_path)
+    before = spark.conf.get(aqe)
+    rows = {fqn: sorted(map(tuple, t.read().collect())) for fqn, t in tables.items()}
+    seen = []
+    conf_set, conf_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def watch(real):
+        def call(self, *a, **kw):
+            out = real(self, *a, **kw)
+            seen.append(spark.conf.get(aqe))
+            return out
+
+        return call
+
+    monkeypatch.setattr(RuntimeConfig, "set", watch(conf_set))
+    monkeypatch.setattr(RuntimeConfig, "unset", watch(conf_unset))
+    res = compact_grouped(spark, tables)
+    monkeypatch.undo()
+    assert not any(r["skipped"] for r in res.values())
+    assert seen and set(seen) == {before}
+    assert spark.conf.get(aqe) == before
+    assert {
+        fqn: sorted(map(tuple, t.read().collect())) for fqn, t in tables.items()
+    } == rows
 
 
 def _two_tables(spark, tmp_path):
