@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tap_postgres_spark import pipelineops, stream_maps, textops, vectorops
+from tap_postgres_spark.catalog import input_files, read_parquet
 from tap_postgres_spark.modes import full_table_scan, incremental_scan
 from tap_postgres_spark.operators import fold_last_writer_wins_agg
 from tap_postgres_spark.operators.temporal import asof_join, range_join
@@ -48,18 +49,9 @@ def _pin_session(spark: SparkSession) -> None:
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
     return _fan_out(
-        spark, spark.read.parquet(f"{sf_dir}/events.parquet"),
+        spark, read_parquet(spark, f"{sf_dir}/events.parquet"),
         path=f"{sf_dir}/events.parquet",
     )
-
-
-def _input_files(path: str) -> list[str]:
-    """Parquet file list behind a read path (single file or directory)."""
-    import glob
-
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return [path] if os.path.exists(path) else []
 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
@@ -80,16 +72,13 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
-def _scan_splits_estimate(spark: SparkSession, path: str) -> int:
+def _scan_splits_estimate(spark: SparkSession, files: list[str]) -> int:
     """Spark's FilePartition packing formula over the file sizes — the
     split count the scan will get, WITHOUT df.rdd.getNumPartitions()
     (which forces a JVM RDD conversion, measured 60-700 ms per call ×
     ~100 calls per sweep).  Only feeds the fan-out *decision*, so an
     off-by-a-few estimate near the threshold costs at most one
     unnecessary (or missed) repartition of a small scan."""
-    files = _input_files(path)
-    if not files:
-        return 1
     sizes = [os.path.getsize(f) for f in files]
     maxpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
@@ -116,13 +105,15 @@ def _fan_out(spark: SparkSession, df: DataFrame, path: str | None = None) -> Dat
     char-gram sketch at sf0.1 dropped 3.2 s → 0.4 s on local[32] after
     fan-out).  Gated on the split count so it is a no-op at real scale —
     a 100-TB table scans as thousands of splits and must NOT pay a
-    whole-corpus shuffle here.  With ``path`` given the split count is
-    estimated from file sizes (no JVM round trip); the estimate only
-    drives this performance decision, never row placement."""
+    whole-corpus shuffle here.  With ``path`` given and listable
+    (``catalog.input_files``) the split count is estimated from file
+    sizes (no JVM round trip); the estimate only drives this performance
+    decision, never row placement."""
     p = spark.sparkContext.defaultParallelism
+    files = input_files(path) if path is not None else None
     splits = (
-        _scan_splits_estimate(spark, path)
-        if path is not None
+        _scan_splits_estimate(spark, files)
+        if files
         else df.rdd.getNumPartitions()
     )
     if splits < p:
@@ -133,7 +124,7 @@ def _fan_out(spark: SparkSession, df: DataFrame, path: str | None = None) -> Dat
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
     return _fan_out(
-        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"),
+        spark, read_parquet(spark, f"{sf_dir}/documents.parquet"),
         path=f"{sf_dir}/documents.parquet",
     )
 
@@ -141,7 +132,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
     return _fan_out(
-        spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+        spark, read_parquet(spark, f"{sf_dir}/embeddings.parquet"),
         path=f"{sf_dir}/embeddings.parquet",
     )
 
@@ -150,10 +141,12 @@ def _parquet_footer_max(path: str, column: str):
     """Exact max(column) from parquet footer row-group statistics — the
     same value a Spark ``agg(max(column))`` job computes, read in ~1 ms
     instead of a scan+shuffle job.  Returns None (caller falls back to
-    the Spark job) when any row group lacks min/max stats."""
+    the Spark job) when any row group lacks min/max stats, or when
+    ``catalog.input_files`` will not list the path (missing, partitioned,
+    more than ``MAX_FLAT_FILES`` files), so a partial max never passes."""
     import pyarrow.parquet as pq
 
-    files = _input_files(path)
+    files = input_files(path)
     if not files:
         return None
     mx = None
@@ -177,11 +170,12 @@ def _parquet_footer_max(path: str, column: str):
 
 
 def _parquet_num_rows(path: str):
-    """Exact row count from parquet footers (no Spark job); None when the
-    path is missing."""
+    """Exact row count from parquet footers (no Spark job); None, as in
+    :func:`_parquet_footer_max`, for a path ``catalog.input_files`` will
+    not list."""
     import pyarrow.parquet as pq
 
-    files = _input_files(path)
+    files = input_files(path)
     if not files:
         return None
     try:
@@ -841,7 +835,7 @@ def q_bookmark_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -860,9 +854,9 @@ def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
@@ -884,14 +878,14 @@ def q_q5_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is lineitem⋈orders on orderkey; the region predicate prunes
     through the broadcast chain before any fact rows move."""
     _pin_session(spark)
-    region = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
+    region = read_parquet(spark, f"{sf_dir}/region.parquet").filter(
         F.col("r_name") == "ASIA"
     )
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    supp = read_parquet(spark, f"{sf_dir}/supplier.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     dim = (
         nation.join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
         .select("n_nationkey", "n_name")
@@ -936,7 +930,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     _pin_session(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -1122,7 +1116,7 @@ def _emb_lookup(sf_dir: str, vec_ids: list[int]) -> dict[int, list[float]] | Non
     Returns None on any surprise (caller falls back to the Spark job)."""
     import pyarrow.parquet as pq
 
-    files = _input_files(f"{sf_dir}/embeddings.parquet")
+    files = input_files(f"{sf_dir}/embeddings.parquet")
     if not files:
         return None
     try:
@@ -1150,7 +1144,7 @@ def _emb_lowest(sf_dir: str, k: int) -> list[tuple[int, list[float]]] | None:
 
     import pyarrow.parquet as pq
 
-    files = _input_files(f"{sf_dir}/embeddings.parquet")
+    files = input_files(f"{sf_dir}/embeddings.parquet")
     if not files:
         return None
     try:
@@ -1427,7 +1421,7 @@ def q_singer_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     tap.py:784-797) — executor-side to_json, one message line per row."""
     from tap_postgres_spark import singer
 
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    nation = read_parquet(spark, os.path.join(sf_dir, "nation.parquet"))
     stream = StreamDef("public", "nation", nation.schema, ("n_nationkey",))
     return singer.record_messages(nation, stream)
 
@@ -1436,7 +1430,7 @@ def q_stream_map_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-map + schema-flattening surface (reference README.md:13-14):
     row filter with config interpolation, PII-style column drop, computed
     column, and nested-JSON flattening to props__k — all one projection."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     nested = ev.withColumn("props", F.from_json("props", "k int"))
     mapped = stream_maps.apply_stream_map(
         nested,
@@ -1868,10 +1862,10 @@ def q_range_join_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     order's total price, counted per order — bucket-blocked so Catalyst
     plans a hash join instead of the BroadcastNestedLoopJoin the raw
     non-equi predicate forces (operators/temporal.py)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_extendedprice", "l_quantity"
     )
-    bands = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    bands = read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey",
         (F.col("o_totalprice") - 5).alias("lo"),
         (F.col("o_totalprice") + 5).alias("hi"),
@@ -2391,7 +2385,7 @@ qs AS (SELECT ({qbits}) AS qsig),
 s AS (SELECT vec_id, embedding::DOUBLE[] AS v, {bits} AS sig FROM embeddings),
 short AS (
   SELECT s.vec_id, s.v,
-         bit_count(xor(s.sig, (SELECT qsig FROM qs))) AS hamming
+         CAST(bit_count(xor(s.sig, (SELECT qsig FROM qs))) AS INTEGER) AS hamming
   FROM s ORDER BY hamming ASC, vec_id ASC LIMIT {_HAM_SHORTLIST}
 )
 SELECT vec_id, hamming,
@@ -2708,8 +2702,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "event_cube": """
             SELECT event_type, user_id % 4 AS ub,
-                   grouping(event_type) AS g_type,
-                   grouping(user_id % 4) AS g_ub,
+                   CAST(grouping(event_type) AS TINYINT) AS g_type,
+                   CAST(grouping(user_id % 4) AS TINYINT) AS g_ub,
                    count(*) AS n,
                    round(sum(value), 4) AS sum_value
             FROM events
@@ -3148,7 +3142,7 @@ def oracle_sql() -> dict[str, str]:
                     FROM documents)
               GROUP BY doc_id, t
             )
-            SELECT doc_id, sum(c) AS n_tokens,
+            SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
                    CAST(round((ln(sum(c)) - sum(c * ln(c)) / sum(c))
                               * 1000000) AS BIGINT)
                      AS entropy_ppm
@@ -3163,19 +3157,21 @@ def oracle_sql() -> dict[str, str]:
                             ELSE 0 END AS ns
                   FROM e WINDOW w AS (PARTITION BY user_id
                                       ORDER BY ts_us, event_id)),
-            s AS (SELECT *, sum(ns) OVER (PARTITION BY user_id
+            s AS (SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id
                       ORDER BY ts_us, event_id
-                      ROWS UNBOUNDED PRECEDING) AS session_seq FROM f)
+                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM f)
             SELECT user_id, session_seq, count(*) AS n_events,
                    min(ts_us) AS start_us, max(ts_us) AS end_us,
-                   sum(CAST(round(value * 100) AS BIGINT)) AS total_value_cents
+                   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+                     AS total_value_cents
             FROM s GROUP BY user_id, session_seq
         """,
         "window_rollup": f"""
             SELECT epoch_us(ts) - (epoch_us(ts) % {_ROLLUP_WINDOW_S * 1_000_000})
                        AS window_start_us,
                    event_type, count(*) AS n,
-                   sum(CAST(round(value * 100) AS BIGINT)) AS sum_value_cents
+                   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+                     AS sum_value_cents
             FROM events GROUP BY 1, 2
         """,
         "repetition_stats": f"""
@@ -3341,7 +3337,7 @@ def oracle_sql() -> dict[str, str]:
         "mixture_weights": f"""
             WITH per AS (
               SELECT lang, source, count(*) AS n_docs,
-                     sum(len({_TOKS})) AS n_tokens
+                     CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
               FROM documents GROUP BY lang, source),
             tot AS (SELECT sum(n_tokens) AS _tot FROM per)
             SELECT lang, source, n_docs, n_tokens,

@@ -40,7 +40,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from . import singer
-from .catalog import apply_overrides, discover_parquet_dir
+from .catalog import apply_overrides, discover_parquet_dir, read_parquet
 from .lake import LakeTable
 from .modes.full_table import full_table_scan
 from .modes.incremental import commit_bookmark, incremental_scan
@@ -220,9 +220,7 @@ def sync(
         if s.replication_method == "LOG_BASED":
             summary[s.fqn] = _sync_log_based(spark, s, config, state, out)
             continue
-        source = spark.read.parquet(
-            f"{config['source_dir']}/{s.table_name}.parquet"
-        )
+        source = read_parquet(spark, f"{config['source_dir']}/{s.table_name}.parquet")
         smap = config.get("stream_maps", {}).get(s.table_name)
         if s.replication_method == "INCREMENTAL":
             df = incremental_scan(

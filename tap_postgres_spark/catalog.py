@@ -8,6 +8,11 @@ place of Postgres schemas reflected over SQLAlchemy.
 
 Like the reference, discovery output can be overridden by a user-supplied
 catalog (tap.py:675-676): pass ``overrides`` keyed by FQN.
+
+Like the reference's catalog, a dataset's schema is discovered once and
+reused: :func:`read_parquet` memoizes Spark's inferred schema per file
+version, so discovery, ``sync`` and the query builders run the
+schema-inference job only the first time they read a file version.
 """
 
 from __future__ import annotations
@@ -16,11 +21,77 @@ import os
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .lake import LakeTable
+from .plancache import memo
 from .schema import StreamDef
+
+# a flat directory with more files than this is not listed per read: the
+# schema memo and the footer fast paths leave it to Spark
+MAX_FLAT_FILES = 64
+
+# the session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def input_files(path: str) -> list[str] | None:
+    """The files Spark reads behind a parquet path: the file itself, or
+    the files of a flat directory, less the names Spark skips (a leading
+    ``.``, or a leading ``_`` outside a ``k=v`` name).  None when the
+    path is missing, or is a directory holding a subdirectory
+    (partitioned) or more than ``MAX_FLAT_FILES`` files: file sets that
+    a fast path must not vouch for, so its caller takes the Spark path."""
+    if os.path.isfile(path):
+        return [path]
+    try:
+        it = os.scandir(path)
+    except OSError:
+        return None
+    files = []
+    with it:
+        for e in it:
+            if e.name.startswith(".") or (e.name.startswith("_") and "=" not in e.name):
+                continue
+            if not e.is_file() or len(files) == MAX_FLAT_FILES:
+                return None
+            files.append(e.path)
+    return sorted(files)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs the schema-inference job
+    once per file version, not once per read.
+
+    The schema is Spark's own inferred one, memoized (plancache.py) by
+    every file's ``(path, size, mtime_ns, inode)`` and the session confs
+    that change inference, then handed back as an explicit schema: a
+    rewritten file or a flipped conf infers again, and the types are
+    inference's by construction.  A path :func:`input_files` cannot
+    list (missing, partitioned, too many files) is a plain read."""
+    files = input_files(path)
+    if not files:
+        return spark.read.parquet(path)
+    try:
+        stats = [os.stat(f) for f in files]
+    except OSError:  # a file went away since the listing
+        return spark.read.parquet(path)
+    version = tuple(
+        (os.path.abspath(f), st.st_size, st.st_mtime_ns, st.st_ino)
+        for f, st in zip(files, stats)
+    )
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    schema = memo(
+        ("read_parquet", version, confs),
+        lambda: spark.read.parquet(path).schema,
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def discover_parquet_dir(
@@ -48,8 +119,9 @@ def discover_parquet_dir(
         table = entry[: -len(".parquet")]
         if filter_tables is not None and table not in filter_tables:
             continue
-        # schema from the parquet footer — no data read
-        schema = spark.read.parquet(os.path.join(base_dir, entry)).schema
+        # Spark's inferred schema: one job per file version, memoized
+        # for the reads that follow (sync, the query builders)
+        schema = read_parquet(spark, os.path.join(base_dir, entry)).schema
         rep = replication.get(table, {})
         streams.append(
             StreamDef(

@@ -150,7 +150,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n = F.size(F.col("__toks"))
     base = toked.select(
         "doc_id",
-        n.alias("n_tokens"),
+        n.cast("long").alias("n_tokens"),
         F.round(
             1 - F.size(F.array_distinct(F.col("__toks"))) / F.greatest(n, F.lit(1)), 6
         ).alias("dup_word_ratio"),
@@ -822,7 +822,7 @@ def pack_sequences(
     so the offset aggregate reads materialized rows instead of
     re-running the tokenize+window pass.
     """
-    n = F.size(tokens(F.col(text_col))).alias("n_tokens")
+    n = F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens")
     d = docs.select(id_col, group_col, n)
     shard = lambda cum: (  # noqa: E731 — shared by both plan shapes
         F.floor((cum - F.col("n_tokens")) / F.lit(float(budget_tokens)))

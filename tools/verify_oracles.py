@@ -1,19 +1,23 @@
 """Local approximation of the driver's correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given sf dir, then compares row count, column names, and an
-order-insensitive value multiset (values normalized: floats rounded to 9
-significant digits, None canonical).  Usage::
+DuckDB at the given sf dir, then compares column names, column types, row
+count, and an order-insensitive value multiset (values normalized: floats
+rounded to 9 significant digits, None canonical).  Types compare strictly:
+each Spark column type must be the DuckDB type of the same domain
+(``_DUCK_TYPES``), so a HUGEINT sum against a Spark ``bigint`` fails.
+Usage::
 
     python tools/verify_oracles.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -23,6 +27,16 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+# Spark simpleString → the DuckDB type of the same value domain; a Spark
+# type not listed here matches no DuckDB type
+_DUCK_TYPES = {
+    "bigint": "BIGINT", "int": "INTEGER", "smallint": "SMALLINT",
+    "tinyint": "TINYINT", "double": "DOUBLE", "float": "FLOAT",
+    "string": "VARCHAR", "boolean": "BOOLEAN", "date": "DATE",
+    "timestamp": "TIMESTAMP WITH TIME ZONE", "binary": "BLOB",
+}
 
 
 def norm(v):
@@ -86,6 +100,15 @@ def main():
             print(f"FAIL {name}: duckdb error: {e}")
             continue
         ok = True
+        d_types = dict(zip(d_cols, (str(t) for t in res.types)))
+        type_diffs = [
+            f"{f.name}: {t} vs {d_types[f.name]}"
+            for f, t in ((f, f.dataType.simpleString()) for f in sdf.schema.fields)
+            if f.name in d_types and _DUCK_TYPES.get(t) != d_types[f.name]
+        ]
+        if type_diffs:
+            ok = False
+            print(f"FAIL {name}: types {'; '.join(type_diffs)}")
         if sorted(s_cols) != sorted(d_cols):
             ok = False
             print(f"FAIL {name}: columns spark={sorted(s_cols)} duck={sorted(d_cols)}")
