@@ -151,13 +151,6 @@ def classify(envelope: DataFrame, registered_fqns: list[str]) -> DataFrame:
     return envelope.withColumns(memo(("classify", tuple(registered_fqns)), build))
 
 
-def batch_metrics(classified: DataFrame) -> DataFrame:
-    """Per-(fqn,status) counts — the vectorized analog of the reference's
-    counter dict (wal_reader.py:116-122,181-192).  One map-side-combined
-    groupBy; rows are tiny (streams × statuses)."""
-    return classified.groupBy("_fqn", "_status").agg(F.count("*").alias("n"))
-
-
 def discover_columns(classified: DataFrame, fqn: str) -> list[tuple[str, str]]:
     """Distinct (column name, wal2json type) pairs appearing in this
     stream's routable events — the schema-evolution discovery pass.

@@ -8,15 +8,15 @@ stdlib zlib, all five scanline filters) full decodes, YUV4MPEG2 (Y4M)
 raw video (header + frame walk + per-frame luma extraction), and JPEG
 dimension extraction (marker walk to SOF — no pure-Python entropy
 decode exists, so pixel stats stay NULL there; the honest partial).
-Mimes with no decoder (compressed video containers like mp4) go through
-the deterministic stub and are marked ``decoded=False``.  Swap in
+Mimes with no decoder (compressed video containers like mp4) are marked
+``decoded=False`` with an ``err``.  Swap in
 PIL/libvips/ffmpeg without touching the Spark topology.
 
 Design for 100 TB of media:
 - media bytes stay in one opaque ``binary`` column; all filtering happens
   on typed metadata columns first so Parquet column pruning means the
   bytes are only read by stages that decode them;
-- decode / feature-extract run via ``mapInPandas`` — per-partition Arrow
+- decode runs via ``mapInPandas`` — per-partition Arrow
   batches, so the Python worker amortizes per-batch setup and the JVM
   never materializes decoded frames;
 - frame sampling yields multiple rows per input (iterator-of-DataFrames
@@ -516,70 +516,6 @@ def synthesize_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-def media_stats(df: DataFrame) -> DataFrame:
-    """Typed-metadata pass: byte sizes + content hash WITHOUT decoding.
-    Pure column expressions — the cheap scan that should precede any
-    decode stage in a pipeline."""
-    return df.select(
-        "media_id",
-        "kind",
-        F.octet_length("data").alias("n_bytes"),
-        F.sha2("data", 256).alias("content_sha256"),
-        "meta_width",
-        "meta_height",
-        "meta_duration_ms",
-    )
-
-
-_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("feat_mean_byte", T.DoubleType()),
-        T.StructField("feat_entropy_proxy", T.DoubleType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _decode_image_stub(data: bytes) -> dict:
-    """STUB: a real deployment decodes with PIL/libvips here.  The stub
-    computes deterministic byte statistics so the plumbing is testable.
-    Raises NotImplementedError for kinds a real decoder would reject."""
-    if data is None:
-        raise NotImplementedError("no payload")
-    mean = sum(data) / len(data) if data else 0.0
-    distinct = len(set(data))
-    return {"mean_byte": mean, "entropy_proxy": distinct / 256.0}
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column.
-
-    ``mapInPandas``: each partition arrives as an iterator of Arrow-backed
-    pandas batches; the UDF is vectorized per batch (one Python call per
-    ~10k rows, not per row)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["data"].map(
-                lambda b: _decode_image_stub(bytes(b)) if b is not None else None
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feat_mean_byte": feats.map(lambda f: f["mean_byte"] if f else None),
-                    "feat_entropy_proxy": feats.map(
-                        lambda f: f["entropy_proxy"] if f else None
-                    ),
-                    "decoded": feats.notna(),
-                }
-            )
-
-    return df.select("media_id", "kind", "data").mapInPandas(_extract, _FEATURE_SCHEMA)
-
-
 DECODE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -617,8 +553,8 @@ def decode_media(df: DataFrame) -> DataFrame:
     """REAL decode stage over the binary column: WAV/PPM parsed
     byte-for-byte; unknown mimes and corrupt payloads yield
     ``decoded=False`` + ``err`` instead of failing the task (per-row
-    failure containment).  Same mapInPandas topology as the stub path —
-    Arrow batches in, one Python call per batch."""
+    failure containment).  One ``mapInPandas`` pass — Arrow batches in,
+    one Python call per batch."""
 
     field_names = [f.name for f in DECODE_SCHEMA.fields]
 

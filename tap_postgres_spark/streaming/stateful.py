@@ -1,50 +1,24 @@
-"""Custom stateful streaming operator: per-key ordering monitor.
+"""Per-key ordering monitor over a batch of CDC events.
 
 CDC observability for late/out-of-order delivery (SURVEY.md §2.10 T3):
-for every key, track the maximum ordinal (LSN / event id) seen so far —
-ACROSS micro-batches — and emit one row per arriving event whose ordinal
-is lower than the running maximum ("regression"), i.e. an event that
-would have been applied out of order by a naive consumer.  The LWW merge
-makes such events harmless for final state; this operator makes them
-*visible* (alerting, upstream-lag diagnosis), which is exactly the
-observability the reference gets for free from its strictly-ordered
-single cursor and a Spark consumer has to reconstruct.
+for every key, track the maximum ordinal (LSN / event id) seen so far
+in arrival order and emit one row per event whose ordinal is lower than
+the running maximum ("regression"), i.e. an event that would have been
+applied out of order by a naive consumer.  The LWW merge makes such
+events harmless for final state; this operator makes them *visible*
+(alerting, upstream-lag diagnosis), which is exactly the observability
+the reference gets for free from its strictly-ordered single cursor and
+a Spark consumer has to reconstruct.
 
-Two forms, same semantics:
-
-- :func:`monotonicity_violations` — batch form over a static DataFrame
-  (ordering = a total-order column within the batch).  Plain window
-  functions, exact SQL oracle.
-- :func:`streaming_order_monitor` — the cross-batch form via
-  ``applyInPandasWithState`` (GroupState): per-key running max persists
-  in the state store between micro-batches, so a regression relative to
-  an event applied N batches ago is still caught.  State is one long per
-  key (bounded by |keys|); no timeout — keys live as long as the query.
+One form, :func:`monotonicity_violations`: plain window functions over
+a static DataFrame, with an exact SQL oracle (``q_order_monitor``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
-
-VIOLATION_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("ordinal", T.LongType()),
-        T.StructField("max_seen", T.LongType()),
-        T.StructField("lag", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType([T.StructField("max_seen", T.LongType())])
-
 
 def monotonicity_violations(
     df: DataFrame,
@@ -71,211 +45,4 @@ def monotonicity_violations(
             F.col("_prev_max").cast("long").alias("max_seen"),
             (F.col("_prev_max") - F.col(ordinal_col)).cast("long").alias("lag"),
         )
-    )
-
-
-_SENTINEL = -(1 << 62)  # below any real ordinal: "no max seen yet"
-
-
-def _monitor_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    (max_seen,) = state.get if state.exists else (_SENTINEL,)
-    for pdf in pdfs:
-        # within-batch arrival order = the frame's row order (the source's
-        # file/offset order), matching the batch form's order_col scan.
-        # Vectorized: running-max-before-each-row via cummax shifted one,
-        # seeded with the cross-batch state — no per-row Python.
-        o = pdf["ordinal"].to_numpy(dtype=np.int64)
-        if o.size == 0:
-            continue
-        cummax = np.maximum.accumulate(o)
-        prev = np.concatenate(([max_seen], np.maximum(cummax[:-1], max_seen)))
-        mask = o < prev
-        max_seen = int(max(max_seen, int(cummax[-1])))
-        if mask.any():
-            yield pd.DataFrame(
-                {
-                    "key": str(key[0]),
-                    "ordinal": o[mask],
-                    "max_seen": prev[mask],
-                    "lag": prev[mask] - o[mask],
-                }
-            )
-    state.update((max_seen,))
-
-
-def streaming_order_monitor(
-    events: DataFrame,
-    key_col: str,
-    ordinal_col: str,
-) -> DataFrame:
-    """Cross-batch form for a streaming DataFrame: per-key running max in
-    the state store; emits one row per regression event.  Use inside a
-    ``writeStream`` (see tests for the availableNow drive)."""
-    keyed = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ordinal_col).cast("long").alias("ordinal"),
-    ).groupBy("key")
-    return keyed.applyInPandasWithState(
-        _monitor_fn,
-        outputStructType=VIOLATION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming sessionization — the cross-batch twin of pipelineops.sessionize
-# ---------------------------------------------------------------------------
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_seq", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("total_value_cents", T.LongType()),
-    ]
-)
-
-_SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("session_seq", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.LongType()),
-    ]
-)
-
-
-def _make_session_fn(gap_us: int):
-    def _session_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        user_id = int(key[0])
-        if state.exists:
-            seq, start_us, last_us, n_ev, sum_v = state.get
-        else:
-            seq, start_us, last_us, n_ev, sum_v = 0, None, None, 0, 0
-
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            # event-time order within the batch (the feed is LSN/ts ordered
-            # ACROSS batches — same total order the batch twin sorts by)
-            pdf = pdf.sort_values(["ts_us", "event_id"], kind="stable")
-            ts = pdf["ts_us"].to_numpy(dtype=np.int64)
-            # cents were rounded JVM-side (same F.round as the batch twin),
-            # so the in-Python fold is pure integer addition — exact
-            val = pdf["value_cents"].to_numpy(dtype=np.int64)
-
-            # vectorized segment split: a new session starts at row i when
-            # the gap from the previous event (in-batch or carried state)
-            # exceeds gap_us
-            prev = np.concatenate(
-                ([last_us if last_us is not None else np.iinfo(np.int64).min], ts[:-1])
-            )
-            brk = (ts - prev) > gap_us
-            if last_us is None:
-                brk[0] = True
-            starts = np.flatnonzero(brk)
-
-            # fold each in-batch segment with reduceat — one Python
-            # iteration per SESSION, never per event.  Segment boundaries
-            # always include row 0 so head rows that CONTINUE the open
-            # session are summed too (cont flag below).
-            bounds = (
-                starts
-                if starts.size and starts[0] == 0
-                else np.concatenate(([0], starts)).astype(np.int64)
-            )
-            seg_counts = np.diff(np.append(bounds, len(ts)))
-            seg_sums = np.add.reduceat(val, bounds)
-            seg_first = ts[bounds]
-            seg_last = ts[bounds + seg_counts - 1]
-            cont = not brk[0]  # segment 0 continues the carried session
-
-            closed: list[tuple] = []
-            for i in range(len(bounds)):
-                if i == 0 and cont:
-                    n_ev += int(seg_counts[0])
-                    sum_v += int(seg_sums[0])
-                    last_us = int(seg_last[0])
-                    continue
-                if n_ev:  # close the session the new break ends
-                    closed.append((user_id, seq, n_ev, start_us, last_us, sum_v))
-                seq += 1
-                start_us = int(seg_first[i])
-                last_us = int(seg_last[i])
-                n_ev = int(seg_counts[i])
-                sum_v = int(seg_sums[i])
-
-            if closed:
-                yield pd.DataFrame(
-                    closed,
-                    columns=[
-                        "user_id", "session_seq", "n_events",
-                        "start_us", "end_us", "total_value_cents",
-                    ],
-                )
-
-        if start_us is not None:  # all-empty batches leave state untouched
-            state.update(
-                (int(seq), int(start_us), int(last_us), int(n_ev), int(sum_v))
-            )
-
-    return _session_fn
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    gap_s: int = 4 * 3600,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Cross-batch gap sessionization via ``applyInPandasWithState`` — the
-    streaming twin of :func:`tap_postgres_spark.pipelineops.sessionize`.
-
-    A session CLOSES (and its summary row is emitted, append mode) when a
-    later event for the same user arrives more than ``gap_s`` after the
-    session's last event; the open session per user rides the state store
-    between micro-batches (one 5-field row per user, bounded by |users|).
-    The in-batch fold is numpy ``reduceat`` over gap-split segments — one
-    Python iteration per SESSION, never per event.
-
-    Same total-value/count/bounds semantics as the batch twin; the tests
-    pin batch-vs-streaming equality on the closed prefix.
-    """
-    gap_us = int(gap_s) * 1_000_000
-    keyed = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
-        F.col(id_col).cast("long").alias("event_id"),
-        # cents rounded JVM-side with the SAME F.round as the batch twin,
-        # so both twins fold identical integers
-        F.round(F.col(value_col).cast("double") * 100)
-        .cast("long")
-        .alias("value_cents"),
-    ).groupBy("user_id")
-    return keyed.applyInPandasWithState(
-        _make_session_fn(gap_us),
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -298,7 +298,7 @@ def minhash_signature_array(
     return F.aggregate(harr, init, step)
 
 
-def minhash_banded_rowwise(
+def minhash_banded(
     df: DataFrame,
     text_col: str = "text",
     id_col: "str | Sequence[str]" = "doc_id",
@@ -307,11 +307,13 @@ def minhash_banded_rowwise(
     bands: int = 4,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(id, band, key) banding via :func:`minhash_signature_array` —
-    byte-identical to :func:`minhash_banded` with zero shuffles (explode
-    of ``bands`` structs per row only).  The streaming probe twin and
-    any per-row pipeline stage use this; see the sibling's docstring for
-    when the exploded-aggregation form wins."""
+    """(id, band, key) rows: each doc's signature split into ``bands``
+    band keys — the LSH blocking relation shared by the pair join, the
+    hot-bucket guard and the corpus-index probe.  The signature is the
+    per-row :func:`minhash_signature_array`, so banding runs with zero
+    shuffles (an explode of ``bands`` structs per row); the keys equal
+    bands cut from :func:`minhash_signatures`' ``mh*`` columns (pinned
+    in tests/test_textops.py)."""
     rows_per_band = num_hashes // bands
     sig = df.select(
         *_ids(id_col),
@@ -328,37 +330,6 @@ def minhash_banded_rowwise(
                     F.element_at(F.col("_mh"), bi * rows_per_band + r + 1)
                     for r in range(rows_per_band)
                 ],
-            ).alias("key"),
-        )
-        for bi in range(bands)
-    ]
-    return sig.select(*_ids(id_col), F.explode(F.array(*band_cols)).alias("bk")).select(
-        *_ids(id_col), F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-
-
-def minhash_banded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: "str | Sequence[str]" = "doc_id",
-    *,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, band, key) rows: each doc's signature split into ``bands``
-    band keys — the LSH blocking relation shared by the pair join and the
-    hot-bucket guard.  (:func:`minhash_banded_rowwise` is the
-    shuffle-free per-row twin.)"""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes=num_hashes, shingle_k=shingle_k
-    )
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"mh{bi * rows_per_band + r}") for r in range(rows_per_band)]
             ).alias("key"),
         )
         for bi in range(bands)
@@ -466,9 +437,7 @@ def minhash_lsh_oversized_buckets(
     materializing its O(n²) pairs).  Pass a prebuilt/persisted ``banded``
     relation to share the signature computation with other consumers."""
     if banded is None:
-        # rowwise banding (byte-identical, zero shuffles): consumed once
-        # by the count aggregate below
-        banded = minhash_banded_rowwise(
+        banded = minhash_banded(
             df, text_col, id_col,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         )
@@ -518,11 +487,10 @@ def minhash_lsh_pairs(
     but truncates lineage (see neardup_clusters for the same pattern).
     """
     if banded is None:
-        # rowwise banding (byte-identical; pinned in
-        # tests/test_streaming_windowed.py): skips the exploded-shingle
-        # shuffle + groupBy of the agg form — the banded relation goes
-        # straight from the scan into the checkpoint with zero exchanges
-        banded = minhash_banded_rowwise(
+        # rowwise banding (pinned against the exploded signatures in
+        # tests/test_textops.py): the banded relation goes straight from
+        # the scan into the checkpoint with zero exchanges
+        banded = minhash_banded(
             df, text_col, id_col,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         ).localCheckpoint()
@@ -582,10 +550,7 @@ def minhash_dedup_keep(
     pairs with an exact cosine filter, so its pair losers are a strict
     subset of bucket non-minima and the two rules stay separate there."""
     del max_bucket_size  # result is cap-independent; see docstring
-    # rowwise banding (byte-identical, zero shuffles) — the banded
-    # relation is consumed once, so the exploded-agg form's shingle
-    # shuffle bought nothing here
-    banded = minhash_banded_rowwise(
+    banded = minhash_banded(
         df, text_col, id_col,
         num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
     )

@@ -4,9 +4,10 @@ table — the vector instantiation of
 centroid; see that module for the forward-map / move-tombstone / MOR
 fold machinery and the exactly-once contract).
 
-:func:`~tap_postgres_spark.vectorops.build_ivf_index` materializes the
-IVF layout once; at 100 TB the corpus keeps changing, and rebuilding a
-10^9-vector index per ingest epoch rereads the world.  Here the refresh
+The on-disk IVF layout is vectors as parquet partitioned by
+``centroid_id``, so a search reads only the probed cells.  At 100 TB the
+corpus keeps changing, and rebuilding a 10^9-vector index per ingest
+epoch rereads the world.  Here the refresh
 costs O(|changes|): changed vectors re-assign (broadcast-matmul above
 the k threshold, `ivf_assign_auto`), old cells come from a
 bucket-pruned forward-map lookup, and searches stay partition-pruned

@@ -22,7 +22,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -109,36 +109,6 @@ def hyperplane_bits_sql(vec_sql: str, planes: list[list[float]]) -> Column:
         for i, p in enumerate(planes)
     ]
     return F.expr(" + ".join(terms))
-
-
-def hyperplane_bits_pandas(vec_col: str, planes: list[list[float]]):
-    """High-dimension variant of :func:`hyperplane_bits`: one Arrow-batched
-    pandas UDF doing a numpy matmul instead of ``n_planes`` per-element
-    Column-expression trees.
-
-    The expression form is ideal at modest dim×planes (whole-stage
-    codegen, no Python), but its expression tree grows as dim×planes —
-    at 1536-d embeddings with 16+ planes codegen compilation dominates.
-    Here the signature is ``sign(V @ P.T)`` packed to a long: one BLAS
-    call per ~10k-row Arrow batch.  Matches the expression form on the
-    test vectors, but the two are not guaranteed interchangeable when a
-    dot product is within an ulp of zero: BLAS may reorder the summation
-    vs the codegen'd sequential fold, and a last-ulp difference at zero
-    flips a sign bit.  Pick ONE form per table build; don't mix them
-    within the same index.
-    """
-    p = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
-    weights = (1 << np.arange(len(planes), dtype=np.int64))
-
-    @F.pandas_udf("long")
-    def _bits(s: pd.Series) -> pd.Series:
-        if s.empty:
-            return pd.Series([], dtype="int64")
-        v = np.asarray(s.to_list(), dtype=np.float64)  # (rows, dim)
-        signs = (v @ p) >= 0  # (rows, n_planes)
-        return pd.Series((signs * weights).sum(axis=1))
-
-    return _bits(F.col(vec_col))
 
 
 def ivf_assign_pandas(
@@ -482,63 +452,6 @@ def ivf_topk(
     candidates = assigned.filter(F.col("centroid_id").isin(probe_ids))
     return cosine_topk(
         candidates, query_vec, k, id_col=id_col, vec_col=vec_col, round_to=round_to
-    )
-
-
-def build_ivf_index(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign_round_to: int | None = 6,
-) -> None:
-    """Materialize the IVF layout ON DISK: vectors written to parquet
-    partitioned by ``centroid_id``, one file per cell.  This turns the
-    in-memory ``filter(centroid_id ∈ probes)`` of :func:`ivf_topk` into
-    real PARTITION PRUNING — at 10^9 vectors a search opens
-    ``n_probe / k_cells`` of the files and never touches the rest (the
-    scan's ``PartitionFilters`` carries the probe predicate; pinned by
-    plan test).  The build is one assignment pass + one
-    cell-partitioned write — the offline index-build job, rerun (or
-    incrementally refreshed via ``lake.derived``) when centroids
-    retrain."""
-    assigned = ivf_assign_auto(
-        df.select(id_col, vec_col), centroids,
-        vec_col=vec_col, round_to=assign_round_to,
-    )
-    (
-        assigned.repartition(max(len(centroids), 1), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
-
-
-def ivf_index_topk(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    *,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
-    """IVF search over a :func:`build_ivf_index` layout: rank centroids
-    driver-side, read ONLY the probed cells' partition directories
-    (partition pruning — no assignment recompute, no full scan), score
-    survivors exactly.  Equals :func:`ivf_topk` over the same centroids
-    by construction (pinned in tests)."""
-    probe_ids = probe_cells(query_vec, centroids, n_probe)
-    cells = spark.read.parquet(path).filter(
-        F.col("centroid_id").isin([int(p) for p in probe_ids])
-    )
-    return cosine_topk(
-        cells, query_vec, k, id_col=id_col, vec_col=vec_col, round_to=round_to
     )
 
 
@@ -1369,41 +1282,3 @@ def semantic_dedup_recursive(
     if drops is None:
         return df.select(id_col)
     return df.join(drops.distinct(), id_col, "left_anti").select(id_col)
-
-
-def pq_codebooks_trained(
-    df: DataFrame,
-    *,
-    m: int = 8,
-    k: int = 16,
-    n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> list[list[tuple[int, list[float]]]]:
-    """Trained PQ codebooks: per-subspace Lloyd k-means (the production
-    PQ trainer), reusing :func:`train_centroids`'s deterministic recipe
-    on each subvector slice.  Returns the same shape as
-    :func:`pq_codebooks` (drop-in for :func:`pq_encode` /
-    :func:`pq_adc_topk` / :func:`ivf_pq_topk`).
-
-    Cost: m × n_iter corpus passes — an OFFLINE training job, run once
-    per index build and reused for every encode/search after.  Sampled
-    codebooks (:func:`pq_codebooks`) remain the oracle-friendly default;
-    trained ones cut quantization error on real corpora."""
-    dim = len(df.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books: list[list[tuple[int, list[float]]]] = []
-    for s in range(m):
-        sliced = df.select(
-            F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_sv")
-        )
-        books.append(
-            train_centroids(
-                sliced, k=k, n_iter=n_iter, id_col=id_col, vec_col="_sv",
-                round_to=round_to,
-            )
-        )
-    return books

@@ -1,17 +1,15 @@
 """Full fan-out composition drill (round-5 VERDICT #7), as ONE test
 chain: an upstream CDC pipeline's changefeed feeds a downstream CDC
-pipeline, whose table maintains the digest index the streaming curation
-gate probes — so a document landing in the UPSTREAM table changes the
-DOWNSTREAM gate's verdicts, with exactly-once semantics across a crash
-at every link.
+pipeline, whose table maintains a digest index — so a document landing
+in the UPSTREAM table changes the DOWNSTREAM index's probe answers, with
+exactly-once semantics across a crash at every link.
 
     WAL feed A ──CdcPipeline A──▶ table A
                      │ changefeed export (per applied epoch)
                      ▼
     feed B  ──CdcPipeline B──▶ table B ──refresh──▶ digest index
-                                   │ (minhash loader reads B per batch)
-                                   ▼
-    fresh docs ──StreamingCurationGate──▶ verdicts/batch_id=N
+                                                        │
+    fresh docs ──probe_digest_index────────────────────▶ new / dup
 """
 
 from __future__ import annotations
@@ -20,12 +18,11 @@ import json
 import os
 import shutil
 
-import pytest
 from pyspark.sql import types as T
 
-from tap_postgres_spark import textops
 from tap_postgres_spark.digestindex import (
     bootstrap_digest_index,
+    probe_digest_index,
     refresh_digest_index,
 )
 from tap_postgres_spark.lake import LakeTable
@@ -33,9 +30,8 @@ from tap_postgres_spark.modes.log_based import CdcPipeline
 from tap_postgres_spark.schema import StreamDef, widen_for_cdc
 from tap_postgres_spark.state import StateStore
 from tap_postgres_spark.streaming import StreamingCdcRunner
-from tap_postgres_spark.streaming.gate import StreamingCurationGate
 
-from tests.test_curation import GOOD, GOOD2, GOOD3, MH
+from tests.test_curation import GOOD, GOOD2, GOOD3
 
 NOVEL = (
     "a long road of stone runs from the town to the hills and the "
@@ -89,7 +85,15 @@ def _stage_feed_file(spark, feed_dir, stage_dir, name, rows, schema):
     shutil.move(part, os.path.join(feed_dir, name))
 
 
-def test_changefeed_to_gate_fanout_exactly_once(spark, tmp_path):
+def _dups(spark, didx, rows):
+    """doc_id -> True when the probe finds the content in the index."""
+    fresh = spark.createDataFrame(rows, FRESH_SCHEMA)
+    dup = probe_digest_index(spark, didx, fresh, "content", keep="dup")
+    hits = {r["doc_id"] for r in dup.collect()}
+    return {d: d in hits for d, _c in rows}
+
+
+def test_changefeed_to_digest_index_fanout_exactly_once(spark, tmp_path):
     # ---- upstream pipeline A (changefeed export rides every epoch) ----
     table_a = LakeTable.create(
         spark, str(tmp_path / "a"), widen_for_cdc(DOC_SCHEMA),
@@ -133,35 +137,14 @@ def test_changefeed_to_gate_fanout_exactly_once(spark, tmp_path):
     runner_b.run_available_now()
     assert {r["doc_id"] for r in table_b.read().collect()} == {"d1", "d2"}
 
-    # ---- maintained index off B + gate over a fresh-doc stream ----
+    # ---- maintained index off B, probed with fresh docs ----
     didx = str(tmp_path / "didx")
     bootstrap_digest_index(spark, table_b, didx, text_col="content", n_cells=4)
-    gate = StreamingCurationGate(
-        spark,
-        str(tmp_path / "fresh"),
-        str(tmp_path / "verdicts"),
-        str(tmp_path / "ckpt_gate"),
-        schema=FRESH_SCHEMA,
-        digest_index_root=didx,
-        minhash_index_loader=lambda: textops.minhash_banded(
-            table_b.read().select("doc_id", "content"), "content", "doc_id",
-            **MH,
-        ),
-        text_col="content",
-        id_col="doc_id",
-        **MH,
-    )
-    _stage_feed_file(
-        spark, str(tmp_path / "fresh"), str(tmp_path / "_st"), "f1.parquet",
-        [(100, GOOD), (101, NOVEL)], FRESH_SCHEMA,
-    )
-    gate.run_available_now()
-    v1 = {r["doc_id"]: r["verdict"] for r in gate.verdicts().collect()}
-    # GOOD lives in table B (via A's changefeed) → exact dup; NOVEL keeps
-    assert v1 == {100: "drop_exact", 101: "keep"}
+    # GOOD lives in table B (via A's changefeed) → dup; NOVEL is new
+    assert _dups(spark, didx, [(100, GOOD), (101, NOVEL)]) == {100: True, 101: False}
 
-    # ---- a document lands UPSTREAM mid-stream; the fan-out carries it
-    # to the gate without restarting anything ----
+    # ---- a document lands UPSTREAM; the fan-out carries it to the
+    # index without restarting anything ----
     _stage_feed_file(
         spark, wal_a, str(tmp_path / "_st"), "w2.parquet",
         [(20, 2, _payload("d3", LATE))], "lsn long, txid long, payload string",
@@ -171,22 +154,13 @@ def test_changefeed_to_gate_fanout_exactly_once(spark, tmp_path):
     assert {r["doc_id"] for r in table_b.read().collect()} == {"d1", "d2", "d3"}
     r = refresh_digest_index(table_b, didx)
     assert not r.get("skipped", False)
-    _stage_feed_file(
-        spark, str(tmp_path / "fresh"), str(tmp_path / "_st"), "f2.parquet",
-        [(200, LATE), (201, GOOD3)], FRESH_SCHEMA,
-    )
-    gate.run_available_now()              # same checkpoint: continues
-    v2 = {r["doc_id"]: r["verdict"] for r in gate.verdicts().collect()}
-    # LATE was born upstream AFTER the gate started — now an exact dup;
-    # GOOD3 never reached the chain → keep
-    assert v2 == {100: "drop_exact", 101: "keep",
-                  200: "drop_exact", 201: "keep"}
+    # LATE was born upstream AFTER the index was built — now a dup;
+    # GOOD3 never reached the chain → new
+    assert _dups(spark, didx, [(200, LATE), (201, GOOD3)]) == {200: True, 201: False}
 
     # ---- exactly-once across a crash at every link ----
-    # gate replay: same checkpoint, no new files → verdicts unchanged
-    n_before = gate.verdicts().count()
-    gate.run_available_now()
-    assert gate.verdicts().count() == n_before
+    # index replay: nothing new at B → the refresh is a no-op
+    assert refresh_digest_index(table_b, didx).get("skipped", False)
     # downstream replay: same checkpoint → no new epochs applied
     vb = table_b.current_version()
     runner_b.run_available_now()

@@ -1,17 +1,9 @@
-"""Stateful out-of-order monitor: batch-window form vs the
-applyInPandasWithState cross-batch form (SURVEY.md §2.10 T3
+"""Out-of-order monitor: the batch-window form (SURVEY.md §2.10 T3
 observability)."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
-from tap_postgres_spark.streaming.stateful import (
-    monotonicity_violations,
-    streaming_order_monitor,
-)
+from tap_postgres_spark.streaming.stateful import monotonicity_violations
 
 
 def test_batch_violations_window_form(spark):
@@ -31,104 +23,3 @@ def test_batch_violations_window_form(spark):
         for r in monotonicity_violations(df, "k", "o", "arr").collect()
     }
     assert got == {("a", 20, 30, 10), ("b", 2, 6, 4)}
-
-
-def test_streaming_monitor_catches_cross_batch_regression(spark, tmp_path):
-    """An event lower than a maximum applied in a PREVIOUS micro-batch is
-    only catchable with persistent state — the applyInPandasWithState
-    path.  Batch 1: (a,100); batch 2: (a,50) → regression."""
-    feed = str(tmp_path / "feed")
-    os.makedirs(feed)
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    spark.createDataFrame(
-        [("a", 100), ("b", 10)], "key string, ordinal long"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(feed, "f1"))
-    spark.createDataFrame(
-        [("a", 50), ("b", 20), ("b", 15)], "key string, ordinal long"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(feed, "f2"))
-
-    stream = (
-        spark.readStream.schema("key string, ordinal long")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed + "/*/")
-    )
-    q = (
-        streaming_order_monitor(stream, "key", "ordinal")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["key"], r["ordinal"], r["max_seen"], r["lag"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # a: 50 regressed vs 100 from the earlier batch; b: 15 vs 20 within
-    # the later file (within-batch order)
-    assert ("a", 50, 100, 50) in got
-    assert ("b", 15, 20, 5) in got
-    assert all(k in ("a", "b") for k, *_ in got)
-
-
-def test_streaming_sessionize_cross_batch(spark, tmp_path):
-    """Sessions split by gap across micro-batches, continued sessions
-    merge, and the emitted closed sessions match the batch twin's fold
-    on the same events."""
-    import datetime as dt
-
-    from tap_postgres_spark import pipelineops
-    from tap_postgres_spark.streaming.stateful import streaming_sessionize
-
-    def ts(minute):
-        return dt.datetime(2024, 1, 1, 0, minute)
-
-    feed = str(tmp_path / "sfeed")
-    os.makedirs(feed)
-    out_dir = str(tmp_path / "sout")
-    ckpt = str(tmp_path / "sckpt")
-    schema = "event_id long, ts timestamp_ntz, user_id long, value double"
-
-    # batch 1: user 7 session A (2 events), user 8 opens
-    b1 = [(1, ts(0), 7, 1.0), (2, ts(1), 7, 2.0), (10, ts(0), 8, 5.0)]
-    # batch 2: user 7 continues A (minute 2), then a >5-min gap closes A
-    # and opens B; user 8 gap closes its session too
-    b2 = [(3, ts(2), 7, 4.0), (4, ts(30), 7, 8.0), (11, ts(40), 8, 6.0)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(feed + "/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(feed + "/f2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed + "/*/")
-    )
-    q = (
-        streaming_sessionize(stream, gap_s=300)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_seq): (r.n_events, r.start_us, r.end_us, r.total_value_cents)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # closed sessions only: user 7's session 1 (3 events across batches,
-    # closed by the minute-30 event) and user 8's session 1
-    all_events = spark.createDataFrame(b1 + b2, schema)
-    batch = {
-        (r.user_id, r.session_seq): (r.n_events, r.start_us, r.end_us, r.total_value_cents)
-        for r in pipelineops.sessionize(all_events, gap_s=300).collect()
-    }
-    assert got == {k: v for k, v in batch.items() if k in got}  # value parity
-    assert set(got) == {(7, 1), (8, 1)}  # A closed for both users
-    assert got[(7, 1)][0] == 3  # continued across the batch boundary
-    # the open sessions (7,2) and (8,2) are in state, not emitted
-    assert (7, 2) not in got and (8, 2) not in got

@@ -210,6 +210,35 @@ def test_minhash_dedup_keep_window_form_equals_pair_rule(spark, docs):
         assert got == all_ids - losers - over_losers
 
 
+def test_minhash_banded_equals_bands_of_signatures(spark):
+    """minhash_banded (the per-row signature array, exploded into bands)
+    equals bands cut from minhash_signatures' mh* columns (the exploded
+    shingle aggregate), including short, empty and NULL documents."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "two words"),
+            (3, "one"),
+            (4, ""),
+            (5, "the quick brown fox jumps over the lazy dog"),
+            (6, None),
+        ],
+        "doc_id long, text string",
+    )
+    per_band = 16 // 4
+    want = {
+        (r.doc_id, b, ",".join(str(r[f"mh{b * per_band + i}"]) for i in range(per_band)))
+        for r in textops.minhash_signatures(docs).collect()
+        for b in range(4)
+    }
+    got = {
+        (r.doc_id, r.band, r.key)
+        for r in textops.minhash_banded(docs, bands=4).collect()
+    }
+    assert {d for d, _b, _k in want} == {1, 2, 3, 4, 5, 6}
+    assert got == want
+
+
 def test_bpe_token_count(spark):
     df = spark.createDataFrame(
         [(1, "hello world-42, it's ok")], ["doc_id", "text"]

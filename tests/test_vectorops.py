@@ -234,6 +234,21 @@ def test_train_centroids_local_twin_matches_distributed(spark, emb):
     assert over == dist
 
 
+def test_train_centroids_local_twin_matches_distributed_on_random_data(spark):
+    """The same parity off the fixture: 3,000 seeded random 16-d vectors,
+    k=8, three Lloyd iterations."""
+    rng = np.random.default_rng(11)
+    mat = rng.standard_normal((3000, 16))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
+        "vec_id long, embedding array<double>",
+    )
+    dist = vectorops.train_centroids(df, k=8, n_iter=3)
+    local = vectorops.train_centroids(df, k=8, n_iter=3, n_rows=len(mat))
+    assert len(dist) == 8
+    assert local == dist
+
+
 def test_train_centroids_local_twin_drops_empty_clusters(spark):
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(3)]
     rows += [(10 + i, [0.0, 1.0, 0.0, 0.0]) for i in range(3)]
@@ -253,23 +268,8 @@ def test_train_centroids_drops_empty_clusters(spark):
 
 
 def test_pandas_variants_match_expression_forms(spark, emb):
-    """The numpy-matmul UDF variants (the high-dim/high-k scale path) must
-    agree exactly with the Column-expression forms."""
-    planes = vectorops.make_planes(64, 8, seed=7)
-    expr = {
-        r["vec_id"]: r["b"]
-        for r in emb.select(
-            "vec_id", vectorops.hyperplane_bits(F.col("embedding"), planes).alias("b")
-        ).collect()
-    }
-    pud = {
-        r["vec_id"]: r["b"]
-        for r in emb.select(
-            "vec_id", vectorops.hyperplane_bits_pandas("embedding", planes).alias("b")
-        ).collect()
-    }
-    assert expr == pud
-
+    """The numpy-matmul centroid assignment (the high-k scale path) must
+    agree exactly with the Column-expression form."""
     rows = {r["vec_id"]: list(r["embedding"]) for r in emb.limit(6).collect()}
     cents = [(cid, v) for cid, v in rows.items()]
     a_expr = {
@@ -609,58 +609,3 @@ def test_ann_paths_recall_vs_exact(spark, emb, emb_np):
     # 0.4 on the weak-locality corpus
     cbs = vectorops.pq_codebooks(emb, m=8, k=16)
     assert recall(vectorops.pq_adc_topk(emb, q, cbs, k=10)) >= 0.3
-
-
-def test_pq_codebooks_trained_drop_in_and_improves_distortion(spark, emb, emb_np):
-    """Trained codebooks slot into the same encode/ADC machinery and cut
-    (or at worst match) mean quantization distortion vs sampled ones."""
-    ids, mat = emb_np
-    sampled = vectorops.pq_codebooks(emb, m=8, k=8)
-    trained = vectorops.pq_codebooks_trained(emb, m=8, k=8, n_iter=1)
-    # deterministic: second run identical
-    assert trained == vectorops.pq_codebooks_trained(emb, m=8, k=8, n_iter=1)
-    m, sub = 8, mat.shape[1] // 8
-
-    def distortion(cbs):
-        codes = {
-            r["vec_id"]: list(r["codes"])
-            for r in vectorops.pq_encode(emb, cbs).collect()
-        }
-        tot = 0.0
-        for i, vid in enumerate(ids):
-            for s in range(m):
-                # codebooks may drop empty clusters: cid -> index lookup
-                cb = dict(cbs[s])
-                cvec = np.array(cb[sorted(cb)[0]] if codes[int(vid)][s] not in cb
-                                else cb[codes[int(vid)][s]])
-                xs = mat[i, s * sub : (s + 1) * sub]
-                tot += float(((xs - cvec) ** 2).sum())
-        return tot / len(ids)
-
-    assert distortion(trained) <= distortion(sampled) * 1.01
-    # drop-in: ADC top-k runs and returns k rows
-    q = list(mat[0])
-    got = vectorops.pq_adc_topk(emb, q, trained, k=5).collect()
-    assert len(got) == 5
-
-
-def test_ivf_index_on_disk_partition_pruning(spark, emb, tmp_path):
-    """build_ivf_index materializes the cell layout on disk; the search
-    reads ONLY probed partitions (PartitionFilters in the scan) and
-    equals the in-memory ivf_topk exactly."""
-    rows = {r["vec_id"]: list(r["embedding"]) for r in emb.limit(4).collect()}
-    cents = [(cid, v) for cid, v in rows.items()]
-    path = str(tmp_path / "ivf")
-    vectorops.build_ivf_index(emb, cents, path)
-
-    import os
-
-    cells = [d for d in os.listdir(path) if d.startswith("centroid_id=")]
-    assert len(cells) >= 2  # real cell dirs on disk
-
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
-    got = vectorops.ivf_index_topk(spark, path, q, cents, k=10, n_probe=1)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-    mem = vectorops.ivf_topk(emb, q, cents, k=10, n_probe=1)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in mem.collect()]
