@@ -24,6 +24,8 @@ Config keys (JSON file passed via --config):
 - ``txn_boundary_dir``  defer uncommitted transactions across batches (modes/txn.py)
 - ``snapshots_dir``     publish cross-table consistent snapshots per epoch (lake/snapshots.py)
 - ``changefeed_dir``    re-publish each stream's changelog as a WAL feed per epoch (lake/changefeed.py)
+- ``partial_updates``   fill TOAST-unchanged columns from the table's image (operators/partial.py)
+- ``key_updates``       apply primary-key-changing UPDATEs as delete + insert
 - ``spark``             {"master": "local[8]", "shuffle_partitions": N}
 
 Stdout carries ONLY Singer messages (one JSON per line); diagnostics go
@@ -244,6 +246,7 @@ _CONFIG_KEYS = {
     "pg_types", "num_buckets", "max_files_per_trigger", "start_date",
     "stream_maps", "stream_map_config", "spark", "retention_keep_last",
     "txn_boundary_dir", "snapshots_dir", "changefeed_dir",
+    "partial_updates", "key_updates",
 }
 
 
@@ -260,6 +263,8 @@ def about() -> dict[str, Any]:
             "snapshot-to-stream bootstrap", "timestamp time travel",
             "snapshot retention (expire_versions)",
             "incrementally-maintained derived tables",
+            "partial updates (TOAST-unchanged columns)",
+            "primary-key-changing updates",
         ],
         "settings": sorted(_CONFIG_KEYS),
     }

@@ -9,11 +9,6 @@ document corpus to packed training-shard assignments,
     benchmark decontamination → per-source cap → mixture downsampling →
     sequence packing
 
-plus the **incremental gate** (:func:`curation_gate`) that applies the
-same dedup frontier to a FRESH batch by probing the maintained corpus
-indexes (digest membership index + banded MinHash index, both refreshed
-off the CDC changelog) at O(|fresh|) instead of re-scanning the corpus.
-
 Scale shape of the batch composition:
 
 - Stage outputs that feed joins are **id-only relations** — after the
@@ -41,7 +36,7 @@ large-scale-training-pipeline extension the build brief mandates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .pipelineops import (
@@ -51,7 +46,7 @@ from .pipelineops import (
     pack_sequences,
     quality_logit_expr,
 )
-from .textops import minhash_dedup_keep, probe_minhash_index, quality_features
+from .textops import minhash_dedup_keep, quality_features
 
 
 def curate_corpus(
@@ -152,72 +147,3 @@ def curate_corpus(
         id_col, group_col, source_col, "n_tokens", "shard_seq"
     )
 
-
-def curation_gate(
-    spark: SparkSession,
-    fresh: DataFrame,
-    *,
-    digest_index_root: str,
-    minhash_index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    quality_threshold: float = 0.0,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    max_bucket_size: int | None = None,
-    index_id_col=None,
-) -> DataFrame:
-    """Incremental ingest gate: verdict per fresh document against the
-    MAINTAINED corpus, at O(|fresh|).
-
-    The batch pipeline's dedup frontier (quality → exact → near-dup),
-    re-expressed against the two incrementally-maintained indexes:
-
-    - exact dedup probes the digest membership index
-      (:func:`digestindex.probe_digest_index` — opens only the bucket
-      dirs the fresh digests hash to, corpus never shuffles);
-    - near-dup probes the banded MinHash index
-      (:func:`textops.probe_minhash_index` — probe side broadcast, the
-      10^10-row index never shuffles).
-
-    Returns ``(id_col, verdict)`` with verdict one of
-    ``keep | drop_quality | drop_exact | drop_neardup`` — exactly one
-    row per fresh document, first matching rule wins (quality before
-    exact before near-dup, mirroring the batch stage order).  Fresh
-    batches are assumed pre-deduped among themselves (the CDC LWW fold
-    guarantees one live row per key); intra-batch duplicates are the
-    batch pipeline's job.
-    """
-    from .digestindex import probe_digest_index
-
-    feats = quality_features(fresh, text_col=text_col)
-    ok = F.round(quality_logit_expr(), 6) > quality_threshold
-    q_fail = feats.filter(~ok).select(id_col)
-    passing = feats.filter(ok).select(*fresh.columns)
-
-    dup = probe_digest_index(
-        spark, digest_index_root, passing, text_col, keep="dup"
-    ).select(id_col)
-    new = passing.join(dup, id_col, "left_anti")
-
-    near = (
-        probe_minhash_index(
-            minhash_index, new, text_col, id_col,
-            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-            max_bucket_size=max_bucket_size, index_id_col=index_id_col,
-        )
-        .select(F.col(f"probe_{id_col}").alias(id_col))
-        .distinct()
-    )
-    kept = new.join(near, id_col, "left_anti").select(id_col)
-
-    verdict = lambda df, v: df.select(  # noqa: E731
-        id_col, F.lit(v).alias("verdict")
-    )
-    return (
-        verdict(q_fail, "drop_quality")
-        .unionAll(verdict(dup, "drop_exact"))
-        .unionAll(verdict(near, "drop_neardup"))
-        .unionAll(verdict(kept, "keep"))
-    )

@@ -46,9 +46,9 @@ parquet nulls cost ~nothing on disk).
 Falls back (``prepare_grouped_fused`` returns ``None``) when streams
 share a column name at conflicting types/coercions, or when a table's
 schema would need a widening cast the fused projection didn't produce;
-the caller (``CdcPipeline``) does not try it for one stream, stream
-maps, partial updates or key updates.  All of those take the sequential
-per-stream merges.
+the caller (``CdcPipeline``) does not try it for stream maps, partial
+updates or key updates.  All of those take the sequential per-stream
+merges; every other pipeline, one stream included, lands through here.
 """
 
 from __future__ import annotations

@@ -6,8 +6,13 @@ micro-batch flows::
     raw (lsn, txid, payload)
       → parse (enum repair + from_json)                 [decode.parse_raw_payloads]
       → classify (status + fqn routing)                 [decode.classify]
-      → per-stream: evolve schema → typed decode        [decode.decode_stream]
-        → agg LWW fold → MERGE INTO lake table          [LakeTable.merge_into]
+      → every stream in one plan, one stream included:
+        union decode → one LWW fold → one staged write
+        → a commit per table                            [lake.grouped fused merge]
+        (per stream instead, for stream maps, partial updates, key
+        updates or a type the shared projection cannot express:
+        typed decode → agg LWW fold → MERGE INTO        [LakeTable.merge_into])
+      → evolution correction, then compaction           [_evolve, LakeTable.compact]
       → bookmark advance + metrics/lineage write        [StateStore / metrics]
 
 This is the vectorized re-creation of the reference's shared
@@ -385,20 +390,15 @@ class CdcPipeline:
         # full LEAN_SCHEMA parse happens exactly once, here
         envelope = raw if "_env" in raw.columns else parse_raw_payloads(raw)
         classified = classify(envelope, fqns)
-        # fused multi-stream merge (lake/grouped.py): ONE decode + fold +
-        # write job for all streams instead of N per-stream merge jobs —
-        # the round-4 profile showed the 8-stream small-batch gap is N×
-        # duplicated batch scans plus per-job fixed overhead.  prepare is
-        # driver-only (metadata + schema checks); None → the sequential
-        # per-stream merges below, as for one stream, stream maps,
-        # partial updates and key updates.
+        # fused merge (lake/grouped.py): ONE decode + fold + write job for
+        # all streams, one stream included, instead of a merge job per
+        # stream — the round-4 profile showed the 8-stream small-batch gap
+        # is N× duplicated batch scans plus per-job fixed overhead.
+        # prepare is driver-only (metadata + schema checks); None → the
+        # sequential per-stream merges below, as for stream maps, partial
+        # updates and key updates.
         fused_plan = None
-        if (
-            len(self.streams) > 1
-            and not self.stream_maps
-            and not self.partial_updates
-            and not self.key_updates
-        ):
+        if not (self.stream_maps or self.partial_updates or self.key_updates):
             from ..lake.grouped import prepare_grouped_fused
 
             fused_plan = prepare_grouped_fused(
@@ -411,12 +411,11 @@ class CdcPipeline:
                 staging_root=os.path.join(self.tables[fqns[0]].path, "_staging"),
                 batch_time=batch_time,
             )
-        # caching the parsed batch only pays off when several streams will
-        # re-scan it; the fused plan scans it exactly ONCE (its rare
-        # re-readers — dead-letter quarantine, evolution discovery — are
-        # cheaper as a re-parse than every batch paying the cache write),
-        # and for the single-stream flagship path a re-parse is cheaper
-        # than materializing nested structs into the block store
+        # caching the parsed batch only pays off when several per-stream
+        # merges will re-scan it; the fused plan scans it exactly ONCE (its
+        # rare re-readers — dead-letter quarantine, evolution discovery —
+        # are cheaper as a re-parse than every batch paying the cache
+        # write), and so does a single per-stream merge
         cache = len(self.streams) > 1 and fused_plan is None
         if cache:
             classified = classified.persist()
@@ -610,31 +609,20 @@ class CdcPipeline:
                     ),
                     stream,
                 )
-                pfolded = None
+                evolve_meta: dict[str, tuple] = {}
                 if self.partial_updates:
                     # the correction re-decodes the batch with the EVOLVED
                     # schema (new mask bit order), so it needs its own
                     # per-column fold + fill; the table it fills from
                     # already holds this batch's main merge, which the
                     # corrected rows supersede via the _sdc_gen tie-break
-                    from ..decode import data_columns
-                    from ..operators.partial import (
-                        fold_partial_lww,
-                        resolve_partial_images,
-                    )
-
-                    key_cols = self.tables[fqn].metadata()["key_columns"]
-                    dcols = data_columns(stream)
-                    pfolded = fold_partial_lww(
-                        corrected, key_cols, dcols
-                    ).persist()
-                    corrected, _psum = resolve_partial_images(
-                        self.tables[fqn], pfolded, key_cols, dcols
+                    corrected = self._resolve_partial(
+                        fqn, stream, corrected, evolve_meta
                     )
                 results[fqn]["evolution"] = self.tables[fqn].merge_into(
                     corrected, epoch_id=f"{epoch_id}:{fqn}:evolve"
                 )
-                if pfolded is not None:
+                for _summary, _pobs, pfolded in evolve_meta.values():
                     pfolded.unpersist()
                 results[fqn]["evolved_columns"] = [c for c, _t in new_cols]
                 if retyped:

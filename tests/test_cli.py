@@ -175,6 +175,17 @@ def test_about_and_config_validation():
     assert r.returncode == 0 and json.loads(r.stdout)["name"] == "tap-postgres-spark"
 
 
+def test_config_accepts_partial_and_key_updates():
+    """``_sync_log_based`` reads ``partial_updates`` and ``key_updates``,
+    so a config file may set them and ``--about`` lists them."""
+    from tap_postgres_spark.__main__ import about, validate_config
+
+    validate_config(
+        {"source_dir": "/x", "partial_updates": True, "key_updates": True}
+    )
+    assert {"partial_updates", "key_updates"} <= set(about()["settings"])
+
+
 def test_explain_list_subprocess():
     """--explain list enumerates every __spark_entry__ query without a
     SparkSession; an unknown name exits 2 with a hint."""

@@ -1,18 +1,12 @@
 """Composed curation pipeline (curation.py): batch composition ≡
-sequential application of the component operators, stage wiring edge
-cases, and the incremental curation_gate's verdicts against maintained
-corpus indexes (digest membership + banded MinHash)."""
+sequential application of the component operators, and stage wiring
+edge cases."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tap_postgres_spark import curation, pipelineops, textops
-from tap_postgres_spark.digestindex import bootstrap_digest_index
-from tap_postgres_spark.lake import LakeTable
-from tap_postgres_spark.schema import widen_for_cdc
 
 # stopword-rich sentences pass the quality gate; junk fails it
 GOOD = "the cat and the dog of the house is to run in the park for fun on the mat with joy"
@@ -123,84 +117,3 @@ class TestCurateCorpus:
         assert set(out.columns) == {
             "doc_id", "lang", "source", "n_tokens", "shard_seq"
         }
-
-
-SCHEMA = widen_for_cdc(
-    T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("content", T.StringType(), True),
-        ]
-    )
-)
-
-
-class TestCurationGate:
-    @pytest.fixture()
-    def corpus_table(self, spark, tmp_path):
-        t = LakeTable.create(
-            spark, str(tmp_path / "base"), SCHEMA, ["doc_id"], num_buckets=2
-        )
-        rows = [(1, GOOD), (2, GOOD2), (3, GOOD3)]
-        t.merge_into(
-            spark.createDataFrame(
-                [(d, c, 10 + d, None, 1, "U") for d, c in rows],
-                "doc_id long, content string, _sdc_lsn long, "
-                "_sdc_deleted_at string, txid long, _action string",
-            ),
-            epoch_id="seed",
-        )
-        return t
-
-    def test_verdicts(self, spark, tmp_path, corpus_table):
-        root = str(tmp_path / "didx")
-        bootstrap_digest_index(
-            spark, corpus_table, root, text_col="content", n_cells=4
-        )
-        corpus_docs = corpus_table.read().select("doc_id", "content")
-        mh_index = textops.minhash_banded(corpus_docs, "content", "doc_id", **MH)
-
-        fresh = spark.createDataFrame(
-            [
-                (100, JUNK),            # fails quality
-                (101, GOOD),            # exact dup of corpus doc 1
-                (102, GOOD2.upper()),   # near dup of corpus doc 2 (case only)
-                (103, GOOD4),   # genuinely novel content
-            ],
-            "doc_id long, content string",
-        )
-        out = {
-            r.doc_id: r.verdict
-            for r in curation.curation_gate(
-                spark, fresh,
-                digest_index_root=root, minhash_index=mh_index,
-                text_col="content", id_col="doc_id", **MH,
-            ).collect()
-        }
-        assert out == {
-            100: "drop_quality",
-            101: "drop_exact",
-            102: "drop_neardup",
-            103: "keep",
-        }
-
-    def test_gate_is_exhaustive_and_disjoint(self, spark, tmp_path, corpus_table):
-        # every fresh id gets exactly one verdict
-        root = str(tmp_path / "didx2")
-        bootstrap_digest_index(
-            spark, corpus_table, root, text_col="content", n_cells=4
-        )
-        corpus_docs = corpus_table.read().select("doc_id", "content")
-        mh_index = textops.minhash_banded(corpus_docs, "content", "doc_id", **MH)
-        fresh = spark.createDataFrame(
-            [(i, GOOD + f" tail {i}") for i in range(200, 210)] + [(210, JUNK)],
-            "doc_id long, content string",
-        )
-        out = curation.curation_gate(
-            spark, fresh,
-            digest_index_root=root, minhash_index=mh_index,
-            text_col="content", id_col="doc_id", **MH,
-        )
-        rows = out.collect()
-        assert len(rows) == 11
-        assert {r.doc_id for r in rows} == set(range(200, 211))

@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from tap_postgres_spark.decode import classify, parse_raw_payloads
+from tap_postgres_spark.decode import classify, decode_stream, parse_raw_payloads
 from tap_postgres_spark.lake import LakeTable
 from tap_postgres_spark.lake.table import SDC_GEN
 from tap_postgres_spark.lake.grouped import (
@@ -41,9 +41,9 @@ def _schema(*names):
 
 def _build(spark, root, grouped: bool):
     """``grouped``: one 3-stream pipeline, which takes the fused commit.
-    Otherwise the per-stream reference: one single-stream pipeline per
-    table fed the same batches (the other tables' events classify as
-    unroutable there)."""
+    Otherwise the per-stream reference: each table fed the same batches
+    through ``decode_stream`` + ``LakeTable.merge_into`` (a one-stream
+    pipeline would take the fused commit too)."""
     # three streams with DIFFERENT column sets — exercises the
     # unionByName null-fill — one of which (t_c) goes quiet in batch 2
     # (zero-row branch still commits its epoch)
@@ -59,20 +59,24 @@ def _build(spark, root, grouped: bool):
         )
         for s in streams
     }
-
-    def pipeline(defs, name):
-        return CdcPipeline(
-            spark, defs,
-            {s.fqn: {f.name: "text" for f in s.spark_schema.fields} for s in defs},
-            {s.fqn: tables[s.fqn] for s in defs},
-            StateStore(str(root / f"{name}.json")),
-        )
-
-    pipes = (
-        [pipeline(streams, "state")]
-        if grouped
-        else [pipeline([s], s.table_name) for s in streams]
+    pg_types = {s.fqn: {f.name: "text" for f in s.spark_schema.fields} for s in streams}
+    pipe = CdcPipeline(
+        spark, streams, pg_types, tables, StateStore(str(root / "state.json"))
     )
+
+    def apply(rows, epoch):
+        raw = spark.createDataFrame(rows, "lsn long, txid long, payload string")
+        if grouped:
+            return pipe.apply_batch(raw, epoch_id=epoch)["streams"]
+        cls = classify(parse_raw_payloads(raw), list(tables))
+        return {
+            s.fqn: tables[s.fqn].merge_into(
+                decode_stream(cls, s, pg_types[s.fqn]),
+                epoch_id=f"{epoch}:{s.fqn}",
+            )
+            for s in streams
+        }
+
     b1 = [
         (10, 1, _payload("I", "t_a", id="a1", v="x")),
         (11, 1, _payload("I", "t_b", id="b1", w="y", x="q")),
@@ -87,15 +91,10 @@ def _build(spark, root, grouped: bool):
         (22, 3, _payload("U", "t_a", id="a1", v="x3")),
     ]
     for i, rows in enumerate((b1, b2)):
-        raw = spark.createDataFrame(rows, "lsn long, txid long, payload string")
-        for pipe in pipes:
-            pipe.apply_batch(raw, epoch_id=f"e{i}")
+        apply(rows, f"e{i}")
     # crash-replay of the last epoch must be a no-op
-    raw = spark.createDataFrame(b2, "lsn long, txid long, payload string")
-    for pipe in pipes:
-        res = pipe.apply_batch(raw, epoch_id="e1")
-        assert all(r.get("skipped") for r in res["streams"].values())
-    return pipes[0], {
+    assert all(r.get("skipped") for r in apply(b2, "e1").values())
+    return pipe, {
         fqn: sorted(map(tuple, t.read().collect()))
         for fqn, t in tables.items()
     }
@@ -384,6 +383,53 @@ def test_fused_write_is_one_job_on_the_dataframes_session(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup("fused-one-job")) == 1
     assert (spark.conf.get(aqe), clone.conf.get(aqe)) == before
     assert [r["rows_written"] for r in res.values()] == [1, 1]
+
+
+def test_one_stream_pipeline_takes_the_fused_write(spark, tmp_path, monkeypatch):
+    """A plain one-stream pipeline lands through the fused plan too: one
+    Spark job for the whole apply_batch on the batch's own (cloned)
+    session, no merge_into, and neither session's AQE setting moves."""
+    aqe = "spark.sql.adaptive.enabled"
+    clone = spark.newSession()
+    before = (spark.conf.get(aqe), clone.conf.get(aqe))
+    s = StreamDef("public", "t_a", _schema("id", "v"), ("id",))
+    table = LakeTable.create(
+        spark, str(tmp_path / "t_a"), widen_for_cdc(s.spark_schema),
+        ["id"], num_buckets=2,
+    )
+    pipe = CdcPipeline(
+        spark, [s], {s.fqn: {"id": "text", "v": "text"}}, {s.fqn: table},
+        StateStore(str(tmp_path / "state.json")),
+    )
+    merges = []
+    real_merge = LakeTable.merge_into
+
+    def spy(self, *a, **kw):
+        merges.append(self.path)
+        return real_merge(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "merge_into", spy)
+    raw = clone.createDataFrame(
+        [
+            (10, 1, _payload("I", "t_a", id="a1", v="x")),
+            (11, 1, _payload("I", "t_a", id="a2", v="y")),
+            (12, 2, _payload("U", "t_a", id="a1", v="x2")),
+        ],
+        "lsn long, txid long, payload string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("one-stream-fused", "one-stream apply_batch")
+    try:
+        res = pipe.apply_batch(raw, epoch_id="e0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one-stream-fused")) == 1
+    assert merges == []
+    assert (spark.conf.get(aqe), clone.conf.get(aqe)) == before
+    assert res["streams"][s.fqn]["rows_written"] == 2
+    assert sorted(
+        tuple(r) for r in table.read().select("id", "v").collect()
+    ) == [("a1", "x2"), ("a2", "y")]
 
 
 def test_fused_memo_hits_and_per_epoch_literals_stay_live(spark, tmp_path):
