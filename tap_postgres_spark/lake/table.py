@@ -118,6 +118,22 @@ def _list_parquet_files(directory: str) -> list[str]:
     return sorted(out)
 
 
+def _collect_arrow(df: DataFrame) -> pa.Table:
+    """``df``'s rows as an Arrow table.  A plan that optimizes to a
+    local relation (keys built on the driver) is collected with no
+    Spark job, which ``toArrow`` would run; any other plan takes one."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return df.toArrow()
+    rows = df.collect()
+    if not rows:
+        return to_arrow_schema(df.schema).empty_table()
+    return LocalDataToArrowConversion.convert(rows, df.schema, False)
+
+
 def _footer_stats(
     files: list[str], column: str | None
 ) -> tuple[int, int | None]:
@@ -698,10 +714,12 @@ class LakeTable:
         """Point/batch read: rows whose key appears in ``keys_df`` (a
         DataFrame carrying the key columns), from one table version.
         Keys match NULL-safely (a NULL key finds the NULL-keyed row).  A
-        bounded probe collects up to ``pushdown_limit + 1`` distinct
-        keys; its size picks the strategy:
+        bounded probe collects up to ``pushdown_limit + 1`` key rows, as
+        they come (no ``distinct``, so at most one Spark job, and none
+        when ``keys_df`` is a local relation); its raw row count picks
+        the strategy, and its rows are deduplicated on the driver:
 
-        - ``≤ pushdown_limit`` keys (point reads): the probe is the only
+        - ``≤ pushdown_limit`` rows (point reads): the probe is the only
           Spark action.  Bucket ids come from the probed rows (the
           table's bucket expression over a local relation, which Spark
           evaluates on the driver), so only the buckets the keys hash to
@@ -717,10 +735,11 @@ class LakeTable:
           groups (selective on compacted, key-clustered files) and the
           LWW fold runs over the survivors only.  Both return the same
           rows, columns and types.
-        - larger key sets (batch lookups — e.g. re-scoring a changelog's
-          keys): NO row collect and no predicate tree.  Bucket pruning
-          still applies (the distinct-bucket list is bounded by
-          ``num_buckets``, never by the key count), then a broadcast
+        - more rows (batch lookups — e.g. re-scoring a changelog's keys —
+          or many duplicates of a few keys): NO row collect and no
+          predicate tree.  Bucket pruning still applies (the
+          distinct-bucket list is bounded by ``num_buckets``, never by
+          the key count), then a broadcast
           LEFT SEMI join filters the pruned scan BELOW the LWW fold
           (``read(semi_keys=...)``) — fold work is O(matching rows),
           not O(pruned buckets).  At 10^6 lookup keys against 10^10
@@ -730,11 +749,12 @@ class LakeTable:
         """
         meta = self.metadata()
         version, keys = meta["version"], meta["key_columns"]
-        kdf = keys_df.select(*keys).distinct()
-        probe = kdf.limit(pushdown_limit + 1).toArrow()
+        kdf = keys_df.select(*keys)
+        probe = _collect_arrow(kdf.limit(pushdown_limit + 1))
         if probe.num_rows > pushdown_limit:
             bks = self.buckets_for_keys(kdf, version)
             return self.read(version, buckets=bks, semi_keys=kdf, columns=columns)
+        probe = probe.group_by(keys, use_threads=False).aggregate([])
         schema = T.StructType.fromJson(meta["schema"])
         if columns is not None:
             schema = self._narrow_schema(schema, keys, columns)

@@ -116,6 +116,18 @@ def get_spark(
             .config("spark.executor.extraClassPath", jar)
             .config("spark.hadoop.fs.file.impl", "tps.FastLocalFileSystem")
         )
+    # Python workers import PySpark from the installed package rather
+    # than from Spark's pyspark.zip, which every Python task would
+    # otherwise re-read (see tap_postgres_spark/daemon.py).  The package's
+    # parent goes on the workers' PYTHONPATH so the daemon module imports
+    # from any cwd.  Local masters only: a cluster's executors need not
+    # have the package at this driver's path.
+    if master == "local" or master.startswith("local["):
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.config("spark.python.daemon.module", "tap_postgres_spark.daemon")
+            .config("spark.executorEnv.PYTHONPATH", pkg_parent)
+        )
     # Deployment override hook: SPARK_GRAFT_CONF="k=v;k2=v2" lets
     # spark-submit wrappers / bench tooling tune any Spark conf without a
     # code change (e.g. spark.io.compression.codec=zstd on a
@@ -130,11 +142,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Prewarm the Python worker pool (guide §4): the FIRST Arrow/pandas
-    # stage in a session pays daemon start + one fork per core + the
-    # pandas/pyarrow imports in every worker (measured 2.3 s cold vs
-    # 0.4 s warm for an identical trivial mapInPandas on local[32]) —
-    # without this, that startup lands inside whichever query touches
-    # Python first.  One tiny pass-through job here moves it to session
+    # stage in a session pays the session's first job, daemon start, one
+    # fork per core and the pandas/pyarrow imports in every worker.  On a
+    # 4 vCPU host at local[4], a trivial mapInPandas took 3.6-4.0 s cold
+    # and 0.16-0.20 s warm (4.9-5.5 s and 0.31-0.36 s while the workers
+    # imported PySpark from Spark's zip; the old "2.3 s vs 0.4 s" figure
+    # was mostly that cost).  The prewarm adds 3.5-5 s to session start
+    # and saves about as much in the first Python query: it moves the
+    # startup out of whichever query touches Python first, to session
     # construction, the same place the JVM's own JIT warmup lives.
     # Computes nothing reusable; SPARK_GRAFT_PREWARM_PYTHON=0 opts out.
     if (

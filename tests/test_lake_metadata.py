@@ -442,7 +442,7 @@ def test_read_keys_point_read_runs_only_the_probe(spark, tmp_path, threshold):
     t, keys = _point_table(spark, str(tmp_path / "pt"))
     threshold("10MB")
     probe = _spark_jobs(
-        spark, lambda: keys.select("repo", "path").distinct().limit(129).toArrow()
+        spark, lambda: keys.select("repo", "path").limit(129).toArrow()
     )
     rows = []
     assert _spark_jobs(spark, lambda: rows.extend(t.read_keys(keys).collect())) == probe
@@ -453,13 +453,50 @@ def test_read_keys_point_read_runs_only_the_probe(spark, tmp_path, threshold):
     )
 
 
+def test_read_keys_probe_jobs(spark, tmp_path, threshold):
+    """Inside the driver gate, a key DataFrame built from Arrow (a local
+    relation) costs no Spark job at all, and one built from a Python
+    list (an RDD the workers unpickle) costs at most one."""
+    import pyarrow as pa
+
+    t, listed = _point_table(spark, str(tmp_path / "pt"))
+    threshold("10MB")
+    arrow = spark.createDataFrame(
+        pa.table({"repo": ["r1", "r1", "r9"], "path": ["p3", "p5", "p1"]})
+    )
+    want = [("r1", "p3", "v2.3")]
+    for keys, most in ((arrow, 0), (listed, 1)):
+        rows = []
+        assert _spark_jobs(spark, lambda: rows.extend(t.read_keys(keys).collect())) <= most
+        assert [(r["repo"], r["path"], r["content"]) for r in rows] == want
+
+
+def test_read_keys_duplicate_key_rows(spark, tmp_path):
+    """200 raw key rows of 3 distinct keys (more rows than the probe
+    bound) return the rows the 3 keys return."""
+    t, _ = _point_table(spark, str(tmp_path / "pt"))
+    three = [("r1", "p3"), ("r1", "p6"), ("r9", "p1")]
+
+    def read(n):
+        keys = spark.createDataFrame(
+            [three[i % 3] for i in range(n)], "repo string, path string"
+        )
+        return sorted(map(tuple, t.read_keys(keys).collect()))
+
+    want = read(3)
+    assert [r[:2] for r in want] == [("r1", "p3"), ("r1", "p6")]
+    assert read(200) == want
+    # under the bound too: the probe's duplicates fold on the driver
+    assert read(9) == want
+
+
 def test_read_keys_above_threshold_takes_spark_read(spark, tmp_path, threshold):
     """Pruned files over ``spark.sql.autoBroadcastJoinThreshold`` (or a
     threshold of -1) take the Spark point read, with the same rows."""
     t, keys = _point_table(spark, str(tmp_path / "pt"))
     threshold("10MB")
     probe = _spark_jobs(
-        spark, lambda: keys.select("repo", "path").distinct().limit(129).toArrow()
+        spark, lambda: keys.select("repo", "path").limit(129).toArrow()
     )
     want = sorted(map(tuple, t.read_keys(keys).collect()))
     for v in ("100b", "-1"):
@@ -513,7 +550,7 @@ def test_read_keys_driver_read_keeps_types(spark, tmp_path, threshold):
                              num_buckets=2)
         t.merge_into(frame, epoch_id="e1")
         threshold("10MB")
-        probe = _spark_jobs(spark, lambda: keys.distinct().limit(129).toArrow())
+        probe = _spark_jobs(spark, lambda: keys.limit(129).toArrow())
         jobs = _spark_jobs(spark, lambda: t.read_keys(keys).select("id").collect())
         assert (jobs == probe) == (name == "typed")
         local = t.read_keys(keys).orderBy("id")

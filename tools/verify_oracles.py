@@ -67,10 +67,6 @@ def main():
 
     import __spark_entry__ as entry_mod
 
-    # Python workers import the package from their own cwd when they
-    # unpickle a UDF; the JVM they start from inherits this environment
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [ROOT] + [p for p in [os.environ.get("PYTHONPATH")] if p])
     spark = get_spark("verify-oracles", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
