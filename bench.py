@@ -208,15 +208,11 @@ def bench_cdc_replay(spark, sf: float, work_dir: str, n_batches: int) -> dict:
         # periodic full pass.  Retention runs inside the timed path too
         # (keep_last=4 expires the earliest merge versions here), so the
         # headline number includes the third maintenance op, not just
-        # compaction.
-        if len(tables) > 1:
-            # fold every table's delta tier in ONE job (lake/grouped.py)
-            from tap_postgres_spark.lake.grouped import compact_grouped
+        # compaction.  Every table's delta tier folds in ONE job, one
+        # table or N (lake/grouped.py).
+        from tap_postgres_spark.lake.grouped import compact_grouped
 
-            compact_grouped(spark, tables)
-        else:
-            for t in tables.values():
-                t.compact(max_delta_depth=1, include_base=False)
+        compact_grouped(spark, tables)
         for t in tables.values():
             t.expire_versions(keep_last=4)
         elapsed = time.time() - t0

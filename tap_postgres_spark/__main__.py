@@ -48,6 +48,7 @@ from .modes.full_table import full_table_scan
 from .modes.incremental import commit_bookmark, incremental_scan
 from .modes.log_based import CdcPipeline
 from .schema import StreamDef, widen_for_cdc
+from .session import get_spark
 from .state import StateStore
 
 
@@ -115,16 +116,11 @@ def select_streams(
 
 def _spark(config: dict[str, Any]) -> SparkSession:
     sconf = config.get("spark", {})
-    b = (
-        SparkSession.builder.appName("tap-postgres-spark")
-        .master(sconf.get("master", "local[8]"))
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(sconf.get("shuffle_partitions", 8)),
-        )
-        .config("spark.ui.enabled", "false")
+    return get_spark(
+        "tap-postgres-spark",
+        cores=sconf.get("master", "local[8]"),
+        shuffle_partitions=int(sconf.get("shuffle_partitions", 8)),
     )
-    return b.getOrCreate()
 
 
 def _discover(spark: SparkSession, config: dict[str, Any]) -> list[StreamDef]:
@@ -306,8 +302,6 @@ def _explain(query: str, sf_dir: str) -> int:
         print(f"unknown query {query!r}; --explain list shows all", file=sys.stderr)
         return 2
     report = _load("plan_report", os.path.join("tools", "plan_report.py"))
-    from .session import get_spark
-
     spark = get_spark("tps-explain", cores=8, shuffle_partitions=8)
     try:
         print(report.formatted(queries[query](spark, sf_dir)))

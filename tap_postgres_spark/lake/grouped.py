@@ -34,9 +34,10 @@ The fused plan removes both multipliers:
    watermarks, lineage, epoch dedup, optimistic lock, so crash-replay
    semantics are IDENTICAL: a partially-committed grouped epoch replays
    with the already-committed streams excluded from the union and only
-   the rest written.  Grouped compaction (``compact_grouped``) writes
-   through the same ``_write_slices``, with ``LakeTable.compact``'s own
-   plan and commit per table.
+   the rest written.  Every compaction (``_compact_tables``: one table
+   or N, tiered or full — ``LakeTable.compact``, ``compact_grouped`` and
+   the pipeline's depth trigger) writes through the same
+   ``_write_slices``, with ``compact``'s own plan and commit per table.
 
 Files written this way carry the UNION of the streams' columns; a
 table's reads are unaffected because the lake layer always reads with
@@ -172,8 +173,8 @@ def _aqe_off(df: DataFrame):
     the DataFrame's: a fused write inside a streaming ``foreachBatch``
     runs on the query's cloned session, so toggling the pipeline's
     session instead left AQE on for the write and flipped it under
-    concurrent readers.  Grouped compaction builds its union on a
-    session of its own for the same reason.
+    concurrent readers.  Compaction builds its union on a session
+    of its own for the same reason.
     """
     conf = df.sparkSession.conf
     prev = conf.get(_AQE, "true")
@@ -290,7 +291,7 @@ def _write_slices(
     staging_root: str,
     commit: Callable[[dict, dict[str, list[str]]], None],
 ) -> None:
-    """The staged N-table write shared by the fused merge and grouped
+    """The staged N-table write shared by the fused merge and every
     compaction: ONE ``partitionBy(__gidx, _bucket)`` write of ``df``
     into staging (AQE off on ``df``'s session), then per part, in order,
     its ``__gidx`` slice renamed into the table's ``data/v{N}-…`` dir and
@@ -325,50 +326,57 @@ def _write_slices(
 def compact_grouped(
     spark: SparkSession, tables: dict[str, LakeTable]
 ) -> dict[str, dict[str, Any]]:
-    """TIERED compaction of N tables in ONE Spark job.
+    """TIERED compaction (depth 1, base kept) of N tables in ONE Spark
+    job: :func:`_compact_tables` with every table as a tiered part.
+    Tombstone dropping is not offered because tiered mode refuses it
+    (see ``LakeTable.compact``).  ``spark`` is not used (ROADMAP lists
+    its removal with the callers)."""
+    return _compact_tables({fqn: (t, 1, False, None) for fqn, t in tables.items()})
 
-    Per-table :meth:`LakeTable.compact` is a separate action per table —
-    at 8 streams the end-of-batch maintenance pays 8× the per-job fixed
-    overhead for folds that are each tiny.  This takes every table's
-    plan from ``compact``'s own ``_compaction_plan`` (tiered, depth 1:
-    everything after each over-depth bucket's oldest dir, LWW by
-    ``(lsn, gen)``), tags it with ``__gidx``, unions, writes once through
-    :func:`_write_slices` and commits each table through ``compact``'s
-    ``_commit_compaction``.  Unlike the merge path there is no shared
-    input to re-scan — each branch reads its own files — so the only
-    fused cost is the write; branch folds run as concurrent stages of
-    the one job.
+
+def _compact_tables(
+    parts: dict[str, tuple[LakeTable, int, bool, int | None]],
+) -> dict[str, dict[str, Any]]:
+    """Every compaction, one table or N, tiered or full, as ONE staged
+    write.  ``parts`` maps a name to ``(table, max_delta_depth,
+    include_base, drop_tombstones_below)`` (``LakeTable.compact``'s
+    arguments); returns ``compact``'s summary per name.
+
+    Each table's plan is ``compact``'s own ``_compaction_plan`` (the
+    over-depth buckets' dirs, LWW by ``(lsn, gen)``), tagged with
+    ``__gidx``; the plans are unioned, written once through
+    :func:`_write_slices` and each table commits through
+    ``_commit_compaction``.  There is no shared input to re-scan — each
+    branch reads its own files — so branch folds run as concurrent
+    stages of the one job.  Within each slice rows are sorted by that
+    table's own key columns (typed, so integer keys sort numerically):
+    clustered files give parquet row-group min/max stats real
+    selectivity for point reads.
 
     The plans are built on a new session of the tables' Spark context,
     so turning AQE off for the write never touches the session that
     readers of these tables share; the commits go through the tables
-    themselves.
-
-    Tombstone dropping is not offered here because tiered mode refuses
-    it (see ``compact``); tables needing a FULL compact keep using
-    ``compact(include_base=True, drop_tombstones_below=...)``.
-
-    Tables whose column names collide at different types fall back to
-    their own ``compact()`` call (same result, one extra job each).
-    ``spark`` is not used (ROADMAP lists its removal with the callers).
-    """
+    themselves.  A table whose column names collide with the group's at
+    a different type takes its own ``compact()`` call."""
     results: dict[str, dict[str, Any]] = {}
-    if not tables:
+    if not parts:
         return results
-    session = next(iter(tables.values())).spark.newSession()
+    session = next(iter(parts.values()))[0].spark.newSession()
     prepared: list[dict] = []
     col_types: dict[str, Any] = {}
-    for idx, (fqn, table) in enumerate(tables.items()):
+    for idx, (fqn, (table, depth, include_base, floor)) in enumerate(parts.items()):
         meta = table.metadata()
         fields = T.StructType.fromJson(meta["schema"]).fields + [
             T.StructField(SDC_GEN, T.LongType())
         ]
         if any(col_types.get(f.name, f.dataType) != f.dataType for f in fields):
-            results[fqn] = table.compact(1, include_base=False)
+            results[fqn] = table.compact(
+                depth, include_base=include_base, drop_tombstones_below=floor
+            )
             continue
         view = LakeTable(session, table.path)
         view._buckets_cache = table._buckets_cache  # versions are immutable
-        compaction = view._compaction_plan(meta, 1, False, None)
+        compaction = view._compaction_plan(meta, depth, include_base, floor)
         if compaction is None:
             results[fqn] = {"skipped": True, "reason": "nothing to compact"}
             continue
@@ -381,6 +389,7 @@ def compact_grouped(
                 "table": table,
                 "meta": meta,
                 "todo": todo,
+                "include_base": include_base,
                 "new_version": meta["version"] + 1,
                 "df": folded.withColumn(_GIDX, F.lit(idx)),
             }
@@ -391,22 +400,24 @@ def compact_grouped(
     union = prepared[0]["df"]
     for p in prepared[1:]:
         union = union.unionByName(p["df"], allowMissingColumns=True)
+    gidx = F.col(_GIDX)
     width = max(int(p["meta"]["num_buckets"]) for p in prepared)
-    union = union.repartition(width, F.col(_GIDX), F.col(_BUCKET))
-    # cluster by key within each bucket file (compact's sort_keys): the
-    # per-stream key tuple serialized to one string sorts equal keys
-    # adjacently, which is what parquet row-group min/max stats need
-    key_repr = F.lit(None).cast("string")
-    for p in prepared:
-        key_repr = F.when(
-            F.col(_GIDX) == p["idx"],
-            F.to_json(F.struct(*[F.col(c) for c in p["meta"]["key_columns"]])),
-        ).otherwise(key_repr)
-    union = union.sortWithinPartitions(F.col(_GIDX), F.col(_BUCKET), key_repr)
+    keys = [
+        F.when(gidx == p["idx"], F.col(k))
+        for p in prepared
+        for k in p["meta"]["key_columns"]
+    ]
+    # one part's __gidx is a literal the optimizer folds to the write's
+    # sort key (_bucket) alone; a sort led by that constant would miss
+    # it, and the sort the write adds instead would drop the key order
+    lead = [gidx] if len(prepared) > 1 else []
+    union = union.repartition(width, gidx, F.col(_BUCKET)).sortWithinPartitions(
+        *lead, F.col(_BUCKET), *keys
+    )
 
     def commit(p: dict, written: dict[str, list[str]]) -> None:
         results[p["fqn"]] = p["table"]._commit_compaction(
-            p["meta"], p["todo"], written, False
+            p["meta"], p["todo"], written, p["include_base"]
         )
 
     _write_slices(

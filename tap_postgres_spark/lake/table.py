@@ -920,11 +920,12 @@ class LakeTable:
         save.  Explicit width kept.)
 
         ``sort_keys`` clusters rows by key WITHIN each bucket file (a
-        partition-local sort — no extra shuffle).  Compaction passes the
-        key columns: clustered base files give parquet row-group min/max
-        stats real selectivity, so a point read inside a bucket skips
-        most row groups instead of scanning the whole bucket file.  Merge
-        deltas skip it (batch-sized files, rewritten by the next compact
+        partition-local sort — no extra shuffle).  ``rebucket`` passes the
+        key columns (compaction clusters the same way in its own write):
+        clustered base files give parquet row-group min/max stats real
+        selectivity, so a point read inside a bucket skips most row
+        groups instead of scanning the whole bucket file.  Merge deltas
+        skip it (batch-sized files, rewritten by the next compact
         anyway).
         """
         # aligned=True (see _write_aligned): the relation was just folded
@@ -1143,8 +1144,8 @@ class LakeTable:
     ) -> dict[str, Any]:
         """Fold every bucket with more than ``max_delta_depth`` stacked
         dirs into a single file.  The maintenance op that bounds
-        merge-on-read amplification; called automatically by the
-        streaming runner on a depth threshold.
+        merge-on-read amplification; the pipeline's depth trigger runs
+        the same compaction for every table it finds too deep.
 
         Delete tombstones are RETAINED by default: they are the LSN
         evidence that makes reads order-independent, and a crash-restart
@@ -1163,26 +1164,21 @@ class LakeTable:
         policy at scale: tiered on the depth trigger, a full compact
         rarely/offline.  Tombstone dropping is refused in tiered mode: a
         tombstone in the delta tier may be the only thing masking a live
-        base row, so dropping it would resurrect the row."""
+        base row, so dropping it would resurrect the row.
+
+        The write is the one every compaction shares
+        (``lake/grouped.py:_compact_tables``): one Spark job, AQE off on
+        a session of its own, rows clustered by key within each bucket
+        file, then the commit."""
         if not include_base and drop_tombstones_below is not None:
             raise ValueError(
                 "tiered compaction cannot drop tombstones: a delta-tier "
                 "tombstone may mask a base row (fold the base in to reclaim)"
             )
-        meta = self.metadata()
-        plan = self._compaction_plan(
-            meta, max_delta_depth, include_base, drop_tombstones_below
-        )
-        if plan is None:
-            return {"skipped": True, "reason": "nothing to compact"}
-        todo, folded = plan
-        n = meta["num_buckets"]
-        written = self._write_bucketed(
-            folded, self._next_data_dir(meta["version"] + 1), n,
-            sort_keys=meta["key_columns"],
-            aligned=self._write_aligned(meta, n, folded),
-        )
-        return self._commit_compaction(meta, todo, written, include_base)
+        from .grouped import _compact_tables
+
+        part = (self, max_delta_depth, include_base, drop_tombstones_below)
+        return _compact_tables({self.path: part})[self.path]
 
     def _compaction_plan(
         self,

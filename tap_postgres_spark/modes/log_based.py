@@ -12,7 +12,9 @@ micro-batch flows::
         (per stream instead, for stream maps, partial updates, key
         updates or a type the shared projection cannot express:
         typed decode → agg LWW fold → MERGE INTO        [LakeTable.merge_into])
-      → evolution correction, then compaction           [_evolve, LakeTable.compact]
+      → evolution correction                            [_evolve]
+      → depth-triggered compaction: every due table,
+        tiered or full, in one staged write             [lake.grouped._compact_tables]
       → bookmark advance + metrics/lineage write        [StateStore / metrics]
 
 This is the vectorized re-creation of the reference's shared
@@ -630,53 +632,43 @@ class CdcPipeline:
                         n: f"{pg} ({t.simpleString()})" for n, pg, t in retyped
                     }
 
-            tiered_due: dict[str, Any] = {}
+            # Scale policy: the depth trigger normally runs TIERED
+            # compaction (fold the delta tier only — O(changes since
+            # base), never O(table)); every ``full_compact_every``-th
+            # firing for a table runs a FULL pass that folds the base in
+            # and reclaims tombstones below the committed filter floor
+            # (finish_decode drops events <= floor, so those can never
+            # be contradicted).  Every due table, tiered and full, folds
+            # in ONE job (lake/grouped.py:_compact_tables).
+            due: dict[str, tuple] = {}
             for fqn in fqns:
                 table = self.tables[fqn]
                 if (
                     self.auto_compact_depth
                     and table.delta_depth() > self.auto_compact_depth
                 ):
-                    # Scale policy: the depth trigger normally runs TIERED
-                    # compaction (fold the delta tier only — O(changes
-                    # since base), never O(table)); every
-                    # ``full_compact_every``-th firing runs a FULL pass
-                    # that folds the base in and reclaims tombstones below
-                    # the committed filter floor (finish_decode drops
-                    # events <= floor, so those can never be contradicted).
                     self._compact_count[fqn] = self._compact_count.get(fqn, 0) + 1
-                    if self._compact_count[fqn] % self.full_compact_every == 0:
-                        floor = self.state.bookmark(fqn)
-                        results[fqn]["compaction"] = table.compact(
-                            drop_tombstones_below=(
-                                int(floor) if floor is not None else None
-                            )
-                        )
-                        if self.retention_keep_last is not None:
-                            results[fqn]["retention"] = table.expire_versions(
-                                keep_last=self.retention_keep_last
-                            )
-                            # orphan GC rides the retention cadence: dirs
-                            # staged by crashed/conflicted writers are
-                            # invisible to expire_versions (they sit at or
-                            # above the floor); the 24 h default horizon
-                            # keeps any in-flight writer safe
-                            results[fqn]["vacuum"] = table.vacuum()
-                    else:
-                        tiered_due[fqn] = table
-            if len(tiered_due) == 1:
-                fqn, table = next(iter(tiered_due.items()))
-                results[fqn]["compaction"] = table.compact(include_base=False)
-            elif tiered_due:
-                # multi-stream pipelines trip the depth trigger for every
-                # table in the same batch — fold all their delta tiers in
-                # ONE job instead of N (lake/grouped.py)
-                from ..lake.grouped import compact_grouped
+                    full = self._compact_count[fqn] % self.full_compact_every == 0
+                    floor = self.state.bookmark(fqn) if full else None
+                    due[fqn] = (
+                        table, 1, full, int(floor) if floor is not None else None
+                    )
+            if due:
+                from ..lake.grouped import _compact_tables
 
-                for fqn, summary in compact_grouped(
-                    self.spark, tiered_due
-                ).items():
+                for fqn, summary in _compact_tables(due).items():
                     results[fqn]["compaction"] = summary
+                    table, _depth, full, _floor = due[fqn]
+                    if full and self.retention_keep_last is not None:
+                        results[fqn]["retention"] = table.expire_versions(
+                            keep_last=self.retention_keep_last
+                        )
+                        # orphan GC rides the retention cadence: dirs
+                        # staged by crashed/conflicted writers are
+                        # invisible to expire_versions (they sit at or
+                        # above the floor); the 24 h default horizon keeps
+                        # any in-flight writer safe
+                        results[fqn]["vacuum"] = table.vacuum()
 
             # Track max LSN seen as a WATERMARK only (reference
             # max_lsn_seen, wal_reader.py:208,239).  The filter bookmark

@@ -131,6 +131,25 @@ def test_cli_discover_subprocess(tmp_path):
     assert {e["stream"] for e in cat["streams"]} == {"region", "nation"}
 
 
+def test_cli_session_comes_from_get_spark(monkeypatch):
+    """The CLI's session is ``session.get_spark``'s, so CLI syncs get its
+    defaults (UTC, AQE settings, driver heap sizing, the worker daemon
+    module), with the config's master and shuffle width."""
+    import tap_postgres_spark.__main__ as cli
+
+    calls = []
+    monkeypatch.setattr(
+        cli, "get_spark", lambda *a, **kw: calls.append((a, kw)) or "session"
+    )
+    config = {"spark": {"master": "local[2]", "shuffle_partitions": 3}}
+    assert cli._spark(config) == "session"
+    assert cli._spark({}) == "session"
+    assert calls == [
+        (("tap-postgres-spark",), {"cores": "local[2]", "shuffle_partitions": 3}),
+        (("tap-postgres-spark",), {"cores": "local[8]", "shuffle_partitions": 8}),
+    ]
+
+
 def test_sync_applies_stream_maps(spark, tmp_path):
     streams = discover_parquet_dir(
         spark, SF, filter_tables=["region"],

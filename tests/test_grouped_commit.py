@@ -432,6 +432,85 @@ def test_one_stream_pipeline_takes_the_fused_write(spark, tmp_path, monkeypatch)
     ) == [("a1", "x2"), ("a2", "y")]
 
 
+def test_one_stream_depth_trigger_compacts_in_one_job(
+    spark, tmp_path, monkeypatch
+):
+    """A one-stream pipeline whose depth trigger trips: every compaction,
+    tiered and full, is ONE Spark job on top of the epoch's fused write
+    (counted by job group per epoch), the reader session's AQE setting
+    never changes, the full pass runs retention and vacuum, and the
+    table reads the same as an uncompacted twin fed the same batches."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    aqe = "spark.sql.adaptive.enabled"
+    clone = spark.newSession()
+    s = StreamDef("public", "t_a", _schema("id", "v"), ("id",))
+
+    def pipeline(name, depth):
+        table = LakeTable.create(
+            spark, str(tmp_path / name), widen_for_cdc(s.spark_schema),
+            ["id"], num_buckets=2,
+        )
+        pipe = CdcPipeline(
+            spark, [s], {s.fqn: {"id": "text", "v": "text"}}, {s.fqn: table},
+            StateStore(str(tmp_path / f"{name}.json")),
+            auto_compact_depth=depth, full_compact_every=2,
+            retention_keep_last=50,
+        )
+        return pipe, table
+
+    pipe, table = pipeline("compacted", 2)
+    twin, twin_table = pipeline("plain", 0)
+    before = spark.conf.get(aqe)
+    seen = []
+    conf_set, conf_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def watch(real):
+        def call(self, *a, **kw):
+            out = real(self, *a, **kw)
+            seen.append(spark.conf.get(aqe))
+            return out
+
+        return call
+
+    monkeypatch.setattr(RuntimeConfig, "set", watch(conf_set))
+    monkeypatch.setattr(RuntimeConfig, "unset", watch(conf_unset))
+    sc = spark.sparkContext
+    compactions = []
+    for e in range(6):
+        rows = [
+            (100 * e + j, e, _payload("I", "t_a", id=f"k{j}", v=f"v{e}-{j}"))
+            for j in range(8)
+            if e < 3 or j != 5
+        ]
+        if e == 3:
+            rows.append((100 * e + 9, e, _payload("D", "t_a", id="k5")))
+        raw = clone.createDataFrame(rows, "lsn long, txid long, payload string")
+        group = f"depth-trigger-{e}"
+        sc.setJobGroup(group, "one-stream epoch")
+        try:
+            out = pipe.apply_batch(raw, epoch_id=f"e{e}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        twin.apply_batch(raw, epoch_id=f"e{e}")
+        res = out["streams"][s.fqn]
+        compaction = res.get("compaction")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs == (2 if compaction else 1), (e, jobs, compaction)
+        if compaction:
+            assert not compaction["skipped"]
+            full = not table.metadata()["summary"]["tiered"]
+            assert ("retention" in res) == ("vacuum" in res) == full
+            compactions.append("full" if full else "tiered")
+    monkeypatch.undo()
+    assert compactions == ["tiered", "full", "tiered"]
+    assert set(seen) <= {before} and spark.conf.get(aqe) == before
+    assert table.delta_depth() <= 2 < twin_table.delta_depth()
+    got = sorted(map(tuple, table.read().select("id", "v").collect()))
+    assert got == sorted(map(tuple, twin_table.read().select("id", "v").collect()))
+    assert len(got) == 7  # k5 deleted
+
+
 def test_fused_memo_hits_and_per_epoch_literals_stay_live(spark, tmp_path):
     """A second epoch of the same layout builds no new memoized plan
     pieces; the per-epoch literals still follow each epoch: every

@@ -321,10 +321,24 @@ class TestExpireVersions:
 
 def test_compact_clusters_rows_by_key_within_bucket(spark, tmp_path):
     """Compaction sorts rows by key inside each bucket file, so parquet
-    row-group min/max stats become selective for point reads."""
+    row-group min/max stats become selective for point reads.  Keys sort
+    by their own type: integer keys in numeric order (a string rendering
+    would put 10 before 9), through ``compact()`` and through
+    ``compact_grouped`` over several tables."""
     import pyarrow.parquet as pq
 
+    from tap_postgres_spark.lake.grouped import compact_grouped
     from tests.test_lake_merge import SCHEMA, _batch
+
+    def newest_rows(t, cols):
+        """Rows of bucket 0's newest dir, in file order."""
+        d = os.path.join(t.path, t.buckets_map()["0"][-1])
+        rows = []
+        for f in sorted(os.listdir(d)):
+            if f.endswith(".parquet"):
+                tb = pq.read_table(os.path.join(d, f), columns=cols)
+                rows += list(zip(*(tb.column(c).to_pylist() for c in cols)))
+        return rows
 
     t = LakeTable.create(spark, str(tmp_path / "cl"), SCHEMA, ["repo", "path"], num_buckets=1)
     # insert keys in descending order across two epochs
@@ -337,20 +351,44 @@ def test_compact_clusters_rows_by_key_within_bucket(spark, tmp_path):
         epoch_id="e2",
     )
     t.compact(max_delta_depth=1)
-    dirs = t.buckets_map()["0"]
-    assert len(dirs) == 1
-    files = [
-        os.path.join(t.path, dirs[0], f)
-        for f in os.listdir(os.path.join(t.path, dirs[0]))
-        if f.endswith(".parquet")
-    ]
-    rows = []
-    for f in files:
-        tb = pq.read_table(f, columns=["repo", "path"])
-        rows += list(zip(tb.column("repo").to_pylist(), tb.column("path").to_pylist()))
+    assert len(t.buckets_map()["0"]) == 1
+    rows = newest_rows(t, ["repo", "path"])
     assert rows == sorted(rows)  # clustered by (repo, path)
     # state unchanged
     assert t.read().count() == 20
+
+    int_schema = widen_for_cdc(
+        T.StructType([
+            T.StructField("id", T.LongType(), False),
+            T.StructField("v", T.StringType(), True),
+        ])
+    )
+
+    def int_table(name):
+        """Three merges of descending ids: a base dir of 20..14 and a
+        delta tier of 13..1."""
+        it = LakeTable.create(
+            spark, str(tmp_path / name), int_schema, ["id"], num_buckets=1
+        )
+        for e, ids in enumerate((range(20, 13, -1), range(13, 6, -1), range(6, 0, -1))):
+            it.merge_into(
+                spark.createDataFrame(
+                    [(i, "v", 100 * e + i, None) for i in ids], int_schema
+                ),
+                epoch_id=f"e{e}",
+            )
+        return it
+
+    full = int_table("int_full")
+    full.compact(max_delta_depth=1)
+    assert [r[0] for r in newest_rows(full, ["id"])] == list(range(1, 21))
+    grouped = {f"public.{n}": int_table(n) for n in ("int_a", "int_b")}
+    res = compact_grouped(spark, grouped)
+    assert not any(r["skipped"] for r in res.values())
+    for it in grouped.values():
+        assert len(it.buckets_map()["0"]) == 2  # base + folded tier
+        assert [r[0] for r in newest_rows(it, ["id"])] == list(range(1, 14))
+        assert it.read().count() == 20
 
 
 def test_read_keys_point_lookup(spark, tmp_path):
