@@ -487,7 +487,12 @@ class LakeTable:
                 list(schema.fields) + [T.StructField(SDC_GEN, T.LongType(), True)]
             )
         if not files:
-            return self.spark.createDataFrame([], read_schema)
+            # an Arrow-built empty table plans as a LocalRelation, which
+            # runs no Spark job; an empty row list would be an RDD
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            empty = to_arrow_schema(read_schema).empty_table()
+            return self.spark.createDataFrame(empty, read_schema)
         # explicit schema-on-read: files written before a schema evolution
         # lack the new columns → NULL-filled, exactly Iceberg's behavior.
         return self.spark.read.schema(read_schema).parquet(*files)
@@ -660,10 +665,11 @@ class LakeTable:
         instead of silently truncating: the floor manifest's
         ``parent: null`` is detected mid-walk."""
         to_v = to_version if to_version is not None else self.current_version()
+        meta = self.metadata(to_v)
         dirs: list[str] = []
         v: int | None = to_v
         while v is not None and v > from_version:
-            m = self.metadata(v)
+            m = meta if v == to_v else self.metadata(v)
             op = m["summary"].get("operation", "")
             if op.startswith("merge-mor"):
                 dirs.extend(d for dl in m["summary"]["lineage"].values() for d in dl)
@@ -690,17 +696,15 @@ class LakeTable:
                     "re-bootstrap the consumer from a full read()"
                 )
             v = parent
-        schema = T.StructType.fromJson(self.metadata(to_v)["schema"])
+        schema = T.StructType.fromJson(meta["schema"])
         if columns is not None:
             # same scan-narrowing rationale as read(columns=): the fold
             # struct otherwise forces the full row width off parquet
-            schema = self._narrow_schema(
-                schema, self.metadata(to_v)["key_columns"], columns
-            )
+            schema = self._narrow_schema(schema, meta["key_columns"], columns)
         df = self._read_dirs(dirs, schema, with_gen=True)
         if fold and SDC_LSN in df.columns:
             df = fold_last_writer_wins_agg(
-                df, self.metadata(to_v)["key_columns"], (SDC_LSN, SDC_GEN)
+                df, meta["key_columns"], (SDC_LSN, SDC_GEN)
             )
         return df.drop(SDC_GEN)
 

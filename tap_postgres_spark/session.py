@@ -127,6 +127,16 @@ def get_spark(
         builder = (
             builder.config("spark.python.daemon.module", "tap_postgres_spark.daemon")
             .config("spark.executorEnv.PYTHONPATH", pkg_parent)
+            # No file-listing job.  Lake reads (LakeTable._read_dirs) list
+            # their bucket dirs on the driver and hand Spark one path per
+            # file; past this threshold (default 32 paths) Spark lists
+            # those paths again, in a one-stage job of its own, before
+            # every read.  On a local master every path is on the
+            # driver's disk, so that job only adds scheduling to a few
+            # stat calls.  Interleaved A/B, tail_8stream at 20 s, 10
+            # pairs, 4 vCPU: read_s.tail 0.482 -> 0.399 s, 10 of 10 wins.
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                    str(2**31 - 1))
         )
     # Deployment override hook: SPARK_GRAFT_CONF="k=v;k2=v2" lets
     # spark-submit wrappers / bench tooling tune any Spark conf without a

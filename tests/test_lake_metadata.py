@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import types as T
 
 from tap_postgres_spark.lake import LakeTable
+from tap_postgres_spark.lake.table import _list_parquet_files
 from tap_postgres_spark.schema import widen_for_cdc
 
 SCHEMA = widen_for_cdc(
@@ -604,6 +605,78 @@ def test_read_keys_driver_read_keeps_types(spark, tmp_path, threshold):
             .collect()
         ] == [("0001-01-01 00:00:00",) * 2 + ("0001-01-01",),
               ("9999-12-31 00:00:00",) * 2 + ("9999-12-31",)]
+
+
+def _deep_table(spark, path, merges):
+    """8 buckets and ``merges`` merges of the same 32 keys: about one
+    file per bucket per merge."""
+    t = LakeTable.create(spark, path, SCHEMA, ["repo", "path"], num_buckets=8)
+    for e in range(merges):
+        t.merge_into(
+            _batch(spark, [("r", f"p{i}", f"v{e}", 100 * e + i) for i in range(32)]),
+            epoch_id=f"e{e}",
+        )
+    return t
+
+
+def _files(t):
+    return sum(
+        len(_list_parquet_files(os.path.join(t.path, d)))
+        for dl in t.buckets_map().values()
+        for d in dl
+    )
+
+
+def test_lake_reads_run_no_listing_job(spark, tmp_path, threshold):
+    """Past 32 file paths Spark lists the paths of a read in a job of
+    its own; the session turns that off.  Every read, changelog read,
+    compaction and rebucket of a table with more than 32 files in its
+    read set runs no more jobs than the same call on a table of the
+    same shape with at most 32."""
+    import shutil
+
+    import pyarrow as pa
+
+    keys = spark.createDataFrame(
+        pa.table({"repo": ["r"] * 32, "path": [f"p{i}" for i in range(32)]})
+    )
+    calls = {
+        "read": lambda t: t.read().collect(),
+        "read(columns)": lambda t: t.read(columns=["content"]).collect(),
+        "read_changes": lambda t: t.read_changes(0).collect(),
+        "read_keys batch": lambda t: t.read_keys(keys, pushdown_limit=4).collect(),
+        "read_keys spark": lambda t: t.read_keys(keys).collect(),
+        "tiered compact": lambda t: t.compact(1, include_base=False),
+        "rebucket": lambda t: t.rebucket(4),
+    }
+    jobs = {}
+    for merges in (4, 6):
+        src = _deep_table(spark, str(tmp_path / f"m{merges}"), merges)
+        assert (_files(src) > 32) == (merges == 6)
+        # a tiered compaction leaves each bucket's first dir out of its read
+        assert merges < 6 or _files(src) - len(src.buckets_map()) > 32
+        for name, call in calls.items():
+            # mutating calls each get a copy of the table
+            copy = str(tmp_path / f"m{merges}-{len(jobs)}")
+            shutil.copytree(src.path, copy)
+            threshold("-1" if name == "read_keys spark" else "10MB")
+            jobs[merges, name] = _spark_jobs(spark, lambda: call(LakeTable(spark, copy)))
+    for name in calls:
+        assert jobs[6, name] <= jobs[4, name], (name, jobs)
+
+
+def test_empty_lake_reads_run_no_job(spark, tmp_path):
+    """A read of a fresh table and a changelog read of an empty range
+    are local relations: no Spark job, and the non-empty read's schema."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"],
+                         num_buckets=8)
+    empty = {"read": t.read(), "read_changes": t.read_changes(t.current_version())}
+    for name, df in empty.items():
+        assert _spark_jobs(spark, lambda: df.collect()) == 0, name
+    t.merge_into(_batch(spark, [("r", "p", "c", 1)]), epoch_id="e0")
+    assert empty["read"].schema == t.read().schema
+    assert empty["read_changes"].schema == t.read_changes(0).schema
+    assert t.read_changes(t.current_version()).collect() == []
 
 
 class TestCommitConcurrency:
