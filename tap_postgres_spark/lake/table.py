@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.lww import fold_last_writer_wins_agg
+from ..operators.lww import fold_last_writer_wins_agg, fold_last_writer_wins_arrow
 from ..plancache import memo
 from ..schema import SDC_DELETED_AT, SDC_LSN, merge_schemas
 
@@ -84,9 +84,9 @@ SDC_GEN = "_sdc_gen"
 _HELPER_COLS = (
     "_action", "txid", _BUCKET, "__status", "__fqn", "__ncols", "__overflow"
 )
-# column types a driver-side point read passes through Arrow unchanged
-# (LakeTable._read_keys_on_driver); tables with any other type take the
-# Spark point read.  Nested types are left out: a NULL
+# column types a driver-side read passes through Arrow unchanged
+# (LakeTable._read_on_driver); tables with any other type take the
+# Spark read.  Nested types are left out: a NULL
 # map<string,array<int>> comes back from the Arrow path as an empty map.
 _ARROW_EXACT_TYPES = (
     T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
@@ -118,6 +118,19 @@ def _list_parquet_files(directory: str) -> list[str]:
     return sorted(out)
 
 
+def _with_gen(schema: T.StructType) -> T.StructType:
+    return T.StructType(
+        list(schema.fields) + [T.StructField(SDC_GEN, T.LongType(), True)]
+    )
+
+
+def _is_local(df: DataFrame) -> bool:
+    """``df``'s plan optimizes to a local relation (rows built on the
+    driver), which Spark collects with no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def _collect_arrow(df: DataFrame) -> pa.Table:
     """``df``'s rows as an Arrow table.  A plan that optimizes to a
     local relation (keys built on the driver) is collected with no
@@ -125,8 +138,7 @@ def _collect_arrow(df: DataFrame) -> pa.Table:
     from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
+    if not _is_local(df):
         return df.toArrow()
     rows = df.collect()
     if not rows:
@@ -475,17 +487,18 @@ class LakeTable:
         names = [x.split("#")[0] for x in segs[:-1]]
         return names == list(meta["key_columns"])
 
-    def _read_dirs(
-        self, dirs: list[str], schema: T.StructType, *, with_gen: bool = False
-    ) -> DataFrame:
+    def _data_files(self, dirs: list[str]) -> list[str]:
         files: list[str] = []
         for d in dirs:
             files.extend(_list_parquet_files(os.path.join(self.path, d)))
-        read_schema = schema
-        if with_gen:
-            read_schema = T.StructType(
-                list(schema.fields) + [T.StructField(SDC_GEN, T.LongType(), True)]
-            )
+        return files
+
+    def _read_dirs(self, dirs: list[str], schema: T.StructType) -> DataFrame:
+        return self._read_files(self._data_files(dirs), schema)
+
+    def _read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Spark read of ``files`` under ``schema`` plus ``_sdc_gen``."""
+        read_schema = _with_gen(schema)
         if not files:
             # an Arrow-built empty table plans as a LocalRelation, which
             # runs no Spark job; an empty row list would be an RDD
@@ -591,7 +604,7 @@ class LakeTable:
         narrowed read schema directly (keys + requested + the ``_sdc_*``
         resolution columns), so a 2-column consumer of a wide table
         scans 2 columns.  Output = key columns + requested + ``_sdc_lsn``
-        (+ ``_sdc_deleted_at`` when tombstones are included).
+        + ``_sdc_deleted_at``.
 
         ``semi_keys`` (a DataFrame carrying the key columns) filters to
         those keys with a broadcast LEFT SEMI applied to the raw scan
@@ -602,6 +615,11 @@ class LakeTable:
         bucket's rows only to discard most groups.  NULL-safe equality,
         so it composes with key columns that permit NULL (aggregate
         views' group keys).
+
+        Without ``semi_keys``, a read whose files fit under
+        ``spark.sql.autoBroadcastJoinThreshold`` is read and folded on
+        the driver and returns as a local relation, with no Spark job
+        (:meth:`_merge_on_read`); the Spark read and fold run above it.
         """
         if sum(x is not None for x in (version, as_of, as_of_lsn)) > 1:
             raise ValueError("pass at most one of version / as_of / as_of_lsn")
@@ -618,23 +636,10 @@ class LakeTable:
             {str(b) for b in buckets} if buckets is not None else set(bmap.keys())
         )
         dirs = [d for b, dl in bmap.items() if b in sel for d in dl]
-        df = self._read_dirs(dirs, schema, with_gen=True)
-        if semi_keys is not None:
-            key_cols = meta["key_columns"]
-            kdf = semi_keys.select(*key_cols).distinct().alias("__sk")
-            scan = df.alias("__t")
-            cond = None
-            for c in key_cols:
-                one = F.col(f"__t.{c}").eqNullSafe(F.col(f"__sk.{c}"))
-                cond = one if cond is None else (cond & one)
-            df = scan.join(F.broadcast(kdf), cond, "left_semi")
-        if SDC_LSN in df.columns:
-            df = fold_last_writer_wins_agg(
-                df, meta["key_columns"], (SDC_LSN, SDC_GEN)
-            )
-            if not include_tombstones and SDC_DELETED_AT in df.columns:
-                df = df.filter(F.col(SDC_DELETED_AT).isNull())
-        return df.drop(SDC_GEN)
+        return self._merge_on_read(
+            self._data_files(dirs), schema, meta["key_columns"],
+            tombstones=include_tombstones, semi_keys=semi_keys,
+        )
 
     def read_changes(
         self, from_version: int, to_version: int | None = None,
@@ -645,7 +650,8 @@ class LakeTable:
         ``(from_version, to_version]`` — upserts AND delete tombstones,
         LWW-folded per key across the range so a downstream consumer can
         apply them idempotently.  Reads only the range's delta dirs
-        (O(|changes|), never O(|table|)).
+        (O(|changes|), never O(|table|)), on the driver while they fit
+        the size gate of :meth:`read`.
 
         ``fold=False`` returns the RAW per-commit row versions instead
         (one row per key per merge commit that touched it, tombstones
@@ -701,12 +707,10 @@ class LakeTable:
             # same scan-narrowing rationale as read(columns=): the fold
             # struct otherwise forces the full row width off parquet
             schema = self._narrow_schema(schema, meta["key_columns"], columns)
-        df = self._read_dirs(dirs, schema, with_gen=True)
-        if fold and SDC_LSN in df.columns:
-            df = fold_last_writer_wins_agg(
-                df, meta["key_columns"], (SDC_LSN, SDC_GEN)
-            )
-        return df.drop(SDC_GEN)
+        return self._merge_on_read(
+            self._data_files(dirs), schema, meta["key_columns"],
+            fold=fold, tombstones=True,
+        )
 
     def read_keys(
         self,
@@ -729,7 +733,7 @@ class LakeTable:
           evaluates on the driver), so only the buckets the keys hash to
           are opened.  While those buckets' files fit under
           ``spark.sql.autoBroadcastJoinThreshold``, they are read and
-          folded on the driver (:meth:`_read_keys_on_driver`): pyarrow
+          folded on the driver (:meth:`_read_on_driver`): pyarrow
           reads them under the table schema with the OR-of-keys filter
           pushed into the scan, then last-writer-wins by ``(_sdc_lsn,
           _sdc_gen)`` drops tombstones, and the rows return as a local
@@ -764,23 +768,8 @@ class LakeTable:
             schema = self._narrow_schema(schema, keys, columns)
         bks = self._probe_buckets(probe, kdf.schema, meta) if probe.num_rows else []
         bmap = self.buckets_map(version)
-        files = [
-            f
-            for b in bks
-            for d in bmap.get(str(b), ())
-            for f in _list_parquet_files(os.path.join(self.path, d))
-        ]
-        if self._driver_read_fits(files, schema):
-            return self._read_keys_on_driver(files, schema, keys, probe)
-        df = self.read(version, buckets=bks, columns=columns)
-        pred = None
-        for r in probe.to_pylist():
-            one = None
-            for k in keys:
-                c = F.col(k).eqNullSafe(F.lit(r[k]))
-                one = c if one is None else (one & c)
-            pred = one if pred is None else (pred | one)
-        return df.filter(pred) if pred is not None else df.limit(0)
+        files = self._data_files([d for b in bks for d in bmap.get(str(b), ())])
+        return self._merge_on_read(files, schema, keys, probe=probe)
 
     def _probe_buckets(
         self, probe: pa.Table, key_schema: T.StructType, meta: dict[str, Any]
@@ -795,7 +784,7 @@ class LakeTable:
         return sorted({r[0] for r in local.select(b).collect()})
 
     def _driver_read_fits(self, files: list[str], schema: T.StructType) -> bool:
-        """Size gate of the driver-side point read: the pruned files
+        """Size gate of the driver-side read: the files
         must fit under ``spark.sql.autoBroadcastJoinThreshold`` (the
         bound Spark itself puts on a relation it pulls to the driver;
         -1 disables the path) and every column must have an exact
@@ -810,29 +799,78 @@ class LakeTable:
             and sum(os.path.getsize(f) for f in files) <= limit
         )
 
-    def _read_keys_on_driver(
+    def _merge_on_read(
         self,
         files: list[str],
         schema: T.StructType,
         keys: Sequence[str],
-        probe: pa.Table,
+        *,
+        fold: bool = True,
+        tombstones: bool = False,
+        probe: pa.Table | None = None,
+        semi_keys: DataFrame | None = None,
     ) -> DataFrame:
-        """The point read of :meth:`read_keys` on the driver, with no
-        Spark job: the same schema-on-read (missing columns NULL, narrow
-        integers widened), filter, fold and output layout as
-        ``read(buckets=...).filter(<keys>)``."""
-        import pyarrow as pa
+        """Rows of ``files`` under ``schema`` (missing columns NULL),
+        last-writer-wins folded per key by ``(_sdc_lsn, _sdc_gen)`` when
+        ``fold``, tombstones dropped unless ``tombstones``.  ``probe``
+        (an Arrow table of key values) or ``semi_keys`` (a DataFrame of
+        them) keeps only those keys, NULL-safely, below the fold.
+
+        Inside :meth:`_driver_read_fits` and without ``semi_keys`` it
+        runs on the driver (:meth:`_read_on_driver`), with no Spark job;
+        otherwise as a Spark read and fold.  Both return the same rows,
+        columns and types."""
+        if semi_keys is None and self._driver_read_fits(files, schema):
+            return self._read_on_driver(
+                files, schema, keys, fold=fold, tombstones=tombstones, probe=probe
+            )
+        df = self._read_files(files, schema)
+        if probe is not None:
+            pred = None
+            for r in probe.to_pylist():
+                one = None
+                for k in keys:
+                    c = F.col(k).eqNullSafe(F.lit(r[k]))
+                    one = c if one is None else (one & c)
+                pred = one if pred is None else (pred | one)
+            df = df.filter(pred) if pred is not None else df.limit(0)
+        if semi_keys is not None:
+            kdf = semi_keys.select(*keys).distinct().alias("__sk")
+            scan = df.alias("__t")
+            cond = None
+            for c in keys:
+                one = F.col(f"__t.{c}").eqNullSafe(F.col(f"__sk.{c}"))
+                cond = one if cond is None else (cond & one)
+            df = scan.join(F.broadcast(kdf), cond, "left_semi")
+        if fold and SDC_LSN in df.columns:
+            df = fold_last_writer_wins_agg(df, keys, (SDC_LSN, SDC_GEN))
+            if not tombstones and SDC_DELETED_AT in df.columns:
+                df = df.filter(F.col(SDC_DELETED_AT).isNull())
+        return df.drop(SDC_GEN)
+
+    def _read_on_driver(
+        self,
+        files: list[str],
+        schema: T.StructType,
+        keys: Sequence[str],
+        *,
+        fold: bool,
+        tombstones: bool,
+        probe: pa.Table | None,
+    ) -> DataFrame:
+        """:meth:`_merge_on_read` on the driver, with no Spark job:
+        pyarrow reads ``files`` under the table schema (missing columns
+        NULL, narrow integers widened) with the probe's OR-of-keys
+        filter pushed into the scan, :func:`fold_last_writer_wins_arrow`
+        folds them, and the rows return as a local relation with the
+        Spark read's columns, order and types."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        read_schema = to_arrow_schema(
-            T.StructType(
-                list(schema.fields) + [T.StructField(SDC_GEN, T.LongType(), True)]
-            )
-        )
+        read_schema = to_arrow_schema(_with_gen(schema))
         pred = None
-        for i in range(probe.num_rows):
+        for i in range(probe.num_rows if probe is not None else 0):
             one = None
             for k in keys:
                 v = probe.column(k)[i]
@@ -851,30 +889,17 @@ class LakeTable:
                 read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
             )
             tbl = ds.dataset(files, schema=read_schema, format=fmt).to_table(
-                filter=pred
+                filter=pred, use_threads=False
             )
         else:
             tbl = read_schema.empty_table()
         names = schema.names
-        if SDC_LSN in names:
-            # last writer wins per key by (_sdc_lsn, _sdc_gen); Spark
-            # orders NULL below every value, and so does (False, 0)
-            lsn = tbl.column(SDC_LSN).to_pylist()
-            gen = tbl.column(SDC_GEN).to_pylist()
-            best: dict[tuple, tuple[tuple, int]] = {}
-            key_rows = zip(*(tbl.column(k).to_pylist() for k in keys))
-            for i, kv in enumerate(key_rows):
-                order = (
-                    lsn[i] is not None, lsn[i] or 0, gen[i] is not None, gen[i] or 0
-                )
-                if kv not in best or order >= best[kv][0]:
-                    best[kv] = (order, i)
-            tbl = tbl.take(pa.array(sorted(i for _, i in best.values()), pa.int64()))
-            if SDC_DELETED_AT in names:
+        if fold and SDC_LSN in names:
+            tbl = fold_last_writer_wins_arrow(tbl, keys, (SDC_LSN, SDC_GEN))
+            if not tombstones and SDC_DELETED_AT in names:
                 tbl = tbl.filter(pc.is_null(tbl.column(SDC_DELETED_AT)))
             names = list(keys) + [n for n in names if n not in keys]
-        by_name = {f.name: f.dataType for f in schema.fields}
-        out = T.StructType([T.StructField(n, by_name[n], True) for n in names])
+        out = T.StructType([T.StructField(n, schema[n].dataType, True) for n in names])
         return self.spark.createDataFrame(tbl.select(names), out)
 
     def buckets_for_keys(
@@ -889,9 +914,11 @@ class LakeTable:
         b = self._bucket_expr(
             meta["key_columns"], meta["num_buckets"], self._bucket_fn(meta)
         )
-        return [
-            r[0] for r in keys_df.select(b.alias("b")).distinct().collect()
-        ]
+        ids = keys_df.select(b.alias("b"))
+        if _is_local(ids):
+            # keys built on the driver are hashed there, with no job
+            return sorted({r[0] for r in ids.collect()})
+        return [r[0] for r in ids.distinct().collect()]
 
     # --------------------------------------------------------------- writes
     def _next_data_dir(self, version: int) -> str:
@@ -1205,7 +1232,7 @@ class LakeTable:
             d for dl in todo.values() for d in (dl if include_base else dl[1:])
         ]
         schema = T.StructType.fromJson(meta["schema"])
-        df = self._read_dirs(fold_dirs, schema, with_gen=True)
+        df = self._read_dirs(fold_dirs, schema)
         folded = fold_last_writer_wins_agg(df, key_cols, (SDC_LSN, SDC_GEN))
         if SDC_DELETED_AT in folded.columns and drop_tombstones_below is not None:
             folded = folded.filter(
@@ -1293,7 +1320,7 @@ class LakeTable:
         new_version = meta["version"] + 1
         rel_dir = self._next_data_dir(new_version)
         all_dirs = [d for dl in current.values() for d in dl]
-        df = self._read_dirs(all_dirs, schema, with_gen=True)
+        df = self._read_dirs(all_dirs, schema)
         folded = fold_last_writer_wins_agg(df, key_cols, (SDC_LSN, SDC_GEN))
         folded = folded.withColumn(
             _BUCKET, self._bucket_expr(key_cols, new_num_buckets, "murmur3")

@@ -967,11 +967,13 @@ def neardup_clusters(
                     ra, rb = rb, ra
                 parent[rb] = ra
         out_rows = [(i, find(i)) for i in parent]
-        a_field = p.schema["a"]
+        # ids come from both endpoints: their type is the a/b union's,
+        # as in the distributed path below
+        id_field = p.select("a").union(p.select("b")).schema["a"]
         out_schema = T.StructType(
             [
-                T.StructField("id", a_field.dataType, a_field.nullable),
-                T.StructField("cluster_id", a_field.dataType, a_field.nullable),
+                T.StructField("id", id_field.dataType, id_field.nullable),
+                T.StructField("cluster_id", id_field.dataType, id_field.nullable),
             ]
         )
         spark = pairs.sparkSession

@@ -9,6 +9,7 @@ production plan shape.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +32,33 @@ def _default_driver_memory() -> str:
     return f"{max(1024, min(4096, mem_mb // 4))}m"
 
 
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    count: a container pinned to 4 of 64 cores gets 4)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform
+        return os.cpu_count() or 1
+
+
+def _master(cores: int | str | None) -> tuple[str, int]:
+    """The master for ``cores`` and the number of cores it runs tasks
+    on.  ``cores`` is an int or digit string (→ ``local[n]``), ``"*"``,
+    or a master string: ``local`` runs 1, ``local[N]`` and
+    ``local[N,F]`` N, ``local[*]`` the usable CPUs, and a cluster
+    master counts as 32.  Unset, it is ``SPARK_GRAFT_CPUS``, else the
+    usable CPUs."""
+    if cores is None:
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus()
+    cores = str(cores)
+    master = f"local[{cores}]" if cores.isdigit() or cores == "*" else cores
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return master, 32
+    n = m.group(1)
+    return master, 1 if n is None else _usable_cpus() if n == "*" else int(n)
+
+
 def get_spark(
     app_name: str = "tap_postgres_spark",
     cores: int | str | None = None,
@@ -39,21 +67,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` accepts an int (→ ``local[n]``) or a full master string.
-    Shuffle partitions default to the core count: at local scale a 200-way
-    shuffle of 60k rows is pure overhead, and on a real cluster the
-    deployment sets this to ~2-3× total cores.
+    ``cores`` accepts an int (→ ``local[n]``) or a full master string
+    (see :func:`_master`); by default the session runs on the CPUs
+    this process may use.  Shuffle partitions default to the core count
+    (at least 8): at local scale a 200-way shuffle of 60k rows is pure
+    overhead, and on a real cluster the deployment sets this to ~2-3×
+    total cores.
     """
-    if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = f"local[{cores}]" if str(cores).isdigit() or cores == "*" else str(cores)
-    n_cores = (
-        (os.cpu_count() or 8)
-        if str(cores) == "*"
-        else int(cores)
-        if str(cores).isdigit()
-        else 32
-    )
+    master, n_cores = _master(cores)
     if shuffle_partitions is None:
         shuffle_partitions = max(8, n_cores)
 

@@ -12,5 +12,16 @@ def spark():
 
 
 @pytest.fixture()
+def threshold(spark):
+    """Sets ``spark.sql.autoBroadcastJoinThreshold`` for one test: the
+    size gate between driver-side and Spark lake reads (-1 forces the
+    Spark read)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.set(key, prev)
+
+
+@pytest.fixture()
 def tmp_table_dir(tmp_path):
     return str(tmp_path / "table")

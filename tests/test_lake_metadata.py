@@ -10,6 +10,7 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tap_postgres_spark.lake import LakeTable
@@ -450,15 +451,6 @@ def _spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.fixture()
-def threshold(spark):
-    """Sets ``spark.sql.autoBroadcastJoinThreshold`` for one test."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    yield lambda v: spark.conf.set(key, v)
-    spark.conf.set(key, prev)
-
-
 def _point_table(spark, path):
     from tests.test_lake_merge import SCHEMA, _batch
 
@@ -632,7 +624,8 @@ def test_lake_reads_run_no_listing_job(spark, tmp_path, threshold):
     its own; the session turns that off.  Every read, changelog read,
     compaction and rebucket of a table with more than 32 files in its
     read set runs no more jobs than the same call on a table of the
-    same shape with at most 32."""
+    same shape with at most 32.  The reads run at a threshold of -1,
+    which keeps them on Spark (on the driver they run no job at all)."""
     import shutil
 
     import pyarrow as pa
@@ -659,10 +652,76 @@ def test_lake_reads_run_no_listing_job(spark, tmp_path, threshold):
             # mutating calls each get a copy of the table
             copy = str(tmp_path / f"m{merges}-{len(jobs)}")
             shutil.copytree(src.path, copy)
-            threshold("-1" if name == "read_keys spark" else "10MB")
+            threshold("10MB" if name == "read_keys batch" else "-1")
             jobs[merges, name] = _spark_jobs(spark, lambda: call(LakeTable(spark, copy)))
     for name in calls:
         assert jobs[6, name] <= jobs[4, name], (name, jobs)
+
+
+def test_read_keys_batch_path_jobs(spark, tmp_path, threshold):
+    """The batch path (more keys than ``pushdown_limit``) hashes
+    Arrow-built keys to their buckets on the driver, with no job, to
+    the ids a Spark job computes; only the semi-join read runs jobs."""
+    import pyarrow as pa
+
+    t = _deep_table(spark, str(tmp_path / "t"), 3)
+    paths = [f"p{i}" for i in range(0, 32, 3)]
+    arrow = spark.createDataFrame(pa.table({"repo": ["r"] * len(paths), "path": paths}))
+    listed = spark.createDataFrame([("r", p) for p in paths], "repo string, path string")
+    threshold("10MB")
+    bks = []
+    assert _spark_jobs(spark, lambda: bks.extend(t.buckets_for_keys(arrow))) == 0
+    assert bks == sorted(t.buckets_for_keys(listed))
+    assert len(bks) < 8
+    rows = []
+    assert _spark_jobs(
+        spark, lambda: rows.extend(t.read_keys(arrow, pushdown_limit=4).collect())
+    ) == 4
+    assert sorted(r["path"] for r in rows) == sorted(paths)
+
+
+def test_driver_lake_reads_run_no_job(spark, tmp_path, threshold, monkeypatch):
+    """Inside the size gate, a read, a narrowed read and a changelog
+    read (folded or raw) are read and folded on the driver: no Spark
+    job, the rows the Spark read returns, and a narrowed read decodes
+    only the columns it needs."""
+    from tap_postgres_spark.lake import table as table_mod
+
+    t = _deep_table(spark, str(tmp_path / "t"), 3)
+    calls = {
+        "read": lambda: t.read(),
+        "read(columns)": lambda: t.read(columns=["content"]),
+        "read_changes": lambda: t.read_changes(1),
+        "read_changes(fold=False)": lambda: t.read_changes(1, fold=False),
+    }
+    for name, call in calls.items():
+        threshold("10MB")
+        rows = []
+        assert _spark_jobs(spark, lambda: rows.extend(call().collect())) == 0, name
+        threshold("-1")
+        assert sorted(rows) == sorted(call().collect()), name
+    wide = widen_for_cdc(T.StructType(
+        list(SCHEMA.fields[:3]) + [T.StructField("wide", T.StringType())]
+    ))
+    w = LakeTable.create(spark, str(tmp_path / "w"), wide, ["repo", "path"],
+                         num_buckets=2)
+    w.merge_into(
+        _batch(spark, [("r", "p", "c", 1)]).withColumn("wide", F.lit("x" * 100)),
+        epoch_id="e0",
+    )
+    decoded = []
+    fold = table_mod.fold_last_writer_wins_arrow
+    monkeypatch.setattr(
+        table_mod, "fold_last_writer_wins_arrow",
+        lambda tbl, *a: decoded.append(tbl.column_names) or fold(tbl, *a),
+    )
+    threshold("10MB")
+    assert w.read(columns=["content"]).columns == [
+        "repo", "path", "content", "_sdc_lsn", "_sdc_deleted_at"
+    ]
+    assert decoded == [
+        ["repo", "path", "content", "_sdc_lsn", "_sdc_deleted_at", "_sdc_gen"]
+    ]
 
 
 def test_empty_lake_reads_run_no_job(spark, tmp_path):

@@ -342,6 +342,20 @@ def test_neardup_clusters_small_graph_fast_path_matches_iterative(spark):
     assert f[5] == 1 and f[23] == 20 and f[41] == 40 and f[11] == 10
 
 
+def test_neardup_clusters_merged_endpoint_types(spark):
+    """An int ``a`` with a bigint ``b``: both gates type the ids as the
+    a/b union does (bigint), and a bigint id survives the fast path."""
+    big = 2**40
+    pairs = spark.createDataFrame([(1, 2), (3, big)], "a int, b long")
+    fast = pipelineops.neardup_clusters(pairs)
+    slow = pipelineops.neardup_clusters(pairs, small_graph_limit=0)
+    assert fast.schema == slow.schema
+    assert fast.schema["id"].dataType.simpleString() == "bigint"
+    want = {1: 1, 2: 1, 3: 3, big: 3}
+    assert {r["id"]: r["cluster_id"] for r in fast.collect()} == want
+    assert {r["id"]: r["cluster_id"] for r in slow.collect()} == want
+
+
 def test_neardup_clusters_skip_null_endpoints(spark):
     """A pair with a NULL endpoint is no edge: the union-find fast path
     and the iterative path both drop it (no TypeError from comparing a

@@ -144,11 +144,13 @@ def test_semi_keys_filter_sits_below_lww_fold(spark, tmp_path):
         assert join_at > agg_at, plan
 
 
-def test_columns_param_narrows_read_schema(spark, tmp_path):
+def test_columns_param_narrows_read_schema(spark, tmp_path, threshold):
     """read(columns=) must narrow the parquet ReadSchema itself: the
     max_by(struct(<all cols>)) fold blocks Catalyst's column pruning, so
     a .select() after read() still scans the full row width — passing
-    columns builds the narrow read schema directly."""
+    columns builds the narrow read schema directly.  A threshold of -1
+    keeps the read on Spark (a driver-side read is a local relation,
+    with no ReadSchema)."""
     from pyspark.sql import types as T
 
     from tap_postgres_spark.lake import LakeTable
@@ -174,6 +176,7 @@ def test_columns_param_narrows_read_schema(spark, tmp_path):
         ),
         epoch_id="e1",
     )
+    threshold("-1")
     # the documented hole: select() after read() does NOT prune
     assert "wide" in _plan(t.read().select("k", "g"))
     # columns= does

@@ -56,3 +56,38 @@ def spark_fold(spark, events, fold_fn):
 @given(events=events_strategy)
 def test_folds_match_oracle(spark, events):
     assert spark_fold(spark, events, fold_last_writer_wins_agg) == oracle(events)
+
+
+maybe = st.one_of(st.none(), st.integers(min_value=0, max_value=6))
+order_rows = st.lists(
+    st.tuples(st.sampled_from(KEYS + [None]), maybe, maybe, st.integers(0, 99)),
+    min_size=0,
+    max_size=30,
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=order_rows)
+def test_arrow_fold_matches_agg_fold(spark, rows):
+    """The driver-side Arrow fold keeps the agg fold's winner per key:
+    NULL keys group together, NULL orders below every value, ties on
+    the first order column fall to the second."""
+    import pyarrow as pa
+
+    from tap_postgres_spark.operators import fold_last_writer_wins_arrow
+
+    # one row per (key, lsn, gen): a full tie has no defined winner
+    rows = list({r[:3]: r for r in rows}.values())
+    tbl = pa.table(
+        {n: pa.array([r[i] for r in rows], t) for i, (n, t) in enumerate(
+            [("key", pa.string()), ("_sdc_lsn", pa.int64()), ("_sdc_gen", pa.int64()),
+             ("v", pa.int64())]
+        )}
+    )
+    order = ("_sdc_lsn", "_sdc_gen")
+    got = fold_last_writer_wins_arrow(tbl, ["key"], order)
+    assert got.schema == tbl.schema
+    want = fold_last_writer_wins_agg(spark.createDataFrame(tbl), ["key"], order)
+    assert sorted(got.to_pylist(), key=repr) == sorted(
+        (r.asDict() for r in want.collect()), key=repr
+    )

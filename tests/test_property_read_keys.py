@@ -1,13 +1,16 @@
-"""Property test: the two strategies of a bounded point read
-(``LakeTable.read_keys``) agree with each other and with a NULL-safe
-semi join over ``read()``, on tables built by random merges with
-deletes and out-of-order LSNs, tiered compactions, an added column, an
-int→bigint widening and fused 2-stream commits (lake/grouped.py, whose
-files carry the union of both streams' columns).
+"""Property tests: the two sides of the lake reads' size gate agree,
+on tables built by random merges with deletes, NULL keys, NULL and
+out-of-order LSNs, LSN ties across commits, tiered compactions, an
+added column, an int→bigint widening and fused 2-stream commits
+(lake/grouped.py, whose files carry the union of both streams'
+columns).
 
 The driver-side read (the default under the session's broadcast
 threshold) and the Spark read (forced with a threshold of -1) must
-return identical rows and an identical schema."""
+return identical rows and an identical schema, for a bounded point
+read (``LakeTable.read_keys``, which must also equal a NULL-safe semi
+join over ``read()``) and for every shape of ``read`` and
+``read_changes``."""
 
 from __future__ import annotations
 
@@ -44,7 +47,8 @@ B_DEF = StreamDef("public", "t_b", _schema("id", "w"), ("id",))
 
 event = st.tuples(
     st.sampled_from(range(len(KEYS))),
-    st.integers(min_value=1, max_value=40),  # lsn: out of order, repeats
+    # lsn: out of order, repeats, NULL (orders below every LSN)
+    st.one_of(st.none(), st.integers(min_value=1, max_value=40)),
     st.booleans(),  # is_delete
 )
 live_event = st.tuples(
@@ -129,32 +133,11 @@ def _spark(spark):
     return spark
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(sequence=ops, probe=probe_keys, narrow=st.booleans())
-@example(
-    # every shape at least once: winning and losing deletes (one fused),
-    # out-of-order LSNs, an LSN tie across commits, an added int column
-    # widened to bigint, a fused commit and a tiered compaction
-    sequence=[
-        ("merge", [(0, 9, False), (1, 5, False), (4, 3, False)], None),
-        ("merge", [(0, 4, False), (2, 7, False)], "int"),
-        ("fused", [(1, 8, False), (2, 20, True)], [(0, 3, False)]),
-        ("merge", [(1, 6, True), (3, 12, False), (4, 1, True)], "long"),
-        ("compact_tiered",),
-        ("merge", [(2, 1, False), (3, 12, True), (0, 15, True)], None),
-    ],
-    probe=KEYS + ["absent"],
-    narrow=False,
-)
-def test_point_read_strategies_agree(_spark, tmp_path_factory, sequence, probe, narrow):
-    root = tmp_path_factory.mktemp("read-keys-prop")
+def _build(spark, root, sequence):
+    """Table ``t_a`` after ``sequence``."""
     tables = {
         d.fqn: LakeTable.create(
-            _spark, str(root / d.table_name), widen_for_cdc(d.spark_schema),
+            spark, str(root / d.table_name), widen_for_cdc(d.spark_schema),
             ["id"], num_buckets=4,
         )
         for d in (A_DEF, B_DEF)
@@ -162,12 +145,37 @@ def test_point_read_strategies_agree(_spark, tmp_path_factory, sequence, probe, 
     t = tables[A_DEF.fqn]
     for i, op in enumerate(sequence):
         if op[0] == "merge":
-            _merge(_spark, t, op[1], op[2], f"e{i}")
+            _merge(spark, t, op[1], op[2], f"e{i}")
         elif op[0] == "fused":
-            _fused(_spark, tables, op[1], op[2], f"e{i}", str(root / "stage"))
+            _fused(spark, tables, op[1], op[2], f"e{i}", str(root / "stage"))
         else:
             t.compact(max_delta_depth=1, include_base=False)
+    return t
 
+
+# every shape at least once: winning and losing deletes (one fused),
+# NULL and out-of-order LSNs, LSN ties across commits (12, and NULL),
+# an added int column widened to bigint, a fused commit and a tiered
+# compaction
+EVERY_SHAPE = [
+    ("merge", [(0, 9, False), (1, 5, False), (4, 3, False), (3, None, False)], None),
+    ("merge", [(0, 4, False), (2, 7, False), (3, None, True)], "int"),
+    ("fused", [(1, 8, False), (2, 20, True)], [(0, 3, False)]),
+    ("merge", [(1, 6, True), (3, 12, False), (4, 1, True)], "long"),
+    ("compact_tiered",),
+    ("merge", [(2, 1, False), (3, 12, True), (0, 15, True), (4, None, False)], None),
+]
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(sequence=ops, probe=probe_keys, narrow=st.booleans())
+@example(sequence=EVERY_SHAPE, probe=KEYS + ["absent"], narrow=False)
+def test_point_read_strategies_agree(_spark, tmp_path_factory, sequence, probe, narrow):
+    t = _build(_spark, tmp_path_factory.mktemp("read-keys-prop"), sequence)
     columns = ["v"] if narrow else None
     kdf = _spark.createDataFrame([(k,) for k in probe], "id string")
     on_driver = t.read_keys(kdf, columns=columns)
@@ -184,3 +192,43 @@ def test_point_read_strategies_agree(_spark, tmp_path_factory, sequence, probe, 
     )
     assert on_driver.schema == on_spark.schema == joined.schema
     assert _rows(on_driver) == spark_rows == _rows(joined)
+
+
+READ_SHAPES = {
+    "read": lambda t, v: t.read(),
+    "read(version)": lambda t, v: t.read(version=v),
+    "read(as_of)": lambda t, v: t.read(as_of=t.metadata(v)["committed_at"]),
+    "read(as_of_lsn)": lambda t, v: t.read(as_of_lsn=9),
+    "read(buckets)": lambda t, v: t.read(buckets=[0, 3]),
+    "read(columns)": lambda t, v: t.read(columns=["n"] if "n" in t.schema.names
+                                         else ["v"]),
+    "read(include_tombstones)": lambda t, v: t.read(include_tombstones=True),
+    "read_changes": lambda t, v: t.read_changes(v),
+    "read_changes(columns)": lambda t, v: t.read_changes(1, columns=["v"]),
+    "read_changes(fold=False)": lambda t, v: t.read_changes(1, fold=False),
+}
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(sequence=ops)
+@example(sequence=EVERY_SHAPE)
+def test_read_shapes_agree_on_driver_and_spark(_spark, tmp_path_factory, sequence):
+    from tap_postgres_spark.lake.table import _is_local
+
+    t = _build(_spark, tmp_path_factory.mktemp("read-shapes-prop"), sequence)
+    mid = max(1, t.current_version() // 2)
+    prev = _spark.conf.get(_THRESHOLD)
+    for name, shape in READ_SHAPES.items():
+        on_driver = shape(t, mid)
+        assert _is_local(on_driver), name
+        _spark.conf.set(_THRESHOLD, "-1")
+        try:
+            on_spark = shape(t, mid)
+            assert on_driver.schema == on_spark.schema, name
+            assert _rows(on_driver) == _rows(on_spark), name
+        finally:
+            _spark.conf.set(_THRESHOLD, prev)

@@ -11,7 +11,7 @@ import textwrap
 import pytest
 
 from tap_postgres_spark.daemon import is_spark_archive, worker_path
-from tap_postgres_spark.session import _default_driver_memory
+from tap_postgres_spark.session import _default_driver_memory, _master
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -25,6 +25,25 @@ def test_default_driver_heap_is_a_quarter_of_host_memory():
     heap = _default_driver_memory()
     assert heap.endswith("m")
     assert int(heap[:-1]) == max(1024, min(4096, total_mb // 4))
+
+
+@pytest.mark.skipif(not hasattr(os, "sched_getaffinity"), reason="needs affinity")
+def test_default_master_uses_this_process_cpus(monkeypatch):
+    """With ``SPARK_GRAFT_CPUS`` unset the session runs ``local[N]`` on
+    the N CPUs this process may use, and a ``local[N]`` master string
+    is sized as N cores (the shuffle-partition rule's input)."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(12)))
+    assert _master(None) == ("local[12]", 12)
+    assert _master("*") == ("local[*]", 12)
+    assert _master("local[*]") == ("local[*]", 12)
+    assert _master(16) == ("local[16]", 16)
+    assert _master("local[4]") == ("local[4]", 4)
+    assert _master("local[6,2]") == ("local[6,2]", 6)
+    assert _master("local") == ("local", 1)
+    assert _master("spark://host:7077") == ("spark://host:7077", 32)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _master(None) == ("local[3]", 3)
 
 
 SPARK_PATH = [
